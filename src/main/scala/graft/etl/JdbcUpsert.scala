@@ -10,21 +10,21 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   * DELETE by key then multi-row INSERT) redesigned for distributed writes.
   *
   * The reference's row-at-a-time form is its published 2-hour bottleneck
-  * (README.md:324-326). Here the batch is STAGED in parallel by all
-  * executors through Spark's JDBC writer (partitioned, batched inserts),
-  * then one short driver-side transaction promotes it set-based:
+  * (README.md:324-326). Here the batch is STAGED in parallel by the
+  * executors through Spark's JDBC writer (the pgwire driver turns the
+  * writer's INSERT batches into COPY), then one driver-side transaction
+  * promotes it set-based:
   *
+  *   CREATE TABLE target AS SELECT * FROM staging WITH NO DATA; -- if absent
   *   DELETE FROM target WHERE key IN (SELECT key FROM staging);
+  *   DELETE FROM target WHERE key IS NULL AND EXISTS (null key staged);
   *   INSERT INTO target SELECT ... FROM staging;
-  *   DROP staging;
+  *   DROP TABLE staging;
   *
-  * Properties preserved from the reference: per-batch atomicity (promotion
-  * is a single transaction) and idempotent replay (re-running the same
-  * batch converges to the same table state). The expensive data movement is
-  * distributed; only the set-based promotion — O(1) statements, executed
-  * inside the database — is serial. At 100 TB the same shape holds: staging
-  * write scales with executors, promotion stays two statements (or becomes
-  * a server-side MERGE where the dialect supports it).
+  * Properties kept from the reference: the whole batch commits or none of
+  * it does, and replaying a batch converges to the same table state. The
+  * staging write runs the batch's plan exactly once; the promotion is
+  * O(1) statements executed inside the database.
   *
   * Column identifiers are always double-quoted: the corpus has
   * reserved-word columns (`from`, `to`) and mixed-case names that unquoted
@@ -36,12 +36,15 @@ object JdbcUpsert {
 
   private def q(ident: String): String = "\"" + ident.replace("\"", "\"\"") + "\""
 
-  /** The exact SQL the promotion transaction executes, exposed so dialect
-    * tests can pin the strings — standard-SQL quoting, `IN (SELECT ...)`
-    * promotion, `WITH NO DATA` clone. Executed for real against Derby
-    * (JdbcUpsertSpec) AND PostgreSQL 15 (PostgresUpsertSpec, over the
-    * pgwire minimal driver). Order: delete-by-key, delete-null-keys,
-    * insert. */
+  /** The promotion statements, exposed so dialect tests can pin the
+    * strings — standard-SQL quoting, `IN (SELECT ...)` promotion. Executed
+    * for real against Derby (JdbcUpsertSpec) AND PostgreSQL 15
+    * (PostgresUpsertSpec, over the pgwire minimal driver). Order:
+    * delete-by-key, delete-null-keys, insert.
+    *
+    * NULL keys never match an IN-list (NULL IN (...) is UNKNOWN), so
+    * replay would re-insert them forever; the second DELETE gives the
+    * null-key group the same latest-batch-wins semantics. */
   private[etl] def promotionSql(table: String, staging: String,
       keyCol: String, cols: Seq[String]): Seq[String] = {
     val colList = cols.map(q).mkString(", ")
@@ -53,44 +56,12 @@ object JdbcUpsert {
       s"INSERT INTO $table ($colList) SELECT $colList FROM $staging")
   }
 
-  /** Server-side MERGE promotion — one statement instead of
-    * delete+insert, for dialects that support it (Postgres 15+, Derby
-    * 10.11+; standard SQL:2003 syntax).
-    *
-    * CONTRACT: the staged batch must hold AT MOST ONE row per key
-    * (including at most one null-key row) — MERGE is row-to-row, so a
-    * key with several staged rows would either error ("cannot affect
-    * row a second time") or silently lose the group semantics the
-    * delete+insert path gives multi-row-per-key tables (events). Use it
-    * for keep-last-deduped single-row-per-key batches (tracking); the
-    * delete+insert promotion remains the general path.
-    *
-    * The ON clause pairs null keys explicitly: a bare `t.k = s.k` never
-    * matches NULL (UNKNOWN), which would re-insert the null-key row on
-    * every replay — the same trap the second DELETE in [[promotionSql]]
-    * exists for. */
-  private[etl] def mergePromotionSql(table: String, staging: String,
-      keyCol: String, cols: Seq[String]): String = {
-    val k = q(keyCol)
-    val others = cols.filterNot(_ == keyCol)
-    require(others.nonEmpty, "MERGE needs at least one non-key column to SET")
-    val setList = others.map(c => s"${q(c)} = s.${q(c)}").mkString(", ")
-    val colList = cols.map(q).mkString(", ")
-    val valList = cols.map(c => s"s.${q(c)}").mkString(", ")
-    s"MERGE INTO $table t USING $staging s " +
-      s"ON (t.$k = s.$k OR (t.$k IS NULL AND s.$k IS NULL)) " +
-      s"WHEN MATCHED THEN UPDATE SET $setList " +
-      s"WHEN NOT MATCHED THEN INSERT ($colList) VALUES ($valList)"
-  }
-
-  /** S4 create-if-absent statement (standard form + the fallback for
-    * engines that reject WITH NO DATA in CTAS). */
+  /** Create-if-absent: an empty clone of staging. Derby requires
+    * `WITH NO DATA`; Postgres accepts it. */
   private[etl] def createCloneSql(table: String, staging: String): String =
     s"CREATE TABLE $table AS SELECT * FROM $staging WITH NO DATA"
-  private[etl] def createCloneFallbackSql(table: String, staging: String): String =
-    s"CREATE TABLE $table AS SELECT * FROM $staging WHERE 1=0"
 
-  /** S6 watermark probe statement. */
+  /** Watermark probe statement. */
   private[etl] def watermarkSql(table: String, fileCol: String): String =
     s"SELECT MAX(${q(fileCol)}) FROM $table"
 
@@ -117,121 +88,59 @@ object JdbcUpsert {
       }
     }
 
-  /** Hard ceiling on staging-write connections when the caller doesn't
-    * size the write (`numStagingPartitions = 0`): Spark's JDBC writer
-    * opens ONE connection per partition, so a many-small-files input
-    * (the CDC corpus shape — one partition per CSV) turns the staging
-    * write into a connection storm: the 10× replicated corpus (8,810
-    * partitions → 8,810 sequential SCRAM handshakes + COPY setups)
-    * measured 457 s where the same rows through a bounded write take
-    * tens of seconds, and at fleet scale thousands of concurrent
-    * connections are a denial of service against the database, not a
-    * throughput win (an RDBMS saturates at a few dozen bulk writers).
-    * `coalesce` (not repartition) — no shuffle, it only merges the
-    * tiny per-file partitions at write time.
+  /** Ceiling on staging-write connections: Spark's JDBC writer opens ONE
+    * connection per partition, so a many-small-files input (the CDC
+    * corpus shape — one partition per CSV) would turn the staging write
+    * into a connection storm (the 10× replicated corpus, 8,810
+    * partitions, measured 457 s against tens of seconds bounded), and an
+    * RDBMS saturates at a few dozen bulk writers anyway. The write always
+    * goes through `coalesce` (no shuffle, no job of its own): below the
+    * ceiling it keeps the input partitioning, above it merges partitions
+    * at write time. Asking the plan for its partition count instead would
+    * run an uncached adaptive plan's shuffle stages once for the count and
+    * again for the write.
     *
-    * KNOWN TRADE (ADVICE r13): coalesce is a NARROW dependency, so on
-    * the default path it also bounds the UPSTREAM compute of a
-    * non-checkpointed input to 64-way — exactly right for the cheap
-    * CSV-scan CDC shape it was measured on, silently throttling for a
-    * heavy computed input on a >64-core cluster. Callers with expensive
-    * upstream lineage pass `numStagingPartitions` explicitly: that path
-    * uses `repartition`, whose shuffle is a stage barrier — upstream
-    * runs at full parallelism and only the write stage is bounded. The
-    * ETL pipelines (checkpointed input) are unaffected either way. */
+    * Trade: coalesce is a narrow dependency, so it also bounds the
+    * upstream compute of a narrow-only input to 64-way. The ETL plans end
+    * in a shuffle (keep-last or distinct), which is a stage barrier, so
+    * their compute is not bounded. */
   private val MaxStagingConnections = 64
 
-  /** Upsert `df` into `table` keyed on `keyCol`.
+  /** Upsert `df` into `table` keyed on `keyCol` and return the number of
+    * rows the promotion inserted — the batch's size, counted by the
+    * database inside the committed transaction, so the caller needs no
+    * count of its own. `df` is evaluated once, by the staging write.
     *
-    * @param url      JDBC url (driver must be on the classpath)
-    * @param numStagingPartitions parallelism of the staging write — sized
-    *   so each partition's insert batch fits the DB's transaction budget;
-    *   0 (default) keeps the input partitioning up to
-    *   [[MaxStagingConnections]] (coalesced above it)
-    * @param promotePartitions  1 (default): the committed single-
-    *   transaction promotion — whole-batch atomicity. N > 1: the staged
-    *   keys are split into N disjoint key RANGES and each range is
-    *   promoted in its OWN transaction — the 100 TB sink shape
-    *   (BASELINE.md pins single-backend promotion at 103–226 s at the
-    *   10× corpus; one multi-hundred-second transaction holds locks and
-    *   bloats the WAL across the whole window, and a fleet target is
-    *   partitioned anyway, one range ≈ one backend/partition).
-    *   DOCUMENTED VISIBILITY TRADE: atomicity becomes per-range — a
-    *   reader between range commits sees earlier ranges new and later
-    *   ranges old, and a mid-promotion failure leaves exactly that torn
-    *   state. Replay converges: staging is rewritten and every range
-    *   re-promoted, and delete+insert is idempotent per range, so
-    *   re-running the same batch after ANY torn point reaches the same
-    *   final state as an untorn run (PostgresUpsertSpec pins this).
-    *   Range bounds are computed BY THE DATABASE (ORDER BY over staged
-    *   distinct keys), so the range predicates partition the key space
-    *   under the DB's own collation — boundaries computed engine-side
-    *   could disagree with the DB's string ordering and double-promote
-    *   a key. Requires `useMerge = false` (MERGE's one-statement form
-    *   is already a single short transaction; splitting it buys
-    *   nothing).
+    * @param url  JDBC url (driver must be on the classpath)
+    * @param createTableColumnTypes SQL types for the staging create, for
+    *   dialects whose default string type cannot be compared in the
+    *   promotion's `IN (SELECT ...)` (Derby CLOB)
     */
   def upsert(df: DataFrame, url: String, table: String, keyCol: String,
       props: Properties = new Properties(),
-      numStagingPartitions: Int = 0,
-      createTableColumnTypes: Option[String] = None,
-      useMerge: Boolean = false,
-      promotePartitions: Int = 1): Unit =
-    upsertImpl(df, url, table, keyCol, props, numStagingPartitions,
-      createTableColumnTypes, useMerge, promotePartitions, _ => ())
-
-  /** [[upsert]] with a post-range-commit hook — the torn-promotion
-    * injection point PostgresUpsertSpec uses to kill a promotion between
-    * range transactions; never part of the public surface. */
-  private[etl] def upsertImpl(df: DataFrame, url: String, table: String,
-      keyCol: String, props: Properties, numStagingPartitions: Int,
-      createTableColumnTypes: Option[String], useMerge: Boolean,
-      promotePartitions: Int, afterRangeCommit: Int => Unit): Unit = {
-    require(promotePartitions >= 1,
-      s"promotePartitions must be >= 1, got $promotePartitions")
-    require(promotePartitions == 1 || !useMerge,
-      "partitioned promotion applies to the delete+insert path; MERGE is " +
-        "already a single short statement")
+      createTableColumnTypes: Option[String] = None): Long = {
     ensureDialect(url)
     val staging = table + "_staging"
-    val toWrite =
-      if (numStagingPartitions > 0) df.repartition(numStagingPartitions)
-      else if (df.rdd.getNumPartitions > MaxStagingConnections)
-        df.coalesce(MaxStagingConnections)
-      else df
-    val writer = toWrite.write.mode(SaveMode.Overwrite)
-    // Some dialects map StringType to an uncomparable LOB type (Derby →
-    // CLOB), which breaks the key IN (SELECT ...) promotion; callers can
-    // pin explicit SQL types for the staging create.
+    val writer = df.coalesce(MaxStagingConnections).write.mode(SaveMode.Overwrite)
     createTableColumnTypes.foreach(t => writer.option("createTableColumnTypes", t))
     writer.jdbc(url, staging, props)
 
     val conn = DriverManager.getConnection(url, props)
     try {
       conn.setAutoCommit(false)
-      ensureTargetExists(conn, table, staging)
-      // NULL keys never match an IN-list (NULL IN (...) is UNKNOWN), so
-      // replay would re-insert them forever; the second statement gives
-      // the null-key group the same latest-batch-wins semantics.
-      // useMerge: single server-side MERGE — see mergePromotionSql's
-      // unique-key-per-batch contract before opting in.
-      if (promotePartitions == 1) {
-        val st = conn.createStatement()
-        try {
-          if (useMerge)
-            st.executeUpdate(
-              mergePromotionSql(table, staging, keyCol, df.columns.toSeq))
-          else promotionSql(table, staging, keyCol, df.columns.toSeq)
-            .foreach(st.executeUpdate)
-        } finally st.close()
-        conn.commit()
-      } else {
-        promoteRanges(conn, table, staging, keyCol, df.columns.toSeq,
-          promotePartitions, afterRangeCommit)
-      }
-      val st2 = conn.createStatement()
-      try st2.executeUpdate(s"DROP TABLE $staging") finally st2.close()
+      val st = conn.createStatement()
+      val inserted = try {
+        if (!tableExists(conn, table)) st.executeUpdate(createCloneSql(table, staging))
+        val Seq(deleteKeys, deleteNullKeys, insert) =
+          promotionSql(table, staging, keyCol, df.columns.toSeq)
+        st.executeUpdate(deleteKeys)
+        st.executeUpdate(deleteNullKeys)
+        val n = st.executeUpdate(insert)
+        st.executeUpdate(s"DROP TABLE $staging")
+        n
+      } finally st.close()
       conn.commit()
+      inserted.toLong
     } catch {
       case e: Throwable =>
         // rollback on a broken connection may itself throw; never let that
@@ -241,125 +150,27 @@ object JdbcUpsert {
     } finally conn.close()
   }
 
-  /** Per-range promotion SQL, parameterized on the half-open bound pair
-    * (`?` markers; a None end drops its predicate). Exposed like
-    * [[promotionSql]] so dialect tests can pin the strings. */
-  private[etl] def rangePromotionSql(table: String, staging: String,
-      keyCol: String, cols: Seq[String], hasLo: Boolean, hasHi: Boolean)
-      : Seq[String] = {
-    val k = q(keyCol)
-    val colList = cols.map(q).mkString(", ")
-    val range = (if (hasLo) " AND " + k + " >= ?" else "") +
-      (if (hasHi) " AND " + k + " < ?" else "")
-    Seq(
-      s"DELETE FROM $table WHERE $k IN " +
-        s"(SELECT $k FROM $staging WHERE $k IS NOT NULL$range)",
-      s"INSERT INTO $table ($colList) " +
-        s"SELECT $colList FROM $staging WHERE $k IS NOT NULL$range")
-  }
-
-  /** The N-range promotion loop: bounds from the database's own ordering
-    * of the staged distinct keys (see [[upsert]]'s collation note), one
-    * transaction per non-empty range, then the null-key group as its own
-    * transaction (same two statements [[promotionSql]] gives it). */
-  private def promoteRanges(conn: Connection, table: String,
-      staging: String, keyCol: String, cols: Seq[String], n: Int,
-      afterRangeCommit: Int => Unit): Unit = {
-    val k = q(keyCol)
-    val distinctKeys = s"SELECT $k AS gk FROM $staging " +
-      s"WHERE $k IS NOT NULL GROUP BY $k"
-    val st0 = conn.createStatement()
-    val nKeys = try {
-      val rs = st0.executeQuery(
-        s"SELECT COUNT(*) FROM ($distinctKeys) gd")
-      try { rs.next(); rs.getLong(1) } finally rs.close()
-    } finally st0.close()
-    // boundary keys at offsets i·nKeys/n, deduplicated (nKeys < n →
-    // fewer, possibly zero, boundaries); each probe is an ordered
-    // OFFSET/FETCH over the staged distinct keys — O(n) short
-    // server-side sorts of BATCH-sized data, not target-sized. A
-    // deployment promoting thousands of ranges per batch would index
-    // the staging key column first; n here is "a few dozen backends".
-    val offsets = (1 until n).map(i => i * nKeys / n)
-      .filter(o => o > 0 && o < nKeys).distinct
-    val bounds = offsets.map { off =>
-      val st = conn.createStatement()
-      try {
-        val rs = st.executeQuery(s"SELECT gk FROM ($distinctKeys) gd " +
-          s"ORDER BY gk OFFSET $off ROWS FETCH NEXT 1 ROWS ONLY")
-        try { rs.next(); rs.getObject(1) } finally rs.close()
-      } finally st.close()
-    }.distinct
-    // read-only so far; end the bound-probe transaction before writing
-    conn.commit()
-    val ranges: Seq[(Option[Any], Option[Any])] =
-      if (bounds.isEmpty) Seq((None, None))
-      else (None +: bounds.map(Option(_)))
-        .zip(bounds.map(Option(_)) :+ None)
-    ranges.zipWithIndex.foreach { case ((lo, hi), i) =>
-      rangePromotionSql(table, staging, keyCol, cols,
-        lo.isDefined, hi.isDefined).foreach { sql =>
-        val ps = conn.prepareStatement(sql)
-        try {
-          var p = 1
-          lo.foreach { v => ps.setObject(p, v); p += 1 }
-          hi.foreach { v => ps.setObject(p, v); p += 1 }
-          ps.executeUpdate()
-        } finally ps.close()
-      }
-      conn.commit()
-      afterRangeCommit(i)
-    }
-    val st = conn.createStatement()
+  /** Case-insensitive catalog lookup: Derby folds unquoted names to upper
+    * case, Postgres to lower. */
+  private def tableExists(conn: Connection, table: String): Boolean = {
+    val rs = conn.getMetaData.getTables(null, null, null, Array("TABLE"))
     try {
-      st.executeUpdate(s"DELETE FROM $table WHERE $k IS NULL AND EXISTS " +
-        s"(SELECT 1 FROM $staging WHERE $k IS NULL)")
-      val colList = cols.map(q).mkString(", ")
-      st.executeUpdate(s"INSERT INTO $table ($colList) " +
-        s"SELECT $colList FROM $staging WHERE $k IS NULL")
-    } finally st.close()
-    conn.commit()
-  }
-
-  /** S4: create the target as an empty clone of staging if absent. */
-  private def ensureTargetExists(conn: Connection, table: String,
-      staging: String): Unit = {
-    val meta = conn.getMetaData
-    val rs = meta.getTables(null, null, null, Array("TABLE"))
-    var exists = false
-    try {
-      while (rs.next() && !exists)
-        if (rs.getString("TABLE_NAME").equalsIgnoreCase(table)) exists = true
+      var exists = false
+      while (!exists && rs.next())
+        exists = rs.getString("TABLE_NAME").equalsIgnoreCase(table)
+      exists
     } finally rs.close()
-    if (!exists) {
-      val st = conn.createStatement()
-      // Standard SQL empty-clone; works on Derby and Postgres alike.
-      try st.executeUpdate(createCloneSql(table, staging))
-      catch {
-        case _: Exception =>
-          conn.rollback()
-          st.executeUpdate(createCloneFallbackSql(table, staging))
-      } finally st.close()
-      conn.commit()
-    }
   }
 
-  /** S6: watermark probe — max(fileName) already loaded, computed INSIDE
-    * the database (aggregate pushdown via a subquery dbtable), not by
-    * scanning the table through Spark (reference: postgres.py:98-114). */
+  /** Watermark probe — max(fileName) already loaded, computed INSIDE the
+    * database, not by scanning the table through Spark (reference:
+    * postgres.py:98-114). None when the table does not exist yet. */
   def lastUploadedFile(spark: org.apache.spark.sql.SparkSession, url: String,
       table: String, fileCol: String = "fileName",
       props: Properties = new Properties()): Option[String] = {
     val conn = DriverManager.getConnection(url, props)
     try {
-      val meta = conn.getMetaData
-      val rs = meta.getTables(null, null, null, Array("TABLE"))
-      var exists = false
-      try {
-        while (rs.next() && !exists)
-          if (rs.getString("TABLE_NAME").equalsIgnoreCase(table)) exists = true
-      } finally rs.close()
-      if (!exists) None
+      if (!tableExists(conn, table)) None
       else {
         val st = conn.createStatement()
         try {

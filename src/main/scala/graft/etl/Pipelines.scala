@@ -6,9 +6,12 @@ import java.util.Properties
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The two reference DAGs (dags/postgres_etl/{tracking,events}_table.py)
-  * as lazy DataFrame pipelines. Each produces ONE plan per batch:
-  * scan → parse → explode → convert → project → normalize → dedup,
-  * executed only by the sink write (or by the caller for tests/queries).
+  * as lazy DataFrame pipelines. Each table's transform chain is defined
+  * once ([[trackingChain]], [[eventsChain]]) as a function of the raw
+  * scanned CSV rows; the batch read ([[tracking]], [[events]]) and the
+  * streaming micro-batch bodies (`graft.streaming.Streaming`) both call
+  * it. The chain is one plan per batch, executed only by the sink's
+  * staging write (or by the caller for tests and queries).
   *
   * Incremental contract (SURVEY.md §2.9): the watermark is max(fileName)
   * in the target table; only files strictly greater are read. Combined
@@ -19,14 +22,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Pipelines {
 
   /** tracking: one row per CDC document (no explode).
-    * scan → epoch→ts → uploadDate → project → normalizeNulls →
-    * dedupKeepLast → distinct. */
-  def tracking(spark: SparkSession, csvPaths: Seq[String],
+    * addFileName → watermark → epoch→ts → uploadDate → project →
+    * normalizeNulls → dedupKeepLast (or distinct on the as-written path).
+    * The watermark filter sits right after the file-name tag so it
+    * prunes rows before the shuffle; a stream passes none, its
+    * checkpoint is its watermark. */
+  def trackingChain(raw: DataFrame, clock: Option[Timestamp],
       watermark: Option[String] = None,
-      clock: Option[Timestamp] = None,
       intendedDedup: Boolean = true): DataFrame = {
-    val raw = spark.read.schema(Schemas.source)
-      .option("header", "true").csv(csvPaths: _*)
     val tagged = Transforms.afterWatermark(watermark)(
       Transforms.addFileName(raw)).drop("array_trackingEvents")
     val converted = Transforms.withUploadDate(clock)(
@@ -40,13 +43,10 @@ object Pipelines {
   }
 
   /** events: one row per nested tracking event (explode_outer).
-    * scan → parse(py→json→array) → explode → flatten → uploadDate →
-    * project → normalizeNulls → distinct. */
-  def events(spark: SparkSession, csvPaths: Seq[String],
-      watermark: Option[String] = None,
-      clock: Option[Timestamp] = None): DataFrame = {
-    val raw = spark.read.schema(Schemas.source)
-      .option("header", "true").csv(csvPaths: _*)
+    * addFileName → watermark → parse(py literal → array) → explode →
+    * uploadDate → project → normalizeNulls → distinct. */
+  def eventsChain(raw: DataFrame, clock: Option[Timestamp],
+      watermark: Option[String] = None): DataFrame = {
     val tagged = Transforms.afterWatermark(watermark)(Transforms.addFileName(raw))
     val exploded = Transforms.explodeEvents(Transforms.parseEventArray(tagged))
     val converted = Transforms.withUploadDate(clock)(exploded)
@@ -55,8 +55,28 @@ object Pipelines {
     Transforms.distinctRows(projected)
   }
 
-  /** Full incremental load step: probe watermark, build pipeline, upsert.
-    * One call = one reference "DAG run". */
+  private def scan(spark: SparkSession, csvPaths: Seq[String]): DataFrame =
+    spark.read.schema(Schemas.source).option("header", "true").csv(csvPaths: _*)
+
+  /** The tracking table of the CSV files at `csvPaths` newer than
+    * `watermark`. */
+  def tracking(spark: SparkSession, csvPaths: Seq[String],
+      watermark: Option[String] = None,
+      clock: Option[Timestamp] = None,
+      intendedDedup: Boolean = true): DataFrame =
+    trackingChain(scan(spark, csvPaths), clock, watermark, intendedDedup)
+
+  /** The events table of the CSV files at `csvPaths` newer than
+    * `watermark`. */
+  def events(spark: SparkSession, csvPaths: Seq[String],
+      watermark: Option[String] = None,
+      clock: Option[Timestamp] = None): DataFrame =
+    eventsChain(scan(spark, csvPaths), clock, watermark)
+
+  /** Full incremental load step: probe the watermark, build the pipeline,
+    * upsert. One call = one reference "DAG run". Returns the rows the
+    * promotion committed (0 when no file is newer than the watermark);
+    * the pipeline's plan runs once, inside the staging write. */
   def loadIncremental(spark: SparkSession, csvPaths: Seq[String], url: String,
       table: String, pipeline: String, props: Properties = new Properties(),
       clock: Option[Timestamp] = None): Long = {
@@ -66,11 +86,6 @@ object Pipelines {
       case "events"   => events(spark, csvPaths, wm, clock)
       case other      => throw new IllegalArgumentException(s"unknown pipeline: $other")
     }
-    val cached = df.cache()
-    try {
-      val n = cached.count()
-      if (n > 0) JdbcUpsert.upsert(cached, url, table, "oid__id", props)
-      n
-    } finally { cached.unpersist(); () }
+    JdbcUpsert.upsert(df, url, table, "oid__id", props)
   }
 }

@@ -287,7 +287,7 @@ private[pgwire] object PgJdbc {
     // Spark-writer-shaped INSERT batches bulk-load via COPY FROM STDIN
     // instead of ';'-joined INSERTs — same rows, no per-row SQL parsing.
     private lazy val copySql: Option[String] =
-      if (sqlTemplate == null || !conn.copyEnabled) None
+      if (sqlTemplate == null) None
       else PgCopyText.copyStatementFor(sqlTemplate)
     // Target column type OIDs for the COPY column list, probed once per
     // statement from pg_attribute. to_regclass returns NULL instead of
@@ -442,8 +442,7 @@ private[pgwire] object PgJdbc {
     * lazily before the first statement; commit/rollback end the block.
     * (The simple protocol auto-commits each bare statement, which is
     * exactly JDBC's autoCommit=true.) */
-  private final class ConnCore(val proto: PgProtocol, val copyEnabled: Boolean,
-      val copyFormat: String = "auto") {
+  private final class ConnCore(val proto: PgProtocol, val copyFormat: String) {
     private var autoCommit = true
     private var inTxn = false
     private var isolation = Connection.TRANSACTION_READ_COMMITTED
@@ -487,8 +486,8 @@ private[pgwire] object PgJdbc {
   }
 
   def connection(proto: PgProtocol, url: String, user: String,
-      copyEnabled: Boolean = true, copyFormat: String = "auto"): Connection = {
-    val core = new ConnCore(proto, copyEnabled, copyFormat)
+      copyFormat: String = "auto"): Connection = {
+    val core = new ConnCore(proto, copyFormat)
     lazy val conn: Connection = proxy(classOf[Connection], "PgConnection") { (name, a) =>
       name match {
         case "createStatement" => Some(statement(core, conn, null))

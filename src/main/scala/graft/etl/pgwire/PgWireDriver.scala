@@ -29,11 +29,6 @@ final class PgWireDriver extends Driver {
     val user = Option(info).flatMap(p => Option(p.getProperty("user")))
       .getOrElse("postgres")
     val password = Option(info).flatMap(p => Option(p.getProperty("password")))
-    // pgwire.copy=false disables the COPY bulk path (A/B, or servers
-    // where COPY is revoked); default on.
-    val copyEnabled = Option(info)
-      .flatMap(p => Option(p.getProperty("pgwire.copy")))
-      .forall(_.toBoolean)
     // libpq-named TLS options: sslmode (disable|prefer|require|verify-ca,
     // default prefer) and sslrootcert (PEM path → chain verification).
     // pgwire.copyFormat: auto (default — binary when every batch value
@@ -48,7 +43,7 @@ final class PgWireDriver extends Driver {
       Option(info).flatMap(p => Option(p.getProperty("sslmode"))),
       Option(info).flatMap(p => Option(p.getProperty("sslrootcert"))))
     val proto = new PgProtocol(host, port, user, db, password, ssl)
-    PgJdbc.connection(proto, url, user, copyEnabled, copyFormat)
+    PgJdbc.connection(proto, url, user, copyFormat)
   }
 
   override def getPropertyInfo(url: String, info: Properties): Array[DriverPropertyInfo] =

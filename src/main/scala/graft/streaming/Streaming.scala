@@ -7,7 +7,7 @@ import java.util.Properties
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import graft.etl.{JdbcUpsert, Schemas, Transforms}
+import graft.etl.{JdbcUpsert, Pipelines, Schemas}
 
 /** Structured-Streaming surface.
   *
@@ -19,6 +19,8 @@ import graft.etl.{JdbcUpsert, Schemas, Transforms}
   *   os.listdir + sort            → file stream source (checkpointed log)
   *   max(fileName) watermark      → source checkpoint (exactly-once file set)
   *   n_batch files per txn        → maxFilesPerTrigger
+  *   process_data per batch       → the batch pipeline's own chain
+  *                                  (Pipelines.trackingChain/eventsChain)
   *   DELETE+INSERT per batch      → foreachBatch { JdbcUpsert.upsert }
   *   daily DAG schedule           → Trigger.AvailableNow (drain-and-stop)
   *
@@ -27,71 +29,51 @@ import graft.etl.{JdbcUpsert, Schemas, Transforms}
   */
 object Streaming {
 
-  /** The reference events pipeline in streaming form. Per micro-batch:
-    * parse → explode → project → normalize → distinct → upsert, one
-    * transaction per batch of ≤ maxFilesPerTrigger files. */
+  /** The reference events pipeline in streaming form: each micro-batch of
+    * ≤ maxFilesPerTrigger files goes through [[Pipelines.eventsChain]] —
+    * the batch pipeline's own chain — and one upsert transaction. */
   def eventsFileStream(spark: SparkSession, csvDir: String,
       checkpointDir: String, url: String, table: String,
       maxFilesPerTrigger: Int = 3,
       clock: Option[Timestamp] = None,
       props: Properties = new Properties(),
-      createTableColumnTypes: Option[String] = None): StreamingQuery = {
-    val raw = spark.readStream
-      .schema(Schemas.source)
-      .option("header", "true")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .csv(csvDir)
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val tagged = Transforms.addFileName(batch)
-        val exploded = Transforms.explodeEvents(Transforms.parseEventArray(tagged))
-        val converted = Transforms.withUploadDate(clock)(exploded)
-        val out = Transforms.distinctRows(Transforms.normalizeNulls(
-          Transforms.project(Schemas.eventsColumns)(converted))).cache()
-        // cache + count: the emptiness probe and the staging write would
-        // otherwise each run the full parse/explode/distinct plan
-        try {
-          if (out.count() > 0)
-            JdbcUpsert.upsert(out, url, table, "oid__id", props,
-              createTableColumnTypes = createTableColumnTypes)
-        } finally { out.unpersist(); () }
-      }
-      .start()
-  }
+      createTableColumnTypes: Option[String] = None): StreamingQuery =
+    fileStream(spark, csvDir, checkpointDir, maxFilesPerTrigger, url, table,
+      props, createTableColumnTypes)(Pipelines.eventsChain(_, clock))
 
-  /** The tracking pipeline in streaming form (no explode; per-micro-batch
-    * keep-last dedup — across batches the upsert's delete-by-key gives
-    * latest-batch-wins, the same contract as the events stream). */
+  /** The tracking pipeline in streaming form ([[Pipelines.trackingChain]]
+    * per micro-batch: keep-last within the batch; across batches the
+    * upsert's delete-by-key gives latest-batch-wins, the same contract as
+    * the events stream). */
   def trackingFileStream(spark: SparkSession, csvDir: String,
       checkpointDir: String, url: String, table: String,
       maxFilesPerTrigger: Int = 5,
       clock: Option[Timestamp] = None,
       props: Properties = new Properties(),
-      createTableColumnTypes: Option[String] = None): StreamingQuery = {
-    val raw = spark.readStream
+      createTableColumnTypes: Option[String] = None): StreamingQuery =
+    fileStream(spark, csvDir, checkpointDir, maxFilesPerTrigger, url, table,
+      props, createTableColumnTypes)(Pipelines.trackingChain(_, clock))
+
+  /** Drain the CDC files under `csvDir` (AvailableNow): each micro-batch
+    * of raw scanned rows goes through `chain` and one upsert into `table`. */
+  private def fileStream(spark: SparkSession, csvDir: String,
+      checkpointDir: String, maxFilesPerTrigger: Int, url: String,
+      table: String, props: Properties, createTableColumnTypes: Option[String])(
+      chain: DataFrame => DataFrame): StreamingQuery =
+    spark.readStream
       .schema(Schemas.source)
       .option("header", "true")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .csv(csvDir)
-    raw.writeStream
+      .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val tagged = Transforms.addFileName(batch).drop("array_trackingEvents")
-        val converted = Transforms.withUploadDate(clock)(
-          Transforms.epochSecondsToTs(tagged))
-        val out = Transforms.dedupKeepLast(Transforms.normalizeNulls(
-          Transforms.project(Schemas.trackingColumns)(converted))).cache()
-        try {
-          if (out.count() > 0)
-            JdbcUpsert.upsert(out, url, table, "oid__id", props,
-              createTableColumnTypes = createTableColumnTypes)
-        } finally { out.unpersist(); () }
+        JdbcUpsert.upsert(chain(batch), url, table, "oid__id", props,
+          createTableColumnTypes)
+        ()
       }
       .start()
-  }
 
   /** Event-time tumbling-window aggregation with a lateness watermark —
     * counts and exact decimal sums per (window, event_type). Works on any

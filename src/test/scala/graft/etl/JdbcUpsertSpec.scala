@@ -5,8 +5,9 @@ import java.sql.DriverManager
 import graft.SparkSpec
 
 /** Upsert sink semantics against embedded Derby (in-memory JDBC): create-
-  * if-absent, latest-batch-wins per key, and idempotent replay — the three
-  * properties the reference sink guarantees (postgres.py:18-38).
+  * if-absent, latest-batch-wins per key, idempotent replay and whole-batch
+  * atomicity — the properties the reference sink guarantees
+  * (postgres.py:18-38).
   */
 class JdbcUpsertSpec extends SparkSpec {
   import spark.implicits._
@@ -74,80 +75,42 @@ class JdbcUpsertSpec extends SparkSpec {
     } finally conn.close()
   }
 
-  test("MERGE promotion: latest-batch-wins, idempotent replay, null key — executed on Derby") {
+  test("a failed promotion commits nothing; replay after the fix matches a clean run") {
     assume(!isClusterMaster,
       "embedded in-memory Derby is per-JVM: executor tasks would see an " +
       "empty instance; multi-JVM sink coverage lives in the PG15 fixture " +
       "specs (PostgresUpsertSpec / StreamingSpec cluster lane)")
-    // Derby implements SQL:2003 MERGE (10.11+), so the merge path runs
-    // for real here, not just as a pinned string: same three sink
-    // properties as delete+insert, on unique-key-per-batch input
-    val t = "merge_test"
-    val batch1 = Seq((Option("k1"), "v1"), (Option("k2"), "v1"),
-      (Option.empty[String], "vn1")).toDF("oid__id", "payload")
-    JdbcUpsert.upsert(batch1, url, t, "oid__id",
-      createTableColumnTypes = colTypes, useMerge = true)
-    assert(tableRows(t) === Map("k1" -> "v1", "k2" -> "v1", (null: String) -> "vn1"))
+    val types = Some("oid__id VARCHAR(64), payload VARCHAR(64), fileName VARCHAR(64)")
+    val batch1 = Seq(("k1", "v1", "f1.csv"), ("k2", "v1", "f1.csv"))
+      .toDF("oid__id", "payload", "fileName")
+    // k2 replaced, k3 added — and k3's payload breaks the constraint below
+    val batch2 = Seq(("k2", "v2", "f2.csv"), ("k3", "bad", "f2.csv"))
+      .toDF("oid__id", "payload", "fileName")
+    def upsert(df: org.apache.spark.sql.DataFrame, t: String): Long =
+      JdbcUpsert.upsert(df, url, t, "oid__id", createTableColumnTypes = types)
 
-    // overlap: k2 replaced, k3 added, the null-key row replaced not duped
-    val batch2 = Seq((Option("k2"), "v2"), (Option("k3"), "v2"),
-      (Option.empty[String], "vn2")).toDF("oid__id", "payload")
-    JdbcUpsert.upsert(batch2, url, t, "oid__id",
-      createTableColumnTypes = colTypes, useMerge = true)
-    assert(tableRows(t) ===
-      Map("k1" -> "v1", "k2" -> "v2", "k3" -> "v2", (null: String) -> "vn2"))
+    val clean = "atomic_clean"
+    upsert(batch1, clean)
+    assert(upsert(batch2, clean) === 2L)
 
-    // idempotent replay
-    JdbcUpsert.upsert(batch2, url, t, "oid__id",
-      createTableColumnTypes = colTypes, useMerge = true)
-    assert(tableRows(t) ===
-      Map("k1" -> "v1", "k2" -> "v2", "k3" -> "v2", (null: String) -> "vn2"))
-  }
-
-  test("partitioned promotion (promotePartitions=3): value parity with " +
-    "single-txn, null key, idempotent replay, ranges>keys degenerate") {
-    assume(!isClusterMaster,
-      "embedded in-memory Derby is per-JVM: executor tasks would see an " +
-      "empty instance; multi-JVM sink coverage lives in the PG15 fixture " +
-      "specs (PostgresUpsertSpec / StreamingSpec cluster lane)")
-    val single = "range_single"
-    val ranged = "range_ranged"
-    // 7 keys across 3 ranges, plus a null-key row (own transaction)
-    val batch1 = (1 to 7).map(i => (Option(f"k$i%02d"), "v1")) :+
-      (Option.empty[String], "vn1")
-    val b1 = batch1.toDF("oid__id", "payload")
-    JdbcUpsert.upsert(b1, url, single, "oid__id",
-      createTableColumnTypes = colTypes)
-    JdbcUpsert.upsert(b1, url, ranged, "oid__id",
-      createTableColumnTypes = colTypes, promotePartitions = 3)
-    assert(tableRows(ranged) === tableRows(single))
-
-    // overlapping second batch: k03/k05 replaced, k08 added, null replaced
-    val batch2 = Seq((Option("k03"), "v2"), (Option("k05"), "v2"),
-      (Option("k08"), "v2"), (Option.empty[String], "vn2"))
-    val b2 = batch2.toDF("oid__id", "payload")
-    JdbcUpsert.upsert(b2, url, single, "oid__id",
-      createTableColumnTypes = colTypes)
-    JdbcUpsert.upsert(b2, url, ranged, "oid__id",
-      createTableColumnTypes = colTypes, promotePartitions = 3)
-    assert(tableRows(ranged) === tableRows(single))
-
-    // idempotent replay through the ranged path
-    JdbcUpsert.upsert(b2, url, ranged, "oid__id",
-      createTableColumnTypes = colTypes, promotePartitions = 3)
-    assert(tableRows(ranged) === tableRows(single))
-
-    // more ranges than keys: degenerates to fewer ranges, same values
-    JdbcUpsert.upsert(b2, url, ranged, "oid__id",
-      createTableColumnTypes = colTypes, promotePartitions = 16)
-    assert(tableRows(ranged) === tableRows(single))
-
-    // MERGE + ranges is rejected loudly, not silently single-txn'd
-    intercept[IllegalArgumentException] {
-      JdbcUpsert.upsert(b2, url, ranged, "oid__id",
-        createTableColumnTypes = colTypes, useMerge = true,
-        promotePartitions = 3)
+    val t = "atomic_test"
+    assert(upsert(batch1, t) === 2L)
+    val afterBatch1 = tableRows(t)
+    def sql(stmt: String): Unit = {
+      val conn = DriverManager.getConnection(url)
+      try { val st = conn.createStatement(); try st.execute(stmt) finally st.close() }
+      finally conn.close()
     }
+    sql(s"""ALTER TABLE $t ADD CONSTRAINT no_bad CHECK ("payload" <> 'bad')""")
+    // the INSERT fails after the DELETE of k2 ran: the whole batch rolls back
+    intercept[java.sql.SQLException](upsert(batch2, t))
+    assert(tableRows(t) === afterBatch1)
+    assert(JdbcUpsert.lastUploadedFile(spark, url, t) === Some("f1.csv"))
+
+    sql(s"ALTER TABLE $t DROP CONSTRAINT no_bad")
+    assert(upsert(batch2, t) === 2L)
+    assert(tableRows(t) === tableRows(clean))
+    assert(JdbcUpsert.lastUploadedFile(spark, url, t) === Some("f2.csv"))
   }
 
   test("reading back via JDBC pushes filters into the database") {

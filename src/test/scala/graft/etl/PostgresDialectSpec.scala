@@ -33,28 +33,6 @@ class PostgresDialectSpec extends AnyFunSuite {
         """SELECT "trackingCode", "from", "to", "uploadDate" FROM tracking_events_staging"""))
   }
 
-  test("MERGE promotion statement: null-safe ON pairing, quoting, full column lists") {
-    // the exact string a Postgres 15+ target receives when the caller
-    // opts into server-side MERGE (unique-key-per-batch contract)
-    val stmt = JdbcUpsert.mergePromotionSql(
-      table = "tracking",
-      staging = "tracking_staging",
-      keyCol = "oid__id",
-      cols = Seq("oid__id", "from", "uploadDate"))
-    assert(stmt ===
-      """MERGE INTO tracking t USING tracking_staging s """ +
-        """ON (t."oid__id" = s."oid__id" OR """ +
-        """(t."oid__id" IS NULL AND s."oid__id" IS NULL)) """ +
-        """WHEN MATCHED THEN UPDATE SET "from" = s."from", """ +
-        """"uploadDate" = s."uploadDate" """ +
-        """WHEN NOT MATCHED THEN INSERT ("oid__id", "from", "uploadDate") """ +
-        """VALUES (s."oid__id", s."from", s."uploadDate")""")
-    // a key-only table cannot MERGE (nothing to SET) — fail fast
-    intercept[IllegalArgumentException] {
-      JdbcUpsert.mergePromotionSql("t", "t_staging", "k", Seq("k"))
-    }
-  }
-
   test("reserved-word and mixed-case key columns are always quoted") {
     val stmts = JdbcUpsert.promotionSql("t", "t_staging", "from", Seq("from"))
     assert(stmts.head ===
@@ -65,11 +43,9 @@ class PostgresDialectSpec extends AnyFunSuite {
       """DELETE FROM t WHERE "a""b" IN (SELECT "a""b" FROM t_staging)""")
   }
 
-  test("create-if-absent uses standard CTAS WITH NO DATA, with 1=0 fallback") {
+  test("create-if-absent uses standard CTAS WITH NO DATA") {
     assert(JdbcUpsert.createCloneSql("t", "t_staging") ===
       "CREATE TABLE t AS SELECT * FROM t_staging WITH NO DATA")
-    assert(JdbcUpsert.createCloneFallbackSql("t", "t_staging") ===
-      "CREATE TABLE t AS SELECT * FROM t_staging WHERE 1=0")
   }
 
   test("watermark probe aggregates inside the database with quoted column") {

@@ -153,22 +153,11 @@ object EtlScaleBench {
             server.props)
         }
         results(s"sink_${tag}_sec") = upSec
-        // ranged-promotion leg (r13 ask 3): same staged batch promoted
-        // through 8 per-range transactions — the 100 TB fleet shape.
-        // Expected ≤ ~linear in ranges: the N DELETE+INSERT pairs touch
-        // the same total rows, plus N-1 bound probes over staged
-        // distinct keys.
-        val (_, rpSec) = time {
-          JdbcUpsert.upsert(ev, server.url, s"ev_ranged_$tag", "oid__id",
-            server.props, promotePartitions = 8)
-        }
-        results(s"sink_ranged_${tag}_sec") = rpSec
         val conn = java.sql.DriverManager.getConnection(server.url, server.props)
         try {
           val st = conn.createStatement()
           try st.execute(
-            s"DROP TABLE ev_scale_$tag; DROP TABLE ev_copyonly_$tag; " +
-            s"DROP TABLE ev_ranged_$tag; CHECKPOINT")
+            s"DROP TABLE ev_scale_$tag; DROP TABLE ev_copyonly_$tag; CHECKPOINT")
           finally st.close()
         } finally conn.close()
       }
@@ -176,11 +165,9 @@ object EtlScaleBench {
 
     def r(k: String): Double = results(k)
     val legs = mode match {
-      case "all" =>
-        Seq("tracking", "events", "stage", "copy", "sink", "sink_ranged")
-      case "skew" =>
-        Seq("tracking", "events", "copy", "sink", "sink_ranged")
-      case _ => Seq("copy", "sink", "sink_ranged")
+      case "all" => Seq("tracking", "events", "stage", "copy", "sink")
+      case "skew" => Seq("tracking", "events", "copy", "sink")
+      case _ => Seq("copy", "sink")
     }
     // ratio = second tag over first: 10x/1x for the scale modes,
     // hot/uniform for the skew mode

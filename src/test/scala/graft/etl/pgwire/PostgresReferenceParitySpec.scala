@@ -8,8 +8,7 @@ import org.scalatest.BeforeAndAfterAll
 
 /** End-to-end reference parity on a REAL Postgres target: a slice of the
   * actual CDC corpus flows through the engine's pipelines, lands in
-  * Postgres through the upsert sink (MERGE for the keep-last tracking
-  * table, delete+insert for the multi-row events table), and then the
+  * Postgres through the upsert sink, and then the
   * reference's VERBATIM test queries (README.md:269-319 — Postgres SQL,
   * quoted camelCase identifiers, public schema) run against the loaded
   * tables. Results must match Spark running the same queries over the
@@ -40,10 +39,8 @@ class PostgresReferenceParitySpec extends SparkSpec with BeforeAndAfterAll {
     if (PgServerFixture.available && new java.io.File(corpusDir).isDirectory) {
       PgWireDriver.ensureRegistered()
       server = PgServerFixture.start()
-      // the reference's two target tables, loaded through the sink's two
-      // promotion paths (tracking is keep-last single-row-per-key)
-      JdbcUpsert.upsert(tracking, url, "tracking", "oid__id", props,
-        useMerge = true)
+      // the reference's two target tables, loaded through the sink
+      JdbcUpsert.upsert(tracking, url, "tracking", "oid__id", props)
       JdbcUpsert.upsert(events, url, "events", "oid__id", props)
       // Spark-side views over the SAME slice for the comparison queries
       tracking.createOrReplaceTempView("tracking")

@@ -13,7 +13,7 @@ import org.scalatest.BeforeAndAfterAll
   *
   * The staging write goes through Spark's JDBC writer with the built-in
   * PostgresDialect (TEXT/FLOAT8 types, quoted identifiers), the promotion
-  * through the real delete+insert and MERGE paths — all over the pgwire
+  * through the single delete+insert transaction — all over the pgwire
   * minimal driver, so the exact SQL a Postgres target receives is what
   * executes here. Cancels (not fails) if no postgres installation exists.
   */
@@ -67,66 +67,35 @@ class PostgresUpsertSpec extends SparkSpec with BeforeAndAfterAll {
     assert(tableRows(t) === Map("k1" -> "v1", "k2" -> "v2", "k3" -> "v2"))
   }
 
-  test("MERGE promotion executes on Postgres 15 (latest-batch-wins, null key, replay)") {
+  test("a failed promotion commits nothing on Postgres; replay after the " +
+    "fix matches a clean run") {
     assume(PgServerFixture.available, "no postgres installation in sandbox")
-    val t = "merge_pg"
-    val batch1 = Seq((Option("k1"), "v1"), (Option("k2"), "v1"),
-      (Option.empty[String], "vn1")).toDF("oid__id", "payload")
-    JdbcUpsert.upsert(batch1, url, t, "oid__id", props, useMerge = true)
-    assert(tableRows(t) === Map("k1" -> "v1", "k2" -> "v1", (null: String) -> "vn1"))
+    val batch1 = Seq(("k1", "v1", "f1.csv"), ("k2", "v1", "f1.csv"))
+      .toDF("oid__id", "payload", "fileName")
+    // k2 replaced, k3 added — and k3's payload breaks the constraint below
+    val batch2 = Seq(("k2", "v2", "f2.csv"), ("k3", "bad", "f2.csv"))
+      .toDF("oid__id", "payload", "fileName")
+    val clean = "atomic_clean_pg"
+    JdbcUpsert.upsert(batch1, url, clean, "oid__id", props)
+    assert(JdbcUpsert.upsert(batch2, url, clean, "oid__id", props) === 2L)
 
-    val batch2 = Seq((Option("k2"), "v2"), (Option("k3"), "v2"),
-      (Option.empty[String], "vn2")).toDF("oid__id", "payload")
-    JdbcUpsert.upsert(batch2, url, t, "oid__id", props, useMerge = true)
-    assert(tableRows(t) ===
-      Map("k1" -> "v1", "k2" -> "v2", "k3" -> "v2", (null: String) -> "vn2"))
-
-    JdbcUpsert.upsert(batch2, url, t, "oid__id", props, useMerge = true)
-    assert(tableRows(t) ===
-      Map("k1" -> "v1", "k2" -> "v2", "k3" -> "v2", (null: String) -> "vn2"))
-  }
-
-  test("partitioned promotion on Postgres: N-range value parity with " +
-    "single-txn, and torn-promotion recovery (kill between range txns)") {
-    assume(PgServerFixture.available, "no postgres installation in sandbox")
-    val single = "range_single_pg"
-    val torn = "range_torn_pg"
-    val batch1 = ((1 to 9).map(i => (Option(f"k$i%02d"), "v1")) :+
-      (Option.empty[String], "vn1")).toDF("oid__id", "payload")
-    JdbcUpsert.upsert(batch1, url, single, "oid__id", props)
-    JdbcUpsert.upsert(batch1, url, torn, "oid__id", props,
-      promotePartitions = 3)
-    assert(tableRows(torn) === tableRows(single))
-
-    // second batch touching every range; the ranged run is KILLED after
-    // the first range transaction commits
-    val batch2 = Seq((Option("k01"), "v2"), (Option("k05"), "v2"),
-      (Option("k09"), "v2"), (Option("k10"), "v2"),
-      (Option.empty[String], "vn2")).toDF("oid__id", "payload")
-    JdbcUpsert.upsert(batch2, url, single, "oid__id", props)
-    val boom = new RuntimeException("torn: injected failure after range 0")
-    val thrown = intercept[RuntimeException] {
-      JdbcUpsert.upsertImpl(batch2, url, torn, "oid__id", props, 0, None,
-        useMerge = false, promotePartitions = 3,
-        afterRangeCommit = i => if (i == 0) throw boom)
+    val t = "atomic_pg"
+    assert(JdbcUpsert.upsert(batch1, url, t, "oid__id", props) === 2L)
+    val afterBatch1 = tableRows(t)
+    def sql(stmt: String): Unit = pg { conn =>
+      val st = conn.createStatement(); try st.execute(stmt) finally st.close()
     }
-    assert(thrown eq boom)
-    // the torn state is the DOCUMENTED visibility trade: range 0
-    // promoted, later ranges and the null group still old — i.e. NOT
-    // yet equal to the single-txn result, but not empty either
-    val tornState = tableRows(torn)
-    assert(tornState("k01") === "v2",
-      "range 0 committed before the injected failure")
-    assert(tornState !== tableRows(single),
-      "a mid-promotion kill must leave a visibly torn state for this " +
-        "test to be exercising recovery at all")
+    sql(s"""ALTER TABLE $t ADD CONSTRAINT no_bad CHECK ("payload" <> 'bad')""")
+    // the INSERT fails after the DELETE of k2 ran: the whole batch rolls back
+    intercept[java.sql.SQLException](
+      JdbcUpsert.upsert(batch2, url, t, "oid__id", props))
+    assert(tableRows(t) === afterBatch1)
+    assert(JdbcUpsert.lastUploadedFile(spark, url, t, props = props) === Some("f1.csv"))
 
-    // replay the SAME batch through the same ranged path: staging is
-    // rewritten, every range re-promoted, delete+insert idempotent per
-    // range -> converges to the single-txn result
-    JdbcUpsert.upsert(batch2, url, torn, "oid__id", props,
-      promotePartitions = 3)
-    assert(tableRows(torn) === tableRows(single))
+    sql(s"ALTER TABLE $t DROP CONSTRAINT no_bad")
+    assert(JdbcUpsert.upsert(batch2, url, t, "oid__id", props) === 2L)
+    assert(tableRows(t) === tableRows(clean))
+    assert(JdbcUpsert.lastUploadedFile(spark, url, t, props = props) === Some("f2.csv"))
   }
 
   test("reserved-word columns (from/to) round-trip quoted, as in the reference corpus") {
@@ -185,7 +154,7 @@ class PostgresUpsertSpec extends SparkSpec with BeforeAndAfterAll {
   test("multi-row-per-key batches keep group semantics on the delete+insert path") {
     assume(PgServerFixture.available, "no postgres installation in sandbox")
     // events-shaped table: several rows per key per batch; replay must
-    // replace the GROUP, not dedupe it (the reason MERGE is opt-in)
+    // replace the GROUP, not dedupe it
     val t = "events_pg"
     val batch = Seq(("k1", "e1"), ("k1", "e2"), ("k2", "e3"))
       .toDF("oid__id", "payload")

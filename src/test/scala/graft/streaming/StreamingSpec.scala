@@ -159,6 +159,53 @@ class StreamingSpec extends SparkSpec
     } finally conn.close()
   }
 
+  test("streaming ETL over self-written CDC files equals latest-batch-wins " +
+      "over the batch pipelines (one shared transform chain)") {
+    val work = Files.createTempDirectory("stream_cdc")
+    // I/U ops, [], 'status': None, keys repeated across files
+    val paths = graft.etl.CdcFiles.write(work)
+    // the file source admits files in MODIFICATION-time order; stagger
+    // them in name order so the batches are exactly {f0,f1},{f2,f3}
+    paths.zipWithIndex.foreach { case (p, i) =>
+      new java.io.File(p).setLastModified(1700000000000L + i * 60000L)
+    }
+    val batchOf = graft.etl.CdcFiles.names.zipWithIndex
+      .map { case (f, i) => f -> i / 2 }.toMap
+    // the upsert's delete-by-key keeps, per document, the rows of the
+    // latest micro-batch that carried it
+    def latestBatchWins(df: org.apache.spark.sql.DataFrame) = {
+      val batchCol = batchOf.foldLeft(lit(-1)) { case (acc, (f, b)) =>
+        when(col("fileName") === f, lit(b)).otherwise(acc)
+      }
+      val w = org.apache.spark.sql.expressions.Window.partitionBy($"oid__id")
+      df.withColumn("__b", batchCol)
+        .withColumn("__mb", max($"__b").over(w))
+        .filter($"__b" === $"__mb")
+        .drop("__b", "__mb")
+    }
+    def rows(df: org.apache.spark.sql.DataFrame, cols: Seq[String]): Seq[String] =
+      df.select(cols.map(c => col(c).cast("string")): _*).collect()
+        .map(_.toSeq.mkString("|")).toSeq.sorted
+
+    Streaming.eventsFileStream(spark, work.toString,
+      Files.createTempDirectory("stream_cdc_ev_ckpt").toString, url,
+      "events_cdc_stream", maxFilesPerTrigger = 2, clock = clock,
+      props = sinkProps, createTableColumnTypes = colTypes).awaitTermination()
+    Streaming.trackingFileStream(spark, work.toString,
+      Files.createTempDirectory("stream_cdc_tr_ckpt").toString, url,
+      "tracking_cdc_stream", maxFilesPerTrigger = 2, clock = clock,
+      props = sinkProps, createTableColumnTypes = sink._4).awaitTermination()
+
+    val evCols = graft.etl.Schemas.eventsColumns ++ graft.etl.Schemas.auditColumns
+    val evExpected = rows(latestBatchWins(Pipelines.events(spark, paths, clock = clock)), evCols)
+    assert(evExpected.nonEmpty)
+    assert(rows(spark.read.jdbc(url, "events_cdc_stream", sinkProps), evCols) === evExpected)
+    val trCols = graft.etl.Schemas.trackingColumns ++ graft.etl.Schemas.auditColumns
+    val trExpected = rows(latestBatchWins(Pipelines.tracking(spark, paths, clock = clock)), trCols)
+    assert(trExpected.nonEmpty)
+    assert(rows(spark.read.jdbc(url, "tracking_cdc_stream", sinkProps), trCols) === trExpected)
+  }
+
   test("windowed aggregation over a stream equals the batch computation") {
     val eventsPath = sf("sf0.001")
     // stream schema = the RAW parquet schema (ts encoding varies by

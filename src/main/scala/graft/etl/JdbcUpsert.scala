@@ -1,9 +1,17 @@
 package graft.etl
 
-import java.sql.{Connection, DriverManager}
+import java.sql.{Connection, Driver, DriverManager, SQLException}
+import java.time.{ZoneId, ZoneOffset}
 import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.jdbc.JdbcUtils
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.jdbc.JdbcDialects
+import org.apache.spark.sql.types.TimestampType
+
+import graft.etl.pgwire.{PgCopyBinary, PgCopyIn}
 
 /** Transactional delete+insert ("upsert") JDBC sink — the reference's core
   * sink (dags/datahelper/postgres.py:18-38: one transaction per batch,
@@ -11,9 +19,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   *
   * The reference's row-at-a-time form is its published 2-hour bottleneck
   * (README.md:324-326). Here the batch is STAGED in parallel by the
-  * executors through Spark's JDBC writer (the pgwire driver turns the
-  * writer's INSERT batches into COPY), then one driver-side transaction
-  * promotes it set-based:
+  * executors, then one driver-side transaction promotes it set-based:
   *
   *   CREATE TABLE target AS SELECT * FROM staging WITH NO DATA; -- if absent
   *   DELETE FROM target WHERE key IN (SELECT key FROM staging);
@@ -21,9 +27,21 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   *   INSERT INTO target SELECT ... FROM staging;
   *   DROP TABLE staging;
   *
+  * Staging into Postgres (`jdbc:postgresql:` URLs) is one Spark job run
+  * as a SQL execution: each non-empty partition opens one connection and
+  * streams its internal rows as a single `COPY staging (cols) FROM STDIN
+  * (FORMAT BINARY)` ([[graft.etl.pgwire.PgCopyBinary]]). The driver's one
+  * connection first (re)creates the staging table with the column types
+  * Spark's JDBC writer gives the schema (PostgresDialect types, quoted
+  * identifiers, NOT NULL for non-nullable fields), stays open across the
+  * job and then runs the promotion. Every connection, on the driver and
+  * in the tasks, comes from the driver class named in `props("driver")`
+  * when there is one. Other URLs (Derby) stage through Spark's JDBC
+  * writer.
+  *
   * Properties kept from the reference: the whole batch commits or none of
   * it does, and replaying a batch converges to the same table state. The
-  * staging write runs the batch's plan exactly once; the promotion is
+  * staging job runs the batch's plan exactly once; the promotion is
   * O(1) statements executed inside the database.
   *
   * Column identifiers are always double-quoted: the corpus has
@@ -88,17 +106,16 @@ object JdbcUpsert {
       }
     }
 
-  /** Ceiling on staging-write connections: Spark's JDBC writer opens ONE
-    * connection per partition, so a many-small-files input (the CDC
-    * corpus shape — one partition per CSV) would turn the staging write
-    * into a connection storm (the 10× replicated corpus, 8,810
-    * partitions, measured 457 s against tens of seconds bounded), and an
-    * RDBMS saturates at a few dozen bulk writers anyway. The write always
-    * goes through `coalesce` (no shuffle, no job of its own): below the
-    * ceiling it keeps the input partitioning, above it merges partitions
-    * at write time. Asking the plan for its partition count instead would
-    * run an uncached adaptive plan's shuffle stages once for the count and
-    * again for the write.
+  /** Ceiling on staging connections: staging opens ONE connection per
+    * partition, so a many-small-files input (the CDC corpus shape — one
+    * partition per CSV) would turn the staging write into a connection
+    * storm (the 10× replicated corpus, 8,810 partitions, measured 457 s
+    * against tens of seconds bounded), and an RDBMS saturates at a few
+    * dozen bulk writers anyway. Staging always goes through `coalesce`
+    * (no shuffle, no job of its own): below the ceiling it keeps the input
+    * partitioning, above it merges partitions at write time. Asking the
+    * plan for its partition count instead would run an uncached adaptive
+    * plan's shuffle stages once for the count and again for the write.
     *
     * Trade: coalesce is a narrow dependency, so it also bounds the
     * upstream compute of a narrow-only input to 64-way. The ETL plans end
@@ -109,30 +126,101 @@ object JdbcUpsert {
   /** Upsert `df` into `table` keyed on `keyCol` and return the number of
     * rows the promotion inserted — the batch's size, counted by the
     * database inside the committed transaction, so the caller needs no
-    * count of its own. `df` is evaluated once, by the staging write.
+    * count of its own. `df` is evaluated once, by the staging job.
     *
     * @param url  JDBC url (driver must be on the classpath)
-    * @param createTableColumnTypes SQL types for the staging create, for
-    *   dialects whose default string type cannot be compared in the
-    *   promotion's `IN (SELECT ...)` (Derby CLOB)
+    * @param createTableColumnTypes column types for the staging create, in
+    *   Spark's `createTableColumnTypes` form, for dialects whose default
+    *   string type cannot be compared in the promotion's `IN (SELECT ...)`
+    *   (Derby CLOB). On Postgres an override must keep the column's binary
+    *   form (e.g. `VARCHAR(64)` for a string).
     */
   def upsert(df: DataFrame, url: String, table: String, keyCol: String,
       props: Properties = new Properties(),
       createTableColumnTypes: Option[String] = None): Long = {
-    ensureDialect(url)
     val staging = table + "_staging"
-    val writer = df.coalesce(MaxStagingConnections).write.mode(SaveMode.Overwrite)
-    createTableColumnTypes.foreach(t => writer.option("createTableColumnTypes", t))
-    writer.jdbc(url, staging, props)
+    val conn = connect(url, props)
+    try {
+      if (url.startsWith("jdbc:postgresql:"))
+        stageByCopy(df, conn, url, staging, props, createTableColumnTypes)
+      else {
+        ensureDialect(url)
+        val writer = df.coalesce(MaxStagingConnections).write.mode(SaveMode.Overwrite)
+        createTableColumnTypes.foreach(t => writer.option("createTableColumnTypes", t))
+        writer.jdbc(url, staging, props)
+      }
+      promote(conn, table, staging, keyCol, df.columns.toSeq)
+    } finally conn.close()
+  }
 
-    val conn = DriverManager.getConnection(url, props)
+  /** A connection through the driver class named in `props("driver")`, as
+    * Spark's JDBC writer made them, else through DriverManager. */
+  private def connect(url: String, props: Properties): Connection =
+    Option(props.getProperty("driver")) match {
+      case None => DriverManager.getConnection(url, props)
+      case Some(cls) =>
+        val loader = Option(Thread.currentThread.getContextClassLoader)
+          .getOrElse(getClass.getClassLoader)
+        val driver = Class.forName(cls, true, loader)
+          .getDeclaredConstructor().newInstance().asInstanceOf[Driver]
+        Option(driver.connect(url, props))
+          .getOrElse(throw new SQLException(s"driver $cls does not accept $url"))
+    }
+
+  /** Postgres staging: drop-if-exists and create the staging table over
+    * `conn`, then one job in which every non-empty partition COPYs its
+    * rows in over a connection of its own. */
+  private def stageByCopy(df: DataFrame, conn: Connection, url: String,
+      staging: String, props: Properties,
+      createTableColumnTypes: Option[String]): Unit = {
+    val dialect = JdbcDialects.get(url)
+    val schema = df.schema
+    // the zone the server reads a timestamp's wall-clock in: its TimeZone
+    // for the dialect's timestamptz columns; a plain timestamp stores it as is
+    val withTz = schema.exists(_.dataType == TimestampType) &&
+      JdbcUtils.getJdbcType(TimestampType, dialect).databaseTypeDefinition
+        .toUpperCase(java.util.Locale.ROOT).contains("TIME ZONE")
+    val encoder = new PgCopyBinary(schema,
+      if (withTz) serverTimeZone(conn) else ZoneOffset.UTC)
+    val columns = JdbcUtils.schemaString(dialect, schema,
+      SQLConf.get.caseSensitiveAnalysis, createTableColumnTypes)
+    val st = conn.createStatement()
+    try st.executeUpdate(s"DROP TABLE IF EXISTS $staging; CREATE TABLE $staging ($columns)")
+    finally st.close()
+
+    val copy = s"COPY $staging (${schema.fieldNames.map(dialect.quoteIdentifier).mkString(", ")})" +
+      " FROM STDIN (FORMAT BINARY)"
+    val qe = df.coalesce(MaxStagingConnections).queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("upsert")) {
+      qe.toRdd.foreachPartition { rows =>
+        if (rows.hasNext) {
+          val c = connect(url, props)
+          try c.unwrap(classOf[PgCopyIn]).copyIn(copy)(encoder.write(rows, _))
+          finally c.close()
+        }
+      }
+    }
+  }
+
+  private def serverTimeZone(conn: Connection): ZoneId = {
+    val st = conn.createStatement()
+    try {
+      val rs = st.executeQuery("SHOW TimeZone")
+      rs.next()
+      ZoneId.of(rs.getString(1))
+    } finally st.close()
+  }
+
+  /** The promotion transaction over `conn`; returns the rows inserted. */
+  private def promote(conn: Connection, table: String, staging: String,
+      keyCol: String, cols: Seq[String]): Long =
     try {
       conn.setAutoCommit(false)
       val st = conn.createStatement()
       val inserted = try {
         if (!tableExists(conn, table)) st.executeUpdate(createCloneSql(table, staging))
         val Seq(deleteKeys, deleteNullKeys, insert) =
-          promotionSql(table, staging, keyCol, df.columns.toSeq)
+          promotionSql(table, staging, keyCol, cols)
         st.executeUpdate(deleteKeys)
         st.executeUpdate(deleteNullKeys)
         val n = st.executeUpdate(insert)
@@ -147,8 +235,7 @@ object JdbcUpsert {
         // mask the original failure
         try conn.rollback() catch { case _: Throwable => () }
         throw e
-    } finally conn.close()
-  }
+    }
 
   /** Case-insensitive catalog lookup: Derby folds unquoted names to upper
     * case, Postgres to lower. */

@@ -7,14 +7,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The two reference DAGs (dags/postgres_etl/{tracking,events}_table.py)
   * as lazy DataFrame pipelines. Each table's transform chain is defined
-  * once ([[trackingChain]], [[eventsChain]]) as a function of the raw
-  * scanned CSV rows; the batch read ([[tracking]], [[events]]) and the
-  * streaming micro-batch bodies (`graft.streaming.Streaming`) both call
-  * it. The chain is one plan per batch, executed only by the sink's
+  * once ([[trackingChain]], [[eventsChain]]) as a function of the scanned
+  * CSV rows tagged with their file name ([[Transforms.addFileName]]); the
+  * batch read ([[tracking]], [[events]]) and the streaming micro-batch
+  * bodies (`graft.streaming.Streaming`) both call it. The chain is one plan per batch, executed only by the sink's
   * staging write (or by the caller for tests and queries).
   *
   * Incremental contract (SURVEY.md §2.9): the watermark is max(fileName)
-  * in the target table; only files strictly greater are read. Combined
+  * in the target table; only files strictly greater are read — the
+  * watermark filter prunes the file listing, so older files are never
+  * opened. Combined
   * with the idempotent delete+insert sink this gives crash-safe,
   * effectively-exactly-once loading at batch granularity — the same
   * contract the reference implements by hand.
@@ -22,18 +24,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Pipelines {
 
   /** tracking: one row per CDC document (no explode).
-    * addFileName → watermark → epoch→ts → uploadDate → project →
-    * normalizeNulls → dedupKeepLast (or distinct on the as-written path).
-    * The watermark filter sits right after the file-name tag so it
-    * prunes rows before the shuffle; a stream passes none, its
+    * watermark → epoch→ts → uploadDate → project → normalizeNulls →
+    * dedupKeepLast (or distinct on the as-written path). The watermark
+    * filter comes first so it reaches the scan; a stream passes none, its
     * checkpoint is its watermark. */
-  def trackingChain(raw: DataFrame, clock: Option[Timestamp],
+  def trackingChain(tagged: DataFrame, clock: Option[Timestamp],
       watermark: Option[String] = None,
       intendedDedup: Boolean = true): DataFrame = {
-    val tagged = Transforms.afterWatermark(watermark)(
-      Transforms.addFileName(raw)).drop("array_trackingEvents")
+    val fresh = Transforms.afterWatermark(watermark)(tagged).drop("array_trackingEvents")
     val converted = Transforms.withUploadDate(clock)(
-      Transforms.epochSecondsToTs(tagged))
+      Transforms.epochSecondsToTs(fresh))
     val projected = Transforms.normalizeNulls(
       Transforms.project(Schemas.trackingColumns)(converted))
     // keep-last already leaves one row per key — the trailing distinct is
@@ -43,12 +43,12 @@ object Pipelines {
   }
 
   /** events: one row per nested tracking event (explode_outer).
-    * addFileName → watermark → parse(py literal → array) → explode →
-    * uploadDate → project → normalizeNulls → distinct. */
-  def eventsChain(raw: DataFrame, clock: Option[Timestamp],
+    * watermark → parse(py literal → array) → explode → uploadDate →
+    * project → normalizeNulls → distinct. */
+  def eventsChain(tagged: DataFrame, clock: Option[Timestamp],
       watermark: Option[String] = None): DataFrame = {
-    val tagged = Transforms.afterWatermark(watermark)(Transforms.addFileName(raw))
-    val exploded = Transforms.explodeEvents(Transforms.parseEventArray(tagged))
+    val fresh = Transforms.afterWatermark(watermark)(tagged)
+    val exploded = Transforms.explodeEvents(Transforms.parseEventArray(fresh))
     val converted = Transforms.withUploadDate(clock)(exploded)
     val projected = Transforms.normalizeNulls(
       Transforms.project(Schemas.eventsColumns)(converted))
@@ -56,7 +56,8 @@ object Pipelines {
   }
 
   private def scan(spark: SparkSession, csvPaths: Seq[String]): DataFrame =
-    spark.read.schema(Schemas.source).option("header", "true").csv(csvPaths: _*)
+    Transforms.addFileName(
+      spark.read.schema(Schemas.source).option("header", "true").csv(csvPaths: _*))
 
   /** The tracking table of the CSV files at `csvPaths` newer than
     * `watermark`. */

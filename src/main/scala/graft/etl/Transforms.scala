@@ -16,10 +16,16 @@ import graft.etl.expressions.PyLiteralToJson.pyToJson
   */
 object Transforms {
 
-  /** S2: tag each row with its source file's basename. The lexicographic
-    * filename ordering doubles as the CDC version order. */
+  /** S2: each row's source file name — the URI-encoded last segment of
+    * its path, as `input_file_name()` gave it — from the file source's
+    * `_metadata.file_name`. The lexicographic filename ordering doubles as
+    * the CDC version order. The column is constant per file, so Catalyst
+    * pushes a filter on it — the watermark's `fileName > wm` — into file
+    * listing: files at or below the watermark are never opened. `df` must
+    * be a file scan, batch or streaming; a `foreachBatch` frame has no
+    * `_metadata`, so a stream is tagged before `writeStream`. */
   def withFileName(df: DataFrame): Column =
-    element_at(split(input_file_name(), "/"), -1)
+    df.metadataColumn("_metadata").getField("file_name")
 
   def addFileName(df: DataFrame): DataFrame =
     df.withColumn("fileName", withFileName(df))

@@ -1,30 +1,120 @@
 package graft.etl.pgwire
 
-import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
+import java.time.{Instant, LocalDateTime, ZoneId, ZoneOffset, ZonedDateTime}
 
-/** Encoder for PostgreSQL COPY binary format (public docs: "COPY …
-  * Binary Format"): an 19-byte header (signature + flags + extension
-  * length), one frame per tuple (int16 field count, then per field an
-  * int32 byte length — -1 for NULL — and the field bytes in the type's
-  * binary send format, network order), and an int16 -1 trailer.
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types._
+
+/** Encoder of Spark's internal rows into PostgreSQL COPY binary format
+  * (public docs: "COPY … Binary Format"): a 19-byte header (signature +
+  * flags + extension length), one frame per tuple (int16 field count,
+  * then per field an int32 byte length — -1 for NULL — and the field
+  * bytes in the type's binary send format, network order), and an int16
+  * -1 trailer.
   *
-  * Versus the text format this halves the server's parse cost on
-  * timestamp/numeric-heavy rows: no datetime string parsing, no decimal
-  * string scanning — the fields arrive in (nearly) the server's internal
-  * representation. The price is strictness: binary fields must match the
-  * target column types exactly (no implicit casts), which is safe here
-  * because the staging tables are created from the same Spark schema
-  * that produces the JDBC values.
+  * The fields come straight from the `InternalRow`: a string's UTF-8
+  * bytes are copied out of its `UTF8String`, a timestamp is Spark's
+  * microsecond count shifted to the Postgres epoch, and no external
+  * `Row`, boxed value or JDBC setter sits in between. Binary COPY does no
+  * implicit casts, so the target columns must have the types Spark's
+  * PostgresDialect gives the schema (the staging table is created from
+  * it): `schema` may hold only the types below, anything else is
+  * rejected at construction, naming the column.
   *
   * Per-type formats (all public, from the types' send/recv functions):
-  * int2/int4/int8 big-endian; float4/float8 IEEE bits big-endian; bool
-  * one byte; text UTF-8; bytea raw; timestamp int64 MICROSECONDS since
-  * 2000-01-01 (integer_datetimes, the only mode since PG 10); date int32
-  * days since 2000-01-01; numeric as base-10000 digit groups
-  * (ndigits/weight/sign/dscale int16 header).
+  * string → text UTF-8; long/int/short → int8/int4/int2, byte → int2;
+  * double/float → float8/float4 IEEE bits; boolean one byte; binary →
+  * bytea raw; date → int32 days since 2000-01-01; decimal → numeric as
+  * base-10000 digit groups (ndigits/weight/sign/dscale int16 header);
+  * timestamp → int64 microseconds since 2000-01-01.
+  *
+  * Timestamps keep the value the JDBC writer stored: it bound a
+  * `java.sql.Timestamp`, i.e. the wall-clock time of the instant in the
+  * JVM default zone, and the server read that wall-clock in `stampZone`
+  * — UTC for a `timestamp` column, the server's TimeZone for a
+  * `timestamptz` one (an ambiguous wall-clock at a fall-back transition
+  * takes the later offset, a skipped one the earlier, as the server's
+  * parser does). Equal to the JDBC encoding for dates from 1900 on.
   */
-private[pgwire] object PgCopyBinary {
+private[etl] final class PgCopyBinary(schema: StructType, stampZone: ZoneId)
+    extends Serializable {
+  import PgCopyBinary._
+
+  private val kinds: Array[Int] = schema.fields.map(f => f.dataType match {
+    case StringType => Str
+    case LongType => I64
+    case IntegerType => I32
+    case ShortType => I16
+    case ByteType => I8
+    case DoubleType => F64
+    case FloatType => F32
+    case BooleanType => Bool
+    case TimestampType => Stamp
+    case DateType => Day
+    case _: DecimalType => Num
+    case BinaryType => Bytes
+    case other => throw new IllegalArgumentException(
+      s"binary COPY: column `${f.name}` has unsupported type ${other.simpleString}")
+  })
+  private val decimals: Array[DecimalType] = schema.fields.map(_.dataType match {
+    case d: DecimalType => d
+    case _ => null
+  })
+
+  /** The complete COPY stream of a partition: header, tuples, trailer. */
+  def write(rows: Iterator[InternalRow], out: CopyOut): Unit = {
+    val wall = new WallClock(ZoneId.systemDefault(), stampZone)
+    out.bytes(header)
+    while (rows.hasNext) writeRow(rows.next(), out, wall)
+    out.bytes(trailer)
+  }
+
+  private def writeRow(row: InternalRow, out: CopyOut, wall: WallClock): Unit = {
+    out.int16(kinds.length)
+    var i = 0
+    while (i < kinds.length) {
+      if (row.isNullAt(i)) out.int32(-1)
+      else kinds(i) match {
+        case Str =>
+          val s = row.getUTF8String(i)
+          out.int32(s.numBytes)
+          out.copy(s.getBaseObject, s.getBaseOffset, s.numBytes)
+        case I64 => out.int32(8); out.int64(row.getLong(i))
+        case I32 => out.int32(4); out.int32(row.getInt(i))
+        case I16 => out.int32(2); out.int16(row.getShort(i))
+        case I8 => out.int32(2); out.int16(row.getByte(i))
+        case F64 => out.int32(8); out.int64(java.lang.Double.doubleToRawLongBits(row.getDouble(i)))
+        case F32 => out.int32(4); out.int32(java.lang.Float.floatToRawIntBits(row.getFloat(i)))
+        case Bool => out.int32(1); out.int8(if (row.getBoolean(i)) 1 else 0)
+        case Stamp => out.int32(8); out.int64(wall.stored(row.getLong(i)) - PgEpochMicros)
+        case Day => out.int32(4); out.int32(row.getInt(i) - PgEpochDays)
+        case Num =>
+          val d = decimals(i)
+          val b = numericBytes(row.getDecimal(i, d.precision, d.scale).toJavaBigDecimal)
+          out.int32(b.length); out.bytes(b)
+        case Bytes =>
+          val b = row.getBinary(i)
+          out.int32(b.length); out.bytes(b)
+      }
+      i += 1
+    }
+  }
+}
+
+private[etl] object PgCopyBinary {
+  private final val Str = 0
+  private final val I64 = 1
+  private final val I32 = 2
+  private final val I16 = 3
+  private final val I8 = 4
+  private final val F64 = 5
+  private final val F32 = 6
+  private final val Bool = 7
+  private final val Stamp = 8
+  private final val Day = 9
+  private final val Num = 10
+  private final val Bytes = 11
 
   /** "PGCOPY\n\377\r\n\0" + int32 flags 0 + int32 extension length 0. */
   val header: Array[Byte] =
@@ -35,107 +125,41 @@ private[pgwire] object PgCopyBinary {
   /** File trailer: int16 -1. */
   val trailer: Array[Byte] = Array(0xff.toByte, 0xff.toByte)
 
-  /** Seconds between the unix epoch and the postgres epoch (2000-01-01). */
-  private val PgEpochSeconds = 946684800L
+  /** Microseconds between the unix epoch and the postgres epoch
+    * (2000-01-01). */
+  private val PgEpochMicros = 946684800L * 1000000L
 
   /** Days between the unix epoch and 2000-01-01. */
-  private val PgEpochDays = 10957L
+  private val PgEpochDays = 10957
 
-  /** Text-family type OIDs — the only targets a String's binary send
-    * format (raw UTF-8) is valid for. The text COPY path parses a String
-    * into ANY type via the type's input function (uuid, jsonb, inet, …);
-    * binary skips that parse, so a String bound to a non-text column
-    * must stay on the text path. */
-  private val TextFamilyOids = Set(25, 1043, 1042, 19) // text,varchar,bpchar,name
+  /** Spark microseconds → the microseconds the server stores: the
+    * wall-clock of the instant in `jvm`, read back in `stamp`. Both steps
+    * are a constant shift when the zone has a fixed offset (UTC). */
+  private final class WallClock(jvm: ZoneId, stamp: ZoneId) {
+    private val jvmRules = jvm.getRules
+    private val stampRules = stamp.getRules
+    private val fixed = jvmRules.isFixedOffset && stampRules.isFixedOffset
+    private val fixedShift =
+      if (!fixed) 0L
+      else (jvmRules.getOffset(Instant.EPOCH).getTotalSeconds -
+        stampRules.getOffset(Instant.EPOCH).getTotalSeconds) * 1000000L
 
-  /** Whether this value's binary send format is exactly what a column of
-    * the given type OID expects — binary COPY does NO implicit casts, so
-    * 'auto' may only pick binary when every (value, target-OID) pair
-    * passes (the text format stays the universal fallback). */
-  def binaryCompatible(v: Any, oid: Int): Boolean = v match {
-    case null => true
-    case _: String => TextFamilyOids.contains(oid)
-    case _: java.lang.Boolean => oid == 16
-    case _: java.lang.Long => oid == 20
-    case _: java.lang.Integer => oid == 23
-    case _: java.lang.Short => oid == 21
-    case _: java.lang.Double => oid == 701
-    case _: java.lang.Float => oid == 700
-    case _: java.math.BigDecimal => oid == 1700
-    case _: java.sql.Timestamp => oid == 1114
-    case _: java.sql.Date => oid == 1082
-    case _: Array[Byte] => oid == 17
-    case _ => false
-  }
-
-  /** The complete COPY stream for a batch: header, tuples, trailer. */
-  def frames(rows: Iterator[Array[Any]]): Iterator[Array[Byte]] =
-    Iterator.single(header) ++ rows.map(encodeRow) ++ Iterator.single(trailer)
-
-  /** One tuple frame. */
-  def encodeRow(values: Array[Any]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(64)
-    writeInt16(out, values.length)
-    var i = 0
-    while (i < values.length) {
-      encodeField(values(i), out)
-      i += 1
-    }
-    out.toByteArray
-  }
-
-  private def writeInt16(out: ByteArrayOutputStream, v: Int): Unit = {
-    out.write((v >>> 8) & 0xff); out.write(v & 0xff)
-  }
-  private def writeInt32(out: ByteArrayOutputStream, v: Int): Unit = {
-    out.write((v >>> 24) & 0xff); out.write((v >>> 16) & 0xff)
-    out.write((v >>> 8) & 0xff); out.write(v & 0xff)
-  }
-  private def writeInt64(out: ByteArrayOutputStream, v: Long): Unit = {
-    writeInt32(out, (v >>> 32).toInt); writeInt32(out, v.toInt)
-  }
-
-  private def encodeField(v: Any, out: ByteArrayOutputStream): Unit = v match {
-    case null => writeInt32(out, -1)
-    case s: String =>
-      val b = s.getBytes(UTF_8)
-      writeInt32(out, b.length); out.write(b, 0, b.length)
-    case b: java.lang.Boolean =>
-      writeInt32(out, 1); out.write(if (b) 1 else 0)
-    case n: java.lang.Long =>
-      writeInt32(out, 8); writeInt64(out, n)
-    case n: java.lang.Integer =>
-      writeInt32(out, 4); writeInt32(out, n)
-    case n: java.lang.Short =>
-      writeInt32(out, 2); writeInt16(out, n.intValue())
-    case d: java.lang.Double =>
-      writeInt32(out, 8); writeInt64(out, java.lang.Double.doubleToRawLongBits(d))
-    case f: java.lang.Float =>
-      writeInt32(out, 4); writeInt32(out, java.lang.Float.floatToRawIntBits(f))
-    case t: java.sql.Timestamp =>
-      // timestamp (no tz) stores the WALL-CLOCK value; the text path
-      // sends t.toString (JVM-default-zone rendering), so the binary
-      // micros must come from the same local datetime, not the instant
-      val ldt = t.toLocalDateTime
-      val micros = Math.addExact(
-        Math.multiplyExact(
-          ldt.toEpochSecond(java.time.ZoneOffset.UTC) - PgEpochSeconds,
-          1000000L),
-        (ldt.getNano + 500L) / 1000L) // round ns → µs as the text parse does
-      writeInt32(out, 8); writeInt64(out, micros)
-    case d: java.sql.Date =>
-      writeInt32(out, 4)
-      writeInt32(out, (d.toLocalDate.toEpochDay - PgEpochDays).toInt)
-    case b: Array[Byte] =>
-      writeInt32(out, b.length); out.write(b, 0, b.length)
-    case n: java.math.BigDecimal =>
-      val body = numericBytes(n)
-      writeInt32(out, body.length); out.write(body, 0, body.length)
-    case n: Number => // defensive: binaryCompatible() should have filtered
-      val b = n.toString.getBytes(UTF_8)
-      writeInt32(out, b.length); out.write(b, 0, b.length)
-    case other => throw new java.sql.SQLException(
-      s"pgwire: cannot binary-COPY-encode ${other.getClass.getName}")
+    def stored(micros: Long): Long =
+      if (fixed) micros + fixedShift
+      else {
+        val offset = jvmRules.getOffset(
+          Instant.ofEpochSecond(Math.floorDiv(micros, 1000000L))).getTotalSeconds
+        val wall = micros + offset * 1000000L
+        if (stampRules.isFixedOffset)
+          wall - stampRules.getOffset(Instant.EPOCH).getTotalSeconds * 1000000L
+        else {
+          val sec = Math.floorDiv(wall, 1000000L)
+          val frac = Math.floorMod(wall, 1000000L)
+          val local = LocalDateTime.ofEpochSecond(sec, 0, ZoneOffset.UTC)
+          ZonedDateTime.ofLocal(local, stamp, null).withLaterOffsetAtOverlap()
+            .toEpochSecond * 1000000L + frac
+        }
+      }
   }
 
   /** NumericVar wire form: int16 ndigits, int16 weight (base-10000

@@ -20,15 +20,11 @@ import scala.collection.mutable.ArrayBuffer
   * SQL literal, and executeBatch ships the whole batch as ONE
   * ';'-separated Query message — one round trip per batch, the same
   * batching shape Spark's JDBC writer expects.
+  *
+  * Bulk loads do not go through statements: `unwrap(classOf[PgCopyIn])`
+  * hands out the connection's COPY FROM STDIN stream.
   */
 private[pgwire] object PgJdbc {
-
-  /** Batches shipped via COPY FROM STDIN (process-wide) — observability
-    * for specs/benchmarks asserting the bulk path actually engaged. */
-  private[pgwire] val CopyBatches = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Of those, batches shipped in COPY BINARY format. */
-  private[pgwire] val CopyBinaryBatches = new java.util.concurrent.atomic.AtomicLong()
 
   /** OID → (java.sql.Types code, postgres type name). Public catalog
     * constants (pg_type.dat). Covers every type the engine's tables use;
@@ -266,15 +262,6 @@ private[pgwire] object PgJdbc {
       s"pgwire: cannot encode parameter of ${other.getClass.getName}")
   }
 
-  /** SQL identifier token → catalog name: strip the double quotes and
-    * unescape `""` when quoted; fold to lowercase when not (PG's rule). */
-  private[pgwire] def unquoteIdent(tok: String): String = {
-    val t = tok.trim
-    if (t.length >= 2 && t.head == '"' && t.last == '"')
-      t.substring(1, t.length - 1).replace("\"\"", "\"")
-    else t.toLowerCase(java.util.Locale.ROOT)
-  }
-
   private final class StmtCore(conn: ConnCore, sqlTemplate: String) {
     private lazy val segments =
       if (sqlTemplate == null) Vector.empty else splitPlaceholders(sqlTemplate)
@@ -284,30 +271,6 @@ private[pgwire] object PgJdbc {
     private val params = new Array[Any](nParams)
     private val bound = new Array[Boolean](nParams)
     private val batch = new ArrayBuffer[Array[Any]]()
-    // Spark-writer-shaped INSERT batches bulk-load via COPY FROM STDIN
-    // instead of ';'-joined INSERTs — same rows, no per-row SQL parsing.
-    private lazy val copySql: Option[String] =
-      if (sqlTemplate == null) None
-      else PgCopyText.copyStatementFor(sqlTemplate)
-    // Target column type OIDs for the COPY column list, probed once per
-    // statement from pg_attribute. to_regclass returns NULL instead of
-    // erroring, so the probe can never poison an open transaction; any
-    // unresolved column (view target, renamed column, probe failure)
-    // yields None and 'auto' stays on the always-correct text path.
-    private lazy val copyTargetOids: Option[Array[Int]] =
-      try {
-        PgCopyText.copyPartsFor(sqlTemplate).flatMap { case (table, cols) =>
-          val probe = conn.run(
-            "SELECT a.attname, a.atttypid::int4 FROM pg_catalog.pg_attribute a " +
-              s"WHERE a.attrelid = to_regclass('${table.replace("'", "''")}') " +
-              "AND a.attnum > 0 AND NOT a.attisdropped")
-          val byName = probe.head.rows
-            .map(r => r(0) -> r(1).toInt).toMap
-          val wanted = cols.split(",").map(unquoteIdent)
-          val oids = wanted.flatMap(byName.get)
-          if (oids.length == wanted.length) Some(oids) else None
-        }
-      } catch { case _: Exception => None }
     var stClosed = false
     private var lastResults: IndexedSeq[PgResult] = Vector.empty
     private var resultIdx = 0
@@ -336,47 +299,19 @@ private[pgwire] object PgJdbc {
 
     def executeBatch(): Array[Int] = {
       if (batch.isEmpty) Array.empty
-      else copySql match {
-        case Some(copy) =>
-          val n = batch.length
-          // format ladder: "binary" forces PGCOPY binary, "text" forces
-          // the text encoding, "auto" (default) picks binary only when
-          // the catalog probe resolved every target column's type OID
-          // AND every value's binary send format matches its column —
-          // binary COPY does no implicit casts, so a String bound to a
-          // uuid/jsonb column must keep riding the text path
-          val binary = conn.copyFormat match {
-            case "binary" => true
-            case "text" => false
-            case _ => copyTargetOids.exists(oids =>
-              batch.forall(row => row.length == oids.length &&
-                row.indices.forall(i =>
-                  PgCopyBinary.binaryCompatible(row(i), oids(i)))))
-          }
-          val copied =
-            if (binary)
-              conn.copyIn(copy + " WITH (FORMAT BINARY)",
-                PgCopyBinary.frames(batch.iterator))
-            else conn.copyIn(copy, batch.iterator.map(PgCopyText.encodeRow))
-          batch.clear()
-          require(copied == n, s"pgwire: COPY of $n rows reported $copied")
-          CopyBatches.incrementAndGet()
-          if (binary) CopyBinaryBatches.incrementAndGet()
-          // each logical statement affected exactly its one row
-          Array.fill(n)(1)
-        case None =>
-          val sql = batch.iterator.map { row =>
-            val sb = new StringBuilder(segments.head)
-            var i = 0
-            while (i < nParams) { sb ++= encodeLiteral(row(i)) ++= segments(i + 1); i += 1 }
-            sb.toString()
-          }.mkString(";\n")
-          val n = batch.length
-          batch.clear()
-          val results = conn.run(sql)
-          require(results.length == n,
-            s"pgwire: batch of $n statements returned ${results.length} results")
-          results.map(_.updateCount).toArray
+      else {
+        val sql = batch.iterator.map { row =>
+          val sb = new StringBuilder(segments.head)
+          var i = 0
+          while (i < nParams) { sb ++= encodeLiteral(row(i)) ++= segments(i + 1); i += 1 }
+          sb.toString()
+        }.mkString(";\n")
+        val n = batch.length
+        batch.clear()
+        val results = conn.run(sql)
+        require(results.length == n,
+          s"pgwire: batch of $n statements returned ${results.length} results")
+        results.map(_.updateCount).toArray
       }
     }
 
@@ -442,7 +377,7 @@ private[pgwire] object PgJdbc {
     * lazily before the first statement; commit/rollback end the block.
     * (The simple protocol auto-commits each bare statement, which is
     * exactly JDBC's autoCommit=true.) */
-  private final class ConnCore(val proto: PgProtocol, val copyFormat: String) {
+  private final class ConnCore(val proto: PgProtocol) extends PgCopyIn {
     private var autoCommit = true
     private var inTxn = false
     private var isolation = Connection.TRANSACTION_READ_COMMITTED
@@ -452,10 +387,10 @@ private[pgwire] object PgJdbc {
       proto.query(sql)
     }
     /** COPY participates in the same lazy-BEGIN transaction discipline as
-      * plain statements, so a partition's staged COPYs commit atomically. */
-    def copyIn(sql: String, rows: Iterator[Array[Byte]]): Long = synchronized {
+      * plain statements. */
+    def copyIn(sql: String)(write: CopyOut => Unit): Long = synchronized {
       if (!autoCommit && !inTxn) { proto.query("BEGIN"); inTxn = true }
-      proto.copyIn(sql, rows)
+      proto.copyIn(sql)(write)
     }
     def getAutoCommit: Boolean = synchronized(autoCommit)
     def setAutoCommit(b: Boolean): Unit = synchronized {
@@ -485,9 +420,8 @@ private[pgwire] object PgJdbc {
     def isClosed: Boolean = proto.isClosed
   }
 
-  def connection(proto: PgProtocol, url: String, user: String,
-      copyFormat: String = "auto"): Connection = {
-    val core = new ConnCore(proto, copyFormat)
+  def connection(proto: PgProtocol, url: String, user: String): Connection = {
+    val core = new ConnCore(proto)
     lazy val conn: Connection = proxy(classOf[Connection], "PgConnection") { (name, a) =>
       name match {
         case "createStatement" => Some(statement(core, conn, null))
@@ -503,6 +437,8 @@ private[pgwire] object PgJdbc {
           core.setIsolation(a(0).asInstanceOf[Integer]); Some(null)
         case "getTransactionIsolation" => Some(core.getIsolation)
         case "getMetaData" => Some(dbMetaData(core, conn, url, user))
+        case "unwrap" if a(0) == classOf[PgCopyIn] => Some(core)
+        case "isWrapperFor" => Some(a(0) == classOf[PgCopyIn])
         case "setReadOnly" | "setCatalog" | "setClientInfo" |
              "setNetworkTimeout" | "abort" => Some(null)
         case "isReadOnly" => Some(false)
@@ -560,4 +496,12 @@ private[pgwire] object PgJdbc {
         case _ => None
       }
     }
+}
+
+/** COPY FROM STDIN on a pgwire connection, reached with
+  * `connection.unwrap(classOf[PgCopyIn])` (also through a wrapping
+  * proxy that forwards `unwrap`): runs `sql`, lets `write` stream the
+  * COPY data, and returns the row count the server reports. */
+private[etl] trait PgCopyIn {
+  def copyIn(sql: String)(write: CopyOut => Unit): Long
 }

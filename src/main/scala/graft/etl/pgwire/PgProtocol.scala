@@ -217,16 +217,15 @@ private[pgwire] final class PgProtocol(host: String, port: Int,
     results.toIndexedSeq
   }
 
-  /** Execute a `COPY table (cols) FROM STDIN` statement, streaming
-    * `rows` as text-format COPY data (caller encodes each row INCLUDING
-    * the trailing newline — see [[PgCopyText]]), and return the copied
-    * row count from the CommandComplete tag.
+  /** Execute a `COPY table (cols) FROM STDIN` statement, `write` streaming
+    * the COPY data into the [[CopyOut]] it is handed, and return the
+    * copied row count from the CommandComplete tag.
     *
     * Frames: Query → CopyInResponse('G') → CopyData('d')* → CopyDone('c')
-    * → CommandComplete → ReadyForQuery. Rows are packed into ~64 KiB
-    * CopyData frames. If encoding fails mid-stream, CopyFail('f') aborts
-    * the COPY server-side before the exception propagates. */
-  def copyIn(sql: String, rows: Iterator[Array[Byte]]): Long = synchronized {
+    * → CommandComplete → ReadyForQuery. The data goes out in ~64 KiB
+    * CopyData frames. If `write` throws, CopyFail('f') aborts the COPY
+    * server-side before the exception propagates. */
+  def copyIn(sql: String)(write: CopyOut => Unit): Long = synchronized {
     require(!closed, "pgwire connection is closed")
     val sqlBytes = sql.getBytes(UTF_8)
     out.writeByte('Q')
@@ -243,7 +242,7 @@ private[pgwire] final class PgProtocol(host: String, port: Int,
     while (!inCopy && !done) {
       val (tpe, payload) = readMessage()
       tpe match {
-        case 'G' => inCopy = true // CopyInResponse (format byte + per-col formats ignored: text)
+        case 'G' => inCopy = true // CopyInResponse (the formats are the statement's own)
         case 'E' => if (err == null) err = parseError(payload)
         case 'N' | 'S' | 'K' => ()
         case 'Z' => done = true
@@ -253,19 +252,14 @@ private[pgwire] final class PgProtocol(host: String, port: Int,
     }
     if (err != null) throw err
 
-    val frame = new java.io.ByteArrayOutputStream(1 << 16)
-    def flushFrame(): Unit = if (frame.size() > 0) {
+    val data = new CopyOut((buf, n) => {
       out.writeByte('d')
-      out.writeInt(4 + frame.size())
-      frame.writeTo(out)
-      frame.reset()
-    }
+      out.writeInt(4 + n)
+      out.write(buf, 0, n)
+    })
     try {
-      while (rows.hasNext) {
-        frame.write(rows.next())
-        if (frame.size() >= (1 << 16)) flushFrame()
-      }
-      flushFrame()
+      write(data)
+      data.flush()
       out.writeByte('c'); out.writeInt(4) // CopyDone
       out.flush()
     } catch {
@@ -381,4 +375,46 @@ private[pgwire] final class PgProtocol(host: String, port: Int,
     }
     new SQLException(s"$severity: $message", sqlState)
   }
+}
+
+/** The COPY data sink [[PgProtocol.copyIn]] hands its writer: a 64 KiB
+  * buffer of big-endian fields, passed to `emit` (one CopyData frame)
+  * whenever it fills and on the final `flush`. A field may straddle two
+  * frames; the server reassembles the stream. */
+private[etl] final class CopyOut(emit: (Array[Byte], Int) => Unit) {
+  private val buf = new Array[Byte](1 << 16)
+  private var n = 0
+
+  def flush(): Unit = if (n > 0) { emit(buf, n); n = 0 }
+
+  private def room(k: Int): Unit = if (n + k > buf.length) flush()
+
+  def int8(v: Int): Unit = { room(1); buf(n) = v.toByte; n += 1 }
+  def int16(v: Int): Unit = {
+    room(2)
+    buf(n) = (v >>> 8).toByte; buf(n + 1) = v.toByte
+    n += 2
+  }
+  def int32(v: Int): Unit = {
+    room(4)
+    buf(n) = (v >>> 24).toByte; buf(n + 1) = (v >>> 16).toByte
+    buf(n + 2) = (v >>> 8).toByte; buf(n + 3) = v.toByte
+    n += 4
+  }
+  def int64(v: Long): Unit = { int32((v >>> 32).toInt); int32(v.toInt) }
+
+  /** `len` bytes at `offset` of `base` (a byte array, or null with an
+    * off-heap address), in Spark's `Platform` addressing. */
+  def copy(base: AnyRef, offset: Long, len: Int): Unit = {
+    var done = 0
+    while (done < len) {
+      if (n == buf.length) flush()
+      val k = math.min(len - done, buf.length - n)
+      org.apache.spark.unsafe.Platform.copyMemory(base, offset + done, buf,
+        org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + n, k)
+      n += k; done += k
+    }
+  }
+  def bytes(b: Array[Byte]): Unit =
+    copy(b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length)
 }

@@ -7,16 +7,21 @@ import java.util.logging.Logger
 /** Minimal JDBC driver for PostgreSQL over the v3 wire protocol (see
   * [[PgProtocol]] for scope and limitations). Accepts the standard
   * `jdbc:postgresql://host:port/database` URL form so Spark's built-in
-  * PostgresDialect — which matches on the URL prefix — generates exactly
-  * the SQL a Postgres target receives (TEXT/FLOAT8 column types, quoted
+  * PostgresDialect — which matches on the URL prefix — types and quotes
+  * what a Postgres target receives (TEXT/FLOAT8 column types, quoted
   * identifiers).
   *
+  * It carries the sink's statements (staging DDL, promotion, watermark
+  * probe), Spark's JDBC reads, and the staging COPY: a connection hands
+  * out its COPY FROM STDIN stream through `unwrap(classOf[PgCopyIn])`.
+  * Statements are sent as written — prepared INSERT batches stay INSERTs.
+  *
   * Registration: NOT auto-registered via META-INF/services — call
-  * [[PgWireDriver.ensureRegistered]] (or pass
-  * `driver=graft.etl.pgwire.PgWireDriver` in the JDBC options, which
-  * makes Spark's DriverRegistry instantiate it by name). If a vendor
-  * PostgreSQL driver is ever on the classpath, simply don't register
-  * this one.
+  * [[PgWireDriver.ensureRegistered]], or pass
+  * `driver=graft.etl.pgwire.PgWireDriver` in the connection properties:
+  * [[graft.etl.JdbcUpsert]] and Spark's JDBC source then instantiate it
+  * by name. If a vendor PostgreSQL driver is ever on the classpath,
+  * simply don't register this one.
   */
 final class PgWireDriver extends Driver {
 
@@ -31,19 +36,11 @@ final class PgWireDriver extends Driver {
     val password = Option(info).flatMap(p => Option(p.getProperty("password")))
     // libpq-named TLS options: sslmode (disable|prefer|require|verify-ca,
     // default prefer) and sslrootcert (PEM path → chain verification).
-    // pgwire.copyFormat: auto (default — binary when every batch value
-    // has a binary send format), binary (force), text (force).
-    val copyFormat = Option(info)
-      .flatMap(p => Option(p.getProperty("pgwire.copyFormat")))
-      .map(_.trim.toLowerCase).getOrElse("auto")
-    if (!Set("auto", "binary", "text").contains(copyFormat))
-      throw new SQLException(
-        s"pgwire: unsupported pgwire.copyFormat '$copyFormat'", "08006")
     val ssl = PgTls.configFrom(
       Option(info).flatMap(p => Option(p.getProperty("sslmode"))),
       Option(info).flatMap(p => Option(p.getProperty("sslrootcert"))))
     val proto = new PgProtocol(host, port, user, db, password, ssl)
-    PgJdbc.connection(proto, url, user, copyFormat)
+    PgJdbc.connection(proto, url, user)
   }
 
   override def getPropertyInfo(url: String, info: Properties): Array[DriverPropertyInfo] =

@@ -7,7 +7,7 @@ import java.util.Properties
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import graft.etl.{JdbcUpsert, Pipelines, Schemas}
+import graft.etl.{JdbcUpsert, Pipelines, Schemas, Transforms}
 
 /** Structured-Streaming surface.
   *
@@ -55,16 +55,18 @@ object Streaming {
       props, createTableColumnTypes)(Pipelines.trackingChain(_, clock))
 
   /** Drain the CDC files under `csvDir` (AvailableNow): each micro-batch
-    * of raw scanned rows goes through `chain` and one upsert into `table`. */
+    * of scanned rows, tagged with their file name before `writeStream`
+    * (the batch frame has no `_metadata`), goes through `chain` and one
+    * upsert into `table`. */
   private def fileStream(spark: SparkSession, csvDir: String,
       checkpointDir: String, maxFilesPerTrigger: Int, url: String,
       table: String, props: Properties, createTableColumnTypes: Option[String])(
       chain: DataFrame => DataFrame): StreamingQuery =
-    spark.readStream
+    Transforms.addFileName(spark.readStream
       .schema(Schemas.source)
       .option("header", "true")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .csv(csvDir)
+      .csv(csvDir))
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{SparkSession, TestInternals}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for the test suite (one per suite).
@@ -35,4 +38,22 @@ trait SparkSpec extends AnyFunSuite {
     * JVMs, invisible to the driver's static). */
   protected def isClusterMaster: Boolean =
     sys.env.get("GRAFT_TEST_MASTER").exists(_.startsWith("local-cluster"))
+
+  /** Run `body` with `listener` on the bus; every event `body` caused has
+    * been delivered when this returns. */
+  def withListener(listener: SparkListener)(body: => Unit): Unit = {
+    val sc = spark.sparkContext
+    TestInternals.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try { body; TestInternals.drainListenerBus(sc) } finally sc.removeSparkListener(listener)
+  }
+
+  /** Spark jobs `body` launches. */
+  def jobsOf(body: => Unit): Int = {
+    val n = new AtomicInteger
+    withListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
+    })(body)
+    n.get
+  }
 }

@@ -3,16 +3,16 @@ package graft.etl
 import java.nio.file.Files
 import java.sql.{DriverManager, Timestamp}
 import java.util.Properties
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{SaveMode, TestInternals}
 
 import graft.SparkSpec
 
 /** `Pipelines.loadIncremental` runs each table's plan once, inside the
   * sink's staging write: no count pre-pass, no cache, and the row count it
-  * returns comes from the promotion. Hermetic: the CDC files are written
+  * returns comes from the promotion; a landed batch opens only the files
+  * past the watermark. Hermetic: the CDC files are written
   * by the spec ([[CdcFiles]]) and the target is embedded Derby.
   */
 class LoadIncrementalSpec extends SparkSpec {
@@ -23,16 +23,13 @@ class LoadIncrementalSpec extends SparkSpec {
 
   private def cacheEntries: Int = TestInternals.cachedEntries(spark)
 
-  /** Spark jobs `body` launches, counted by a listener. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
-    }
-    TestInternals.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try { body; TestInternals.drainListenerBus(sc) } finally sc.removeSparkListener(listener)
+  /** Bytes `body`'s tasks read from their input files. */
+  private def bytesReadBy(body: => Unit): Long = {
+    val n = new java.util.concurrent.atomic.AtomicLong
+    withListener(new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) { n.addAndGet(e.taskMetrics.inputMetrics.bytesRead); () }
+    })(body)
     n.get
   }
 
@@ -102,6 +99,26 @@ class LoadIncrementalSpec extends SparkSpec {
       assert(rowCount(s"load_$t") === before)
       assert(JdbcUpsert.lastUploadedFile(spark, url, s"load_$t") ===
         Some(CdcFiles.names(3)))
+    }
+  }
+
+  test("a landed batch reads only the files past the watermark") {
+    assume(!isClusterMaster, "embedded in-memory Derby is per-JVM")
+    val dir = Files.createTempDirectory("load_prune")
+    CdcFiles.write(dir, 2)
+    def load(t: String): Long = Pipelines.loadIncremental(spark,
+      Seq(dir.toString), url, s"prune_$t", t, new Properties(), clock)
+    tables.foreach(t => assert(load(t) > 0))
+
+    // the batch lands next to the two loaded files
+    CdcFiles.write(dir)
+    val newBytes = CdcFiles.names.drop(2).map(f => Files.size(dir.resolve(f))).sum
+    tables.foreach { t =>
+      var n = 0L
+      val read = bytesReadBy { n = load(t) }
+      assert(n > 0)
+      assert(read === newBytes,
+        s"$t: the batch read $read bytes, the files past the watermark hold $newBytes")
     }
   }
 }

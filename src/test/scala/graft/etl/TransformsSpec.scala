@@ -81,4 +81,22 @@ class TransformsSpec extends SparkSpec {
     assert(vals.length === 1)
     assert(vals.head.getAs[Timestamp](0) === clock.get)
   }
+
+  test("addFileName tags rows with the name input_file_name gave, a space or % included") {
+    val dir = java.nio.file.Files.createTempDirectory("file_names")
+    Seq("20230901 000000%20.csv", "20230901-000130000.csv").foreach(n =>
+      java.nio.file.Files.write(dir.resolve(n),
+        (Schemas.expectedHeader + "\nI,k1,1693000000,1693000100,1693000100,[]\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    val scan = spark.read.schema(Schemas.source).option("header", "true").csv(dir.toString)
+    val tagged = Transforms.addFileName(scan)
+    val names = tagged.select("fileName").as[String].collect().sorted.toSeq
+    // the URI-encoded last path segment: the form fileName has always
+    // held, so watermarks already loaded still compare
+    assert(names === Seq("20230901%20000000%2520.csv", "20230901-000130000.csv"))
+    assert(names === scan.select(element_at(split(input_file_name(), "/"), -1))
+      .as[String].collect().sorted.toSeq)
+    assert(Transforms.afterWatermark(Some(names.head))(tagged)
+      .select("fileName").as[String].collect().toSeq === names.tail)
+  }
 }

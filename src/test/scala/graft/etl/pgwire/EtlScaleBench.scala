@@ -76,9 +76,8 @@ object EtlScaleBench {
     // the first EtlScaleBench run measured the stock sink super-linear
     // (21.9x at 10x) because a 2x30M-row load through 128MB
     // shared_buffers + 1GB max_wal_size is a checkpoint storm, which is
-    // deployment config, not pipeline shape; the tuned run + the
-    // COPY-only decomposition below separate engine scaling from server
-    // config.
+    // deployment config, not pipeline shape; the tuned run separates
+    // engine scaling from server config.
     // mode "skew" (r13 ask 6): uniform 10x corpus vs the hot-key 10x
     // corpus (make_etl_10x.py HOT_FRAC — one oid__id owning ~1% of all
     // rows, the one-document-updates-constantly CDC shape): times the
@@ -137,17 +136,6 @@ object EtlScaleBench {
         val ev = Pipelines.events(spark, paths, clock = Clock)
           .localCheckpoint(true)
         rowCounts(s"sink_${tag}_rows") = ev.count()
-        // COPY-only decomposition: a plain staging write into a
-        // throwaway table — sink minus copy ≈ the promotion
-        // (DELETE + INSERT SELECT + DROP) share. Coalesced like the
-        // upsert's own staging write (one JDBC connection per
-        // partition — see JdbcUpsert.MaxStagingConnections).
-        val (_, cpSec) = time {
-          ev.coalesce(64).write
-            .mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .jdbc(server.url, s"ev_copyonly_$tag", server.props)
-        }
-        results(s"copy_${tag}_sec") = cpSec
         val (_, upSec) = time {
           JdbcUpsert.upsert(ev, server.url, s"ev_scale_$tag", "oid__id",
             server.props)
@@ -157,7 +145,7 @@ object EtlScaleBench {
         try {
           val st = conn.createStatement()
           try st.execute(
-            s"DROP TABLE ev_scale_$tag; DROP TABLE ev_copyonly_$tag; CHECKPOINT")
+            s"DROP TABLE ev_scale_$tag; CHECKPOINT")
           finally st.close()
         } finally conn.close()
       }
@@ -165,9 +153,9 @@ object EtlScaleBench {
 
     def r(k: String): Double = results(k)
     val legs = mode match {
-      case "all" => Seq("tracking", "events", "stage", "copy", "sink")
-      case "skew" => Seq("tracking", "events", "copy", "sink")
-      case _ => Seq("copy", "sink")
+      case "all" => Seq("tracking", "events", "stage", "sink")
+      case "skew" => Seq("tracking", "events", "sink")
+      case _ => Seq("sink")
     }
     // ratio = second tag over first: 10x/1x for the scale modes,
     // hot/uniform for the skew mode

@@ -11,11 +11,11 @@ import org.scalatest.BeforeAndAfterAll
   * local-run/docker-compose.yml:89; upsert contract
   * dags/datahelper/postgres.py:18-38), not just Derby + pinned strings.
   *
-  * The staging write goes through Spark's JDBC writer with the built-in
-  * PostgresDialect (TEXT/FLOAT8 types, quoted identifiers), the promotion
-  * through the single delete+insert transaction — all over the pgwire
-  * minimal driver, so the exact SQL a Postgres target receives is what
-  * executes here. Cancels (not fails) if no postgres installation exists.
+  * The staging table gets the built-in PostgresDialect's types (TEXT/FLOAT8,
+  * quoted identifiers) and is filled by one binary COPY per partition, the
+  * promotion runs as the single delete+insert transaction — all over the
+  * pgwire minimal driver, so the exact SQL a Postgres target receives is
+  * what executes here. Cancels (not fails) if no postgres installation exists.
   */
 class PostgresUpsertSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
@@ -170,8 +170,7 @@ class PostgresUpsertSpec extends SparkSpec with BeforeAndAfterAll {
     assert(n === 3L, "replaying a multi-row-per-key batch must not duplicate the group")
   }
 
-  test("COPY BINARY round-trips every supported type identically to the " +
-    "text path (forced both ways; auto engages binary)") {
+  test("COPY BINARY round-trips every supported type from Spark's internal rows") {
     assume(PgServerFixture.available, "no postgres installation in sandbox")
     val ts = java.sql.Timestamp.valueOf("2024-03-01 12:34:56.789012")
     val day = java.sql.Date.valueOf("2024-02-29")
@@ -179,65 +178,114 @@ class PostgresUpsertSpec extends SparkSpec with BeforeAndAfterAll {
       (1L, Option("it's — üñïcode\ttab\nnl"), Option(1.5), Option(true),
         Option(ts), Option(day),
         Option(new java.math.BigDecimal("-12345678.90")),
-        Option(Array[Byte](0, 1, 2, -1))),
+        Option(Array[Byte](0, 1, 2, -1)), Option(-7), Option(300.toShort),
+        Option((-2).toByte), Option(0.25f)),
       (2L, None, None, None, None, None,
-        Option(new java.math.BigDecimal("0.0001")), None),
+        Option(new java.math.BigDecimal("0.0001")), None, None, None, None, None),
       (3L, Option("plain"), Option(Double.NaN), Option(false),
         Option(ts), Option(day),
-        Option(new java.math.BigDecimal("10000")), Option(Array.empty[Byte])))
-      .toDF("oid__id", "label", "score", "flag", "ts", "day", "amount", "blob")
+        Option(new java.math.BigDecimal("10000")), Option(Array.empty[Byte]),
+        Option(Int.MaxValue), Option(Short.MinValue), Option(Byte.MaxValue),
+        Option(Float.NaN)),
+      (4L, None, None, None, None, None, None, None, None, None, None, None))
+      .toDF("oid__id", "label", "score", "flag", "ts", "day", "amount", "blob",
+        "n32", "n16", "n8", "f32")
+    JdbcUpsert.upsert(df, url, "copybin_pg", "oid__id", props)
 
-    def withFormat(fmt: String): java.util.Properties = {
-      val p = props; p.setProperty("pgwire.copyFormat", fmt); p
-    }
-    def cls(v: Any): String = v match {
-      case Some(x) => s"Some[${x.getClass.getSimpleName}]"
-      case other => String.valueOf(other)
-    }
-    // the path counters are process-STATICS: under a local-cluster
-    // master the COPY executes in executor JVMs and the driver's static
-    // never moves — the value round-trip asserts below still verify the
-    // data either way, so the path-engaged observability is asserted
-    // only where it is observable (single-JVM masters)
-    val binBefore = PgJdbc.CopyBinaryBatches.get()
-    JdbcUpsert.upsert(df, url, "copybin_pg", "oid__id", withFormat("binary"))
-    if (!isClusterMaster)
-      assert(PgJdbc.CopyBinaryBatches.get() > binBefore,
-        "forced binary upsert did not take the binary COPY path")
-    JdbcUpsert.upsert(df, url, "copytxt_pg", "oid__id", withFormat("text"))
-
-    // score reads back as text: scala numeric equality has NaN != NaN
-    // even boxed, and PG renders float8 NaN as the string 'NaN'
-    def readBack(t: String) = spark.read.jdbc(url, t, props)
+    // numbers read back as text: scala numeric equality has NaN != NaN
+    // even boxed, and PG renders float NaN as the string 'NaN'; a scala
+    // BigDecimal column is decimal(38,18), NUMERIC(38,18) in the table
+    val back = spark.read.jdbc(url, "copybin_pg", props)
       .select($"oid__id", $"label", $"score".cast("string"), $"flag",
         $"ts", $"day", $"amount".cast("string"),
-        org.apache.spark.sql.functions.hex($"blob"))
+        org.apache.spark.sql.functions.hex($"blob"), $"n32".cast("string"),
+        $"n16".cast("string"), $"n8".cast("string"), $"f32".cast("string"))
       .as[(Long, Option[String], Option[String], Option[Boolean],
-        Option[java.sql.Timestamp], Option[java.sql.Date],
-        Option[String], Option[String])]
+        Option[java.sql.Timestamp], Option[java.sql.Date], Option[String],
+        Option[String], Option[String], Option[String], Option[String],
+        Option[String])]
       .collect().sortBy(_._1).toSeq
-    val bin = readBack("copybin_pg")
-    val txt = readBack("copytxt_pg")
-    bin.zip(txt).foreach { case (b, t) =>
-      b.productIterator.zip(t.productIterator).zipWithIndex.foreach {
-        case ((bv, tv), i) =>
-          assert(bv == tv,
-            s"binary and text COPY disagree at field $i: " +
-              s"[$bv] (${cls(bv)}) vs [$tv] (${cls(tv)})")
-      }
-    }
-    assert(bin.length === txt.length)
-    assert(bin.head._5 === Some(ts) && bin.head._6 === Some(day))
-    assert(bin.head._7.exists(_.startsWith("-12345678.90")))
-    assert(bin(2)._3 === Some("NaN"), "NaN must survive binary float8")
+    assert(back === Seq(
+      (1L, Some("it's — üñïcode\ttab\nnl"), Some("1.5"), Some(true), Some(ts),
+        Some(day), Some("-12345678.900000000000000000"), Some("000102FF"), Some("-7"),
+        Some("300"), Some("-2"), Some("0.25")),
+      (2L, None, None, None, None, None, Some("0.000100000000000000"), None,
+        None, None, None, None),
+      (3L, Some("plain"), Some("NaN"), Some(false), Some(ts), Some(day),
+        Some("10000.000000000000000000"), Some(""), Some(Int.MaxValue.toString),
+        Some(Short.MinValue.toString), Some(Byte.MaxValue.toString), Some("NaN")),
+      (4L, None, None, None, None, None, None, None, None, None, None, None)))
+  }
 
-    // default (auto) picks binary for these batches
-    val autoBefore = PgJdbc.CopyBinaryBatches.get()
-    JdbcUpsert.upsert(df, url, "copyauto_pg", "oid__id", props)
-    if (!isClusterMaster) // executor-JVM statics, see above
-      assert(PgJdbc.CopyBinaryBatches.get() > autoBefore,
-        "auto format should choose binary when every value is encodable")
-    assert(readBack("copyauto_pg") === bin)
+  test("timestamptz keeps the JVM wall-clock under a non-UTC server TimeZone") {
+    assume(PgServerFixture.available, "no postgres installation in sandbox")
+    def sql(stmt: String): Unit = pg { conn =>
+      val st = conn.createStatement(); try st.execute(stmt) finally st.close()
+    }
+    // a new session of this role reads wall-clocks in New York, as the
+    // JDBC writer's text timestamps were read
+    sql("ALTER ROLE postgres SET TimeZone = 'America/New_York'")
+    try {
+      val walls = Seq("2024-03-01 12:34:56.789012", "2024-07-01 00:00:00")
+      val df = walls.zipWithIndex
+        .map { case (w, i) => (i.toLong, java.sql.Timestamp.valueOf(w)) }
+        .toDF("oid__id", "ts")
+      JdbcUpsert.upsert(df, url, "tz_pg", "oid__id", props)
+      val got = pg { conn =>
+        val st = conn.createStatement()
+        try {
+          val rs = st.executeQuery("""SELECT to_char("ts" AT TIME ZONE 'America/New_York', """ +
+            """'YYYY-MM-DD HH24:MI:SS.US') FROM tz_pg ORDER BY "oid__id"""")
+          Iterator.continually(rs).takeWhile(_.next()).map(_.getString(1)).toList
+        } finally st.close()
+      }
+      assert(got === Seq("2024-03-01 12:34:56.789012", "2024-07-01 00:00:00.000000"))
+    } finally sql("ALTER ROLE postgres RESET TimeZone")
+  }
+
+  test("one upsert is one staging pass: no more Spark jobs than a noop write " +
+    "of the same plan, and one session per non-empty partition plus the driver's") {
+    assume(PgServerFixture.available, "no postgres installation in sandbox")
+    // 3 rows over 4 slices: slices 1-3 hold a row each, slice 0 none
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(("k1", "f1.csv"), ("k2", "f1.csv"), ("k3", "f2.csv")), 4))
+      .toDF("oid__id", "fileName")
+    val nonEmpty = df.rdd.mapPartitions(it => Iterator(if (it.hasNext) 1 else 0))
+      .collect().sum
+    assert(nonEmpty === 3)
+
+    val noopJobs = jobsOf(df.write.format("noop").mode("overwrite").save())
+    // sessions are counted when a backend's stats reach shared memory:
+    // force this one's own flush first, then poll until the count settles
+    val monitor = DriverManager.getConnection(url, props)
+    try {
+      val st = monitor.createStatement()
+      def sessions(): Long = {
+        val rs = st.executeQuery(
+          "SELECT sessions FROM pg_stat_database WHERE datname = current_database()")
+        rs.next(); rs.getLong(1)
+      }
+      /** The count once it has stopped moving. */
+      def settled(): Long = {
+        var prev = -1L
+        var cur = sessions()
+        while (cur != prev) { Thread.sleep(300); prev = cur; cur = sessions() }
+        cur
+      }
+      /** The count once it reaches `target` (or after 10 s), settled. */
+      def reached(target: Long): Long = {
+        val deadline = System.nanoTime() + 10L * 1000000000L
+        while (sessions() < target && System.nanoTime() < deadline) Thread.sleep(100)
+        settled()
+      }
+      st.execute("SELECT pg_stat_force_next_flush()")
+      val before = settled()
+      val upsertJobs = jobsOf(JdbcUpsert.upsert(df, url, "shape_pg", "oid__id", props))
+      assert(upsertJobs > 0 && upsertJobs <= noopJobs,
+        s"the upsert launched $upsertJobs jobs, a noop write $noopJobs")
+      assert(reached(before + 1 + nonEmpty) - before === 1L + nonEmpty)
+    } finally monitor.close()
+    assert(spark.read.jdbc(url, "shape_pg", props).count() === 3)
   }
 
   test("watermark probe on Postgres: absent table → None, else max(fileName)") {

@@ -41,26 +41,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * FAILS instead).
   */
 object FaultInject {
-  private def session(): SparkSession = {
-    val master =
-      sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,8,4096]")
-    // Same SPARK_GRAFT_CHECKPOINT knob as Bench: the batch kill leg must
-    // run checkpointed queries (g02, d05, ...) under
-    // `reliable:<dir>` to exercise the recovery path Checkpoints.scala
-    // documents — the default `local` strategy truncates lineage with
-    // executor-resident blocks and is unrecoverable once a kill lands
-    // after the first consumed checkpoint block.
-    val ckptMode = sys.env.getOrElse("SPARK_GRAFT_CHECKPOINT", "local")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("graft.checkpoint", ckptMode)
-      .config("spark.ui.enabled", "false")
-    ClusterEnv.withExecutorEnv(builder, sys.env.get("SPARK_GRAFT_JARS"),
-      sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "3g")).getOrCreate()
-  }
+  /** The SPARK_GRAFT_CHECKPOINT setting GraftSession reads is the one
+    * the batch kill leg needs: checkpointed queries (g02, d05, ...) must
+    * run under `reliable:<dir>` to exercise the recovery path
+    * Checkpoints.scala documents — the default `local` strategy
+    * truncates lineage with executor-resident blocks and is
+    * unrecoverable once a kill lands after the first consumed
+    * checkpoint block. */
+  private def session(): SparkSession = GraftSession(
+    sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,8,4096]"), "16")
 
   /** PIDs of live executor JVMs OF THE GIVEN APPLICATION (separate
     * processes under local-cluster; empty under local[*]). Executors

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Plan-discipline audit: one row per registered query summarizing the
   * physical plan — shuffle exchanges, join strategies, codegen spans —
@@ -19,13 +18,7 @@ object PlanCensus {
     val (sfDir, outFile) = (args(0), args(1))
     val prefixes = args.lift(2).map(_.split(',').toSeq.filter(_.nonEmpty))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     def count(hay: String, needle: String): Int = {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query execution profile: run a named query `reps` times and print
   * job count, stage count, task count, summed executor task time, and
@@ -18,15 +17,7 @@ object QueryProbe {
     val names = args(1).split(',').map(_.trim).filter(_.nonEmpty)
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     @volatile var jobs = 0

@@ -39,14 +39,11 @@ object Tables {
 
   /** Minimum compressed input size before a widen is considered: below
     * this the serial scan is cheap and the extra exchange is pure
-    * overhead. Configurable (`graft.widenMinBytes`) since round 14 so
-    * the threshold is an A/B-able deployment knob rather than a burned
-    * constant — the round-14 floor experiment measured the CPU-dense
-    * single-task stages (d04's per-shingle md5 fingerprint, the c03/c04
-    * rolling-hash and bloom probes, sk01–05's token passes) against the
-    * added exchange cost per query and set the default accordingly. */
-  private def widenMinBytes(spark: SparkSession): Long =
-    spark.conf.get("graft.widenMinBytes", (4L << 20).toString).toLong
+    * overhead. Set by the round-14 floor experiment, which measured the
+    * CPU-dense single-task stages (d04's per-shingle md5 fingerprint,
+    * the c03/c04 rolling-hash and bloom probes, sk01–05's token passes)
+    * against the added exchange cost per query. */
+  private val WidenMinBytes: Long = 4L << 20
 
   /** The d12 lesson generalized (round 13): these corpora are written
     * as a SINGLE parquet row group (measured: documents at sf2 = one
@@ -77,8 +74,7 @@ object Tables {
     * PLAN side only — nothing executes). A corpus already wider than
     * the session's parallelism is untouched, so the 100 TB
     * thousands-of-splits case never pays the exchange. */
-  def widenDense(df: DataFrame): DataFrame =
-    widenDense(df, widenMinBytes(df.sparkSession))
+  def widenDense(df: DataFrame): DataFrame = widenDense(df, WidenMinBytes)
 
   /** Operator-level floor for inputs whose per-ROW map work is provably
     * heavy — k md5 probes per 4-gram (c04/c05's Bloom pass), a rolling

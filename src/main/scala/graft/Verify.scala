@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -21,20 +20,8 @@ object Verify {
     // classpath, so the app classes ship as a jar (SPARK_GRAFT_JARS =
     // sbt package output) and the JDK-17 --add-opens flags are repeated
     // for the executor JVMs (build.sbt only covers the forked driver).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // A/B kill-switch for the dense-table scan widen (Tables.widen) —
-      // the harness that pins its value-identity claim per deployment
-      .config("graft.wideScans",
-        sys.env.getOrElse("SPARK_GRAFT_WIDE_SCANS", "true"))
-    val spark = ClusterEnv.withExecutorEnv(builder,
-      sys.env.get("SPARK_GRAFT_JARS"),
-      sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "3g")).getOrCreate()
+    val spark = GraftSession(
+      sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"), cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

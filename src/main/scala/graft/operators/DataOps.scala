@@ -141,7 +141,7 @@ object DataOps {
     * (source, token) once and summing its count is value-identical
     * while the md5 + explode work drops from corpus scale to
     * vocabulary scale. The sk03/sk04/sk05 truth lanes consume the same
-    * counted relation ([[cmTokenCountsMemo]]), so the corpus n-gram
+    * counted relation ([[CmTokenCounts]]), so the corpus n-gram
     * explode runs once per sweep for the whole sketch family. */
   private[graft] def cmCountersFromCounts(counts: DataFrame, width: Int,
       depth: Int): DataFrame =
@@ -1008,27 +1008,19 @@ object DataOps {
     * Explicit classes only — identical under Java regex and RE2. */
   private[operators] val BpePattern = "[A-Za-z]+|[0-9]|[^A-Za-z0-9 ]+"
 
-  /** t18's trained merge table, trained ONCE per (session, sfDir) — the
-    * preparedTrainingSet convention. t18, t20 and x04 all consume the
-    * same 20 merges; before this memo x04 retrained them per bench rep
-    * (20 driver-sequenced jobs each time), which made it the most
-    * scheduling-sensitive query on the surface in contended runs. The
-    * memoized value is trainBpe's driver-local relation, so replays cost
-    * nothing beyond the first training. */
-  private val mergesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  private[operators] def trainedMergeTable(
-      s: SparkSession, d: String): DataFrame =
-    memoGet(mergesMemo, s, d) {
-      Bpe.trainBpe(Tables.documents(s, d), "text", numMerges = 20)
-    }
+  /** t18's trained merge table (shared: t18, t20, x04 read the same 20
+    * merges). The value is trainBpe's driver-local relation, so a
+    * consumer after the first costs nothing beyond the training. */
+  private[operators] val BpeMerges = Shared.relation("bpe_merges") { (s, d) =>
+    Bpe.trainBpe(Tables.documents(s, d), "text", numMerges = 20)
+  }
 
-  /** The memoized merge table collected for plan embedding — the one
+  /** The shared merge table collected for plan embedding — the one
     * place the (rank → left, right) column contract lives; t20 and x04
     * both consume it so the train→encode coupling cannot drift. The
     * collect is a 20-row read of a driver-local relation, not a job. */
   private def trainedMerges(s: SparkSession, d: String): Seq[(String, String)] =
-    trainedMergeTable(s, d)
+    Shared.get(s, d, BpeMerges)
       .orderBy(col("rank")).collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
 
@@ -1074,29 +1066,6 @@ object DataOps {
     }
   }
 
-  /** Shared lookup for the session-scoped memo maps below: evict entries
-    * of any other session uuid (the documented convention — other-session
-    * entries are presumed dead; two LIVE sessions merely thrash and
-    * retrain, never corrupt, because every memoized builder is a
-    * deterministic corpus function), then return the cached value or
-    * compute OUTSIDE the map and publish via `putIfAbsent`. The
-    * compute-outside shape matters: `computeIfAbsent` would run the
-    * builder — often several eager Spark jobs — under the CHM bin lock,
-    * blocking any concurrent caller whose key hashes to the same bin for
-    * the whole training. Two concurrent misses on the SAME key may both
-    * compute; the first publish wins and the loser's (value-identical)
-    * result is dropped — wasted work in a race that never happens in the
-    * one-session-per-JVM deployment, in exchange for never holding a
-    * lock across a Spark job. Storage lifetime of a dropped loser: for
-    * the builders that graftCheckpoint (preparedTrainingSet,
-    * cmCountersMemo, dedupClustersMemo, tradeRelation) the loser's
-    * localCheckpoint blocks stay pinned in executor storage until the
-    * RDD is GC'd and ContextCleaner runs — bounded by the value's own
-    * size and reclaimed automatically, but not instantly. Deliberately
-    * NOT unpersisted eagerly here: the maps also hold plain uncached
-    * DataFrames and CacheManager-backed entries (see EtlQueries.replay)
-    * where an eager unpersist is wrong, and the race itself requires two
-    * live sessions sharing a JVM. */
   /** Local-lane size gate WITHOUT an unbounded action (round-15 ask 6):
     * the round-14 lanes gated on `df.count() <= maxRows` — one O(N) job
     * per query before any work starts, which at 100 TB is a full
@@ -1133,61 +1102,22 @@ object DataOps {
         }
     }
 
-  /** Eviction hooks for [[evictSessionMemos]]: each memo-owning object
-    * registers one closure that drops (and, where it owns a cache(),
-    * unpersists) its session-scoped entries. Registration happens at
-    * object init — an object never initialized holds no memos, so a
-    * missing hook is vacuously correct. */
-  private val memoEvictionHooks =
-    new java.util.concurrent.CopyOnWriteArrayList[() => Unit]()
-  private[operators] def onMemoEvict(hook: () => Unit): Unit = {
-    memoEvictionHooks.add(hook); ()
-  }
+  /** Drop every shared relation of every session ([[Shared.evictAll]]):
+    * graft.Bench calls this before every timed query, so each query's
+    * reading prices the shared builds it reads, whatever ran before it.
+    * Values are unaffected — every shared builder is a deterministic
+    * corpus function. Cached entries are unpersisted here; dropped
+    * checkpoint blocks are reclaimed by ContextCleaner once the
+    * references are GC'd, so callers may System.gc() outside any timed
+    * region to hurry that. */
+  def evictSessionMemos(): Unit = Shared.evictAll()
 
-  /** Drop every session-scoped memo (round-15 bench-accounting ask):
-    * graft.Bench calls this BETWEEN interleaved sweeps so that each
-    * sweep rebuilds the shared relations and the reported per-query
-    * median measures the computation, not a memo hit from a previous
-    * sweep. Values are unaffected — every memoized builder is a
-    * deterministic corpus function, and rebuild costs land on the first
-    * consumer of the sweep (the same within-sweep §2.4 sharing as
-    * before). Dropped checkpoint/cache blocks are reclaimed by
-    * ContextCleaner once the references are GC'd; callers may System.gc()
-    * outside any timed region to accelerate that. */
-  def evictSessionMemos(): Unit =
-    memoEvictionHooks.forEach(h => h())
-
-  onMemoEvict { () =>
-    Seq(mergesMemo, preparedMemo, centroidsMemo, clusterMemo, cmMemo,
-      pairsMemo, shingleStatsMemo, pqMemo).foreach(_.clear())
-  }
-
-  private[operators] def memoGet(
-      map: java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame],
-      s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val uuid = org.apache.spark.sql.graft.PlanBridge.sessionUUID(s)
-    map.keys().asIterator().forEachRemaining { k =>
-      if (k._1 != uuid) { map.remove(k); () }
-    }
-    val k = (uuid, key)
-    val hit = map.get(k)
-    if (hit != null) hit
-    else {
-      val built = build
-      val prev = map.putIfAbsent(k, built)
-      if (prev != null) prev else built
-    }
-  }
-
-  /** Session-scoped memo of the x01 capstone result: x01 and x02 both
-    * consume the full curate→decontaminate→sample→pack fixpoint (the
-    * single most expensive lineage in the surface), so it materializes
-    * ONCE per (session, sfDir) via localCheckpoint — the EtlQueries
-    * replay-memo convention, including the dead-session eviction. */
-  private val preparedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  private def preparedTrainingSet(s: SparkSession, d: String): DataFrame =
-    memoGet(preparedMemo, s, d) {
+  /** The x01 capstone result (shared: x01, x02, x03, x10 read the full
+    * curate→decontaminate→sample→pack fixpoint, the single most
+    * expensive lineage in the surface), materialized via
+    * localCheckpoint. */
+  private val PreparedTrainingSet =
+    Shared.relation("prepared_training_set") { (s, d) =>
       import s.implicits._
       val docs = Tables.documents(s, d)
       prepareTrainingSet(
@@ -1195,111 +1125,77 @@ object DataOps {
         docs.filter(isBenchId($"doc_id"))).graftCheckpoint()
     }
 
-  /** Session-scoped memo of the corpus IVF centroids at a given
-    * (nCells, iterations) — `Ivf.kmeans` over the canonical full-corpus
-    * vector relation (`Tables.embeddings` → vec_id + exact
-    * float→double). s03, s05 (coarse quantizer), e06, d10, AND the s06
-    * recall report (which re-runs the s03/s05/d10 bodies) all train the
-    * SAME deterministic centroids; before this memo s06 alone re-ran
-    * k-means three times per evaluation. The memoized value is already
-    * lineage-cut (kmeans driver-localizes the centroids per round —
-    * a LocalRelation has no lineage) and bounded
-    * (≤ nCells × dim doubles) — the trainedMergeTable convention,
-    * incl. the other-session eviction (NB: the convention's sweep
-    * evicts entries of ANY other session uuid, not just dead ones —
-    * single-live-session JVMs in practice; two live sessions would
-    * thrash each other's memo and merely retrain, never corrupt). A
-    * production deployment persists the centroids next to the index
-    * (Ivf.writeIndex); this is the session-scoped equivalent. */
-  private val centroidsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  private[operators] def corpusCentroidsMemo(s: SparkSession, d: String,
-      nCells: Int, iterations: Int): DataFrame =
-    memoGet(centroidsMemo, s, s"$d#$nCells#$iterations") {
-      import s.implicits._
-      val vectors = Tables.embeddings(s, d)
-        .select($"vec_id", Similarity.toDouble($"embedding").as("v"))
-      Ivf.kmeans(vectors, nCells = nCells, iterations = iterations)
+  private def corpusVectors(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    Tables.embeddings(s, d)
+      .select($"vec_id", Similarity.toDouble($"embedding").as("v"))
+  }
+
+  /** The corpus IVF centroids at (16 cells, 3 iterations) — `Ivf.kmeans`
+    * over the canonical full-corpus vector relation (`Tables.embeddings`
+    * → vec_id + exact float→double). Shared: s03, s05 (coarse
+    * quantizer), e06 and the s06 recall report (which re-runs the
+    * s03/s05 bodies, reading it twice). Already lineage-cut (kmeans
+    * driver-localizes the centroids per round) and bounded (≤ nCells ×
+    * dim doubles). A production deployment persists the centroids next
+    * to the index (Ivf.writeIndex); this is the session-scoped
+    * equivalent. */
+  private[operators] val IvfCentroids =
+    Shared.relation("ivf_centroids_16x3") { (s, d) =>
+      Ivf.kmeans(corpusVectors(s, d), nCells = 16, iterations = 3)
     }
 
-  /** The √N-sized variant (d10's IVF parameterization): nCells =
-    * max(16, ⌈√N⌉) is itself derived from a corpus count, so it lives
-    * INSIDE the memoized builder — repeat calls (s06 re-runs the d10
-    * body per evaluation) are job-free, not one-full-scan-per-call. */
-  private[operators] def corpusSqrtCentroidsMemo(
-      s: SparkSession, d: String, iterations: Int): DataFrame =
-    memoGet(centroidsMemo, s, s"$d#sqrt#$iterations") {
-      import s.implicits._
-      val vectors = Tables.embeddings(s, d)
-        .select($"vec_id", Similarity.toDouble($"embedding").as("v"))
+  /** d10's √N-sized variant (shared: d10, s06): nCells = max(16, ⌈√N⌉)
+    * is itself derived from a corpus count, so it lives INSIDE the
+    * builder — a later consumer is job-free, not one full scan per
+    * call. */
+  private val IvfSqrtCentroids =
+    Shared.relation("ivf_centroids_sqrt_x3") { (s, d) =>
+      val vectors = corpusVectors(s, d)
       val nCells = math.max(16, math.ceil(
         math.sqrt(vectors.count().toDouble)).toInt)
-      Ivf.kmeans(vectors, nCells = nCells, iterations = iterations)
+      Ivf.kmeans(vectors, nCells = nCells, iterations = 3)
     }
 
-  /** Session-scoped memo of the d05 clustering fixpoint (trigram-Jaccard
-    * pairs → connected-component labels at the d05 defaults: n=3,
-    * minJaccard=0.05, maxDocFreq=1000). d05, d07, d13 and t30 all consume
-    * these labels and the pointer-jumping loop is their dominant cost, so
-    * the labels materialize ONCE per (session, sfDir) — the
-    * preparedTrainingSet convention, incl. dead-session eviction. NOT
-    * shared with d08 (threshold 0.5) or dedupCorpus (0.8 over normalized
-    * text): different parameterizations, different fixpoints. */
-  private val clusterMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  /** The d05 clustering fixpoint (trigram-Jaccard pairs →
+    * connected-component labels at the d05 defaults: n=3,
+    * minJaccard=0.05, maxDocFreq=1000). Shared: d05, d07, d13, d15 and
+    * t30 all read these labels and the pointer-jumping loop is their
+    * dominant cost. NOT shared with d08 (threshold 0.5) or dedupCorpus
+    * (0.8 over normalized text): different parameterizations, different
+    * fixpoints. */
+  private val DedupClusters = Shared.relation("dedup_clusters") { (s, d) =>
+    val docs = Tables.documents(s, d)
+    val pairs = Dedup.jaccardFromStats(Shared.get(s, d, ShingleStats),
+      minJaccard = 0.05)
+    ConnectedComponents.dedupClusters(docs, "doc_id", pairs)
+      .graftCheckpoint()
+  }
 
-  private val cmMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  /** The (16384, 3) per-source CM counter table, memoized per
-    * (session, sfDir) — sk03/sk04/sk05 all consume the SAME counters
-    * (that is the sketch contract: build once, answer many), so the
-    * corpus-scale token pass runs once per session, not once per query
-    * (the trainedMergeTable/preparedTrainingSet convention). */
   /** The per-(source, token) occurrence counts of the corpus trigram
-    * stream, memoized per (session, sfDir) — the shared base of the
-    * whole CM family (round 15): the counter table is a sum over it,
-    * and sk03's probe ranking, sk04's true join sizes and sk05's true
-    * F2 are all vocabulary-bound aggregates of it. Before this memo
-    * each of those paths re-exploded the corpus n-gram stream. */
-  private[operators] def cmTokenCountsMemo(
-      s: SparkSession, d: String): DataFrame =
-    memoGet(cmMemo, s, s"$d#tokcnt") {
+    * stream — the base of the whole CM family. Shared: the counter table
+    * is a sum over it, and sk03's probe ranking, sk04's true join sizes,
+    * sk05's true F2 and t37's per-source stats are all vocabulary-bound
+    * aggregates of it (sk05 reads it twice: counters and truth). */
+  private[operators] val CmTokenCounts =
+    Shared.relation("cm_token_counts") { (s, d) =>
       cmTokens(Tables.documents(s, d))
         .groupBy(col("source"), col("tok"))
         .agg(count(lit(1)).as("cnt"))
         .graftCheckpoint()
     }
-  private[operators] def cmCountersMemo(
-      s: SparkSession, d: String): DataFrame =
-    memoGet(cmMemo, s, d) {
-      cmCountersFromCounts(cmTokenCountsMemo(s, d), 16384, 3)
-        .graftCheckpoint()
-    }
-  private[operators] def dedupClustersMemo(
-      s: SparkSession, d: String): DataFrame =
-    memoGet(clusterMemo, s, d) {
-      val docs = Tables.documents(s, d)
-      val pairs = Dedup.jaccardFromStats(corpusShinglePairsMemo(s, d),
-        minJaccard = 0.05)
-      ConnectedComponents.dedupClusters(docs, "doc_id", pairs)
-        .graftCheckpoint()
-    }
 
-  /** Session-scoped memo of the corpus trigram posting-pair statistics
-    * (shinglePairStats at the engine-wide defaults n=3, cap=1000) — the
-    * single most re-derived relation in the dedup family: d02 (τ=0.05),
-    * the d05 cluster fixpoint (0.05), d08's exact truth (0.5) and x06's
-    * positives (0.5) all consume pure THRESHOLD FILTERS of this one
-    * relation (the stats are threshold-independent), yet each rebuilt
-    * the posting self-join per invocation. Build once per (session,
-    * sfDir), checkpoint, filter many — the corpusCentroidsMemo
-    * convention; values unchanged by construction. */
-  /** Session-scoped memos of the MinHash-LSH and SimHash candidate pair
-    * sets at the d03/d04 parameterizations — d08's recall report re-runs
-    * BOTH bodies per evaluation (that sharing is the report's point: it
-    * measures exactly what ships), so the pair sets materialize once per
-    * (session, sfDir) like the d05 cluster fixpoint. Values unchanged. */
+  /** The (16384, 3) per-source CM counter table. Shared: sk03, sk04 and
+    * sk05 all read the SAME counters — that is the sketch contract:
+    * build once, answer many. */
+  private[operators] val CmCounters = Shared.relation("cm_counters") { (s, d) =>
+    cmCountersFromCounts(Shared.get(s, d, CmTokenCounts), 16384, 3)
+      .graftCheckpoint()
+  }
+
+  // The MinHash-LSH and SimHash candidate pair sets at the d03/d04
+  // parameterizations (shared: d08's recall report re-runs BOTH bodies —
+  // that sharing is the report's point: it measures exactly what ships).
   // CpuHeavyMapMinBytes widen on the three signature/index builds below
   // (round 15): each starts with a per-token/per-shingle map (explode +
   // md5 / 16 minhash lanes / 64 simhash bit sums) straight off the
@@ -1308,29 +1204,28 @@ object DataOps {
   // class from the round-14 floor A/B; batch sites only, streaming's
   // per-batch calls are untouched). Values are partitioning-invariant
   // (deterministic hashes, exact counts — spec-pinned).
-  private def minhashPairsMemo(s: SparkSession, d: String): DataFrame =
-    memoGet(pairsMemo, s, s"$d#mh") {
-      Dedup.minHashLshPairs(
-        Tables.widenDense(Tables.documents(s, d),
-          Tables.CpuHeavyMapMinBytes), "doc_id", "text",
-        shingleN = 3, numPerm = 16, bands = 4, minEstJaccard = 0.5)
-        .graftCheckpoint()
-    }
-  private def simhashPairsMemo(s: SparkSession, d: String): DataFrame =
-    memoGet(pairsMemo, s, s"$d#sh") {
-      Dedup.simHashPairs(
-        Tables.widenDense(Tables.documents(s, d),
-          Tables.CpuHeavyMapMinBytes), "doc_id", "text",
-        maxDist = 3).graftCheckpoint()
-    }
-  private val pairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  private val MinhashPairs = Shared.relation("minhash_pairs") { (s, d) =>
+    Dedup.minHashLshPairs(
+      Tables.widenDense(Tables.documents(s, d),
+        Tables.CpuHeavyMapMinBytes), "doc_id", "text",
+      shingleN = 3, numPerm = 16, bands = 4, minEstJaccard = 0.5)
+      .graftCheckpoint()
+  }
+  private val SimhashPairs = Shared.relation("simhash_pairs") { (s, d) =>
+    Dedup.simHashPairs(
+      Tables.widenDense(Tables.documents(s, d),
+        Tables.CpuHeavyMapMinBytes), "doc_id", "text",
+      maxDist = 3).graftCheckpoint()
+  }
 
-  private val shingleStatsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  private[operators] def corpusShinglePairsMemo(
-      s: SparkSession, d: String): DataFrame =
-    memoGet(shingleStatsMemo, s, d) {
+  /** The corpus trigram posting-pair statistics (shinglePairStats at the
+    * engine-wide defaults n=3, cap=1000) — the most re-derived relation
+    * in the dedup family. Shared: d02 (τ=0.05), the d05 cluster fixpoint
+    * (0.05), d08's exact truth (0.5) and x06's positives (0.5) all read
+    * pure THRESHOLD FILTERS of this one relation (the stats are
+    * threshold-independent). */
+  private[operators] val ShingleStats =
+    Shared.relation("shingle_pair_stats") { (s, d) =>
       Dedup.shinglePairStats(
         Tables.widenDense(Tables.documents(s, d),
           Tables.CpuHeavyMapMinBytes), "doc_id", "text",
@@ -1372,38 +1267,50 @@ object DataOps {
   private def ivfKnnQuery(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
-    val centroids = corpusCentroidsMemo(s, d, nCells = 16, iterations = 3)
+    val centroids = Shared.get(s, d, IvfCentroids)
     val indexed = Ivf.index(emb, centroids)
     Ivf.knn(indexed, centroids, emb.filter($"vec_id" < 3), k = 5, nProbe = 4)
   }
 
-  /** Session-scoped memo of the PQ index pieces (codebooks + encoded
-    * corpus) at the s04 parameterization, and of the IVF-PQ residual
-    * index at the s05 parameterization — the corpusCentroidsMemo
-    * convention one index up: an ANN index is built once and served
-    * many times (Ivf.writeIndex is the persistent form; this is the
-    * session-scoped equivalent), and the s06 recall report re-runs both
-    * arm bodies per evaluation. Codebooks are driver-localized
-    * (LocalRelation — no lineage); the corpus-scale encoded relations
-    * are checkpointed. Values are unchanged: the memo stores the same
-    * deterministic relations every call rebuilt. */
-  private val pqMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  private def pqVectors(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    Tables.embeddings(s, d)
-      .select($"vec_id", Similarity.toDouble($"embedding").as("v"))
+  // The PQ index pieces (codebooks + encoded corpus) at the s04
+  // parameterization and the IVF-PQ residual index at the s05
+  // parameterization. Shared: s04 and s05 each with the s06 recall
+  // report, which re-runs both arm bodies — an ANN index is built once
+  // and served many times (Ivf.writeIndex is the persistent form; this
+  // is the session-scoped equivalent). Codebooks are driver-localized
+  // (LocalRelation — no lineage); the corpus-scale relations are
+  // checkpointed.
+  private val PqBooks = Shared.relation("pq_s04_books") { (s, d) =>
+    Pq.trainCodebooks(corpusVectors(s, d), dim = 64, numSubspaces = 8,
+      numCodes = 16)
   }
-  private def pqBooksMemo(s: SparkSession, d: String): DataFrame =
-    memoGet(pqMemo, s, s"$d#s04books") {
-      Pq.trainCodebooks(pqVectors(s, d), dim = 64, numSubspaces = 8,
-        numCodes = 16)
-    }
-  private def pqEncodedMemo(s: SparkSession, d: String): DataFrame =
-    memoGet(pqMemo, s, s"$d#s04encoded") {
-      Pq.encode(pqVectors(s, d), pqBooksMemo(s, d), dim = 64,
-        numSubspaces = 8).graftCheckpoint()
-    }
+  private val PqEncoded = Shared.relation("pq_s04_encoded") { (s, d) =>
+    Pq.encode(corpusVectors(s, d), Shared.get(s, d, PqBooks), dim = 64,
+      numSubspaces = 8).graftCheckpoint()
+  }
+  private val IvfPqAssigned = Shared.relation("ivfpq_s05_assigned") { (s, d) =>
+    Ivf.index(Tables.embeddings(s, d), Shared.get(s, d, IvfCentroids))
+      .graftCheckpoint(true)
+  }
+  private val IvfPqResiduals = Shared.relation("ivfpq_s05_resid") { (s, d) =>
+    import s.implicits._
+    Shared.get(s, d, IvfPqAssigned)
+      .join(broadcast(Shared.get(s, d, IvfCentroids)), "cell")
+      .select($"vec_id", $"cell",
+        zip_with($"v", $"centroid", (x, c) => x - c).as("v"))
+      .graftCheckpoint(true)
+  }
+  private val IvfPqBooks = Shared.relation("ivfpq_s05_books") { (s, d) =>
+    Pq.trainCodebooks(Shared.get(s, d, IvfPqResiduals).select("vec_id", "v"),
+      dim = 64, numSubspaces = 8, numCodes = 16)
+  }
+  private val IvfPqEncoded = Shared.relation("ivfpq_s05_encoded") { (s, d) =>
+    val resid = Shared.get(s, d, IvfPqResiduals)
+    Pq.encode(resid.select("vec_id", "v"), Shared.get(s, d, IvfPqBooks),
+        dim = 64, numSubspaces = 8)
+      .join(resid.select("vec_id", "cell"), "vec_id")
+      .graftCheckpoint()
+  }
 
   /** s04: PQ (8×16 codebooks, ADC shortlist + exact rerank) top-5. */
   private def pqKnnQuery(s: SparkSession, d: String): DataFrame = {
@@ -1411,8 +1318,9 @@ object DataOps {
     val emb = Tables.embeddings(s, d)
     val probes = emb.filter($"vec_id" < 3).select($"vec_id".as("probe_id"),
       Similarity.toDouble($"embedding").as("q"))
-    Pq.searchKnn(pqEncodedMemo(s, d), pqBooksMemo(s, d), pqVectors(s, d),
-      probes, dim = 64, numSubspaces = 8, k = 5, shortlist = 50)
+    Pq.searchKnn(Shared.get(s, d, PqEncoded), Shared.get(s, d, PqBooks),
+      corpusVectors(s, d), probes, dim = 64, numSubspaces = 8, k = 5,
+      shortlist = 50)
   }
 
   /** s05: IVF-PQ (coarse prune + residual codes + broadcast LUTs) top-5.
@@ -1422,31 +1330,10 @@ object DataOps {
   private def ivfPqKnnQuery(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
-    val coarse = corpusCentroidsMemo(s, d, nCells = 16, iterations = 3)
-    // index pieces memoized per (session, sfDir) — s05's own reps and
-    // the s06 recall arm serve from ONE build (see pqBooksMemo)
-    val assigned = memoGet(pqMemo, s, s"$d#s05assigned") {
-      Ivf.index(emb, coarse).graftCheckpoint(true)
-    }
-    val resid = memoGet(pqMemo, s, s"$d#s05resid") {
-      assigned.join(broadcast(coarse), "cell")
-        .select($"vec_id", $"cell",
-          zip_with($"v", $"centroid", (x, c) => x - c).as("v"))
-        .graftCheckpoint(true)
-    }
-    val books = memoGet(pqMemo, s, s"$d#s05books") {
-      Pq.trainCodebooks(resid.select($"vec_id", $"v"),
-        dim = 64, numSubspaces = 8, numCodes = 16)
-    }
-    val encodedCells = memoGet(pqMemo, s, s"$d#s05encoded") {
-      Pq.encode(resid.select($"vec_id", $"v"), books,
-          dim = 64, numSubspaces = 8)
-        .join(resid.select($"vec_id", $"cell"), "vec_id")
-        .graftCheckpoint()
-    }
     val probes = emb.filter($"vec_id" < 3).select($"vec_id".as("probe_id"),
       Similarity.toDouble($"embedding").as("q"))
-    Pq.ivfPqKnn(assigned, coarse, books, encodedCells, probes,
+    Pq.ivfPqKnn(Shared.get(s, d, IvfPqAssigned), Shared.get(s, d, IvfCentroids),
+      Shared.get(s, d, IvfPqBooks), Shared.get(s, d, IvfPqEncoded), probes,
       dim = 64, numSubspaces = 8, nProbe = 4, k = 5, shortlist = 30)
   }
 
@@ -1497,7 +1384,7 @@ object DataOps {
   }
 
   /** [[canonicalDedup]] over pre-computed d05 cluster labels — the d13
-    * query feeds [[dedupClustersMemo]] here so the fixpoint is shared
+    * query feeds [[DedupClusters]] here so the fixpoint is shared
     * with d05/d07/t30 instead of re-run. */
   def canonicalFromClusters(docs: DataFrame, clusters: DataFrame): DataFrame = {
     val quality = docs.select(col("doc_id"),
@@ -1525,8 +1412,8 @@ object DataOps {
     // while kmeans stays N^1.5 too. Recall is cell-count-robust here:
     // near-dup pairs are far tighter than cell diameter, and the floor
     // spec pins it with planted dups. The √N sizing count lives inside
-    // the memoized builder, so repeat calls scan nothing.
-    val centroids = corpusSqrtCentroidsMemo(s, d, iterations = 3)
+    // the shared builder, so repeat calls scan nothing.
+    val centroids = Shared.get(s, d, IvfSqrtCentroids)
     Dedup.semanticDupPairs(vectors, centroids, minCosSim = 0.45, nProbe = 3)
   }
 
@@ -1809,7 +1696,7 @@ object DataOps {
     // is one map-side expression).
     "t30_leakage_safe_split" -> { (s, d) =>
       import s.implicits._
-      dedupClustersMemo(s, d)
+      Shared.get(s, d, DedupClusters)
         .withColumn("bucket", md5Bucket($"cluster") % 100)
         .withColumn("split",
           when($"bucket" < 80, "train")
@@ -1890,7 +1777,7 @@ object DataOps {
     // from the clustering output (what a pipeline logs per batch).
     "d07_dedup_report" -> { (s, d) =>
       import s.implicits._
-      dedupClustersMemo(s, d)
+      Shared.get(s, d, DedupClusters)
         .agg(count(lit(1)).as("n_docs"),
           sum(when($"keeper", 1L).otherwise(0L)).as("n_keepers"),
           sum(when($"keeper", 0L).otherwise(1L)).as("n_dups"))
@@ -1904,9 +1791,9 @@ object DataOps {
 
     // Exact trigram-Jaccard near-dup pairs (inverted-index join).
     "d02_jaccard_pairs" -> { (s, d) =>
-      // τ-filter of the session-memoized corpus posting-pair stats
-      // (same values as the per-call build — see corpusShinglePairsMemo)
-      Dedup.jaccardFromStats(corpusShinglePairsMemo(s, d),
+      // τ-filter of the shared corpus posting-pair stats
+      // (same values as the per-call build — see ShingleStats)
+      Dedup.jaccardFromStats(Shared.get(s, d, ShingleStats),
         minJaccard = 0.05)
     },
 
@@ -1920,7 +1807,7 @@ object DataOps {
     "d16_exact_jaccard_pairs" -> { (s, d) =>
       // low-floor widen (round 15): the shingle explode + per-doc
       // sorted-inventory build off a sub-4 MB corpus file otherwise
-      // runs on one core — see the pairs-memo widen block
+      // runs on one core — see the MinhashPairs widen block
       Tables.widenDense(Tables.documents(s, d),
           Tables.CpuHeavyMapMinBytes).transform(df =>
         Dedup.prefixFilterJaccardPairs(df, "doc_id", "text", n = 3,
@@ -1955,7 +1842,7 @@ object DataOps {
 
     // Full dedup clustering: trigram-Jaccard pairs → connected components
     // → cluster id + canonical-keeper flag per document.
-    "d05_dedup_clusters" -> ((s, d) => dedupClustersMemo(s, d)),
+    "d05_dedup_clusters" -> ((s, d) => Shared.get(s, d, DedupClusters)),
 
     // Quality-aware canonical selection: d05 keeps min-id per cluster; a
     // real curation pipeline keeps the BEST duplicate. One row per
@@ -1967,7 +1854,7 @@ object DataOps {
     // no window over the corpus; ties are impossible because doc_id
     // makes the ordering key unique.
     "d13_canonical_dedup" -> ((s, d) =>
-      canonicalFromClusters(Tables.documents(s, d), dedupClustersMemo(s, d))),
+      canonicalFromClusters(Tables.documents(s, d), Shared.get(s, d, DedupClusters))),
 
     // Soft dedup: instead of dropping near-duplicates, every document
     // gets sampling weight 1/|cluster| so each near-dup FAMILY
@@ -1976,9 +1863,9 @@ object DataOps {
     // families that still carry unique spans). Consumes the shared d05
     // fixpoint; the weight pass itself is one partial-aggregating
     // groupBy on cluster + a broadcast-size join back, so the cost
-    // beyond the memoized clustering is O(docs) with one exchange.
+    // beyond the shared clustering is O(docs) with one exchange.
     "d15_soft_dedup_weights" -> { (s, d) =>
-      val clusters = dedupClustersMemo(s, d).select(col("doc_id"),
+      val clusters = Shared.get(s, d, DedupClusters).select(col("doc_id"),
         col("cluster"))
       val sizes = clusters.groupBy(col("cluster"))
         .agg(count(lit(1)).as("cluster_size"))
@@ -2000,13 +1887,13 @@ object DataOps {
     // floor spec stays as the semantic gate.
     "d08_dedup_recall" -> { (s, d) =>
       import s.implicits._
-      // all three arms are session-memoized relations (the report
+      // all three arms are shared relations (the report
       // measures exactly the shipped d02/d03/d04 parameterizations);
-      // the truth set is a τ-filter of the shared shingle-stats memo
-      val truth = Dedup.jaccardFromStats(corpusShinglePairsMemo(s, d),
+      // the truth set is a τ-filter of the shared shingle stats
+      val truth = Dedup.jaccardFromStats(Shared.get(s, d, ShingleStats),
         minJaccard = 0.5).select($"doc_a", $"doc_b")
-      val mh = minhashPairsMemo(s, d).select($"doc_a", $"doc_b")
-      val sh = simhashPairsMemo(s, d).select($"doc_a", $"doc_b")
+      val mh = Shared.get(s, d, MinhashPairs).select($"doc_a", $"doc_b")
+      val sh = Shared.get(s, d, SimhashPairs).select($"doc_a", $"doc_b")
       // all-lazy: three 1-row aggregates crossed into the report row
       val nTruth = truth.agg(count(lit(1)).as("n_truth"))
       val nMhHit = truth.join(mh, Seq("doc_a", "doc_b"), "left_semi")
@@ -2029,14 +1916,14 @@ object DataOps {
     // ~n²/2^64). Star degradation never fires at test SFs (measured max
     // band bucket: 4 docs at sf0.1 vs cap 1000), so the semantic pair
     // set IS the engine's output — the c04/sk01 argument.
-    "d03_minhash_pairs" -> ((s, d) => minhashPairsMemo(s, d)),
+    "d03_minhash_pairs" -> ((s, d) => Shared.get(s, d, MinhashPairs)),
 
     // SimHash near-dup pairs, Hamming ≤ 3 — EXACTLY oracled: fingerprint
     // bits are md5-defined majorities, and the pigeonhole buckets are the
     // RAW 16-bit chunk values (no grouping hash at all), so the oracle
     // reproduces candidates and popcounts verbatim. Measured max chunk
     // bucket 291 docs at sf0.1 (cap 1000): star mode never fires here.
-    "d04_simhash_pairs" -> ((s, d) => simhashPairsMemo(s, d)),
+    "d04_simhash_pairs" -> ((s, d) => Shared.get(s, d, SimhashPairs)),
 
     // Exact brute-force cosine top-5 for probe vectors 0-2.
     "s01_brute_knn" -> { (s, d) =>
@@ -2230,8 +2117,8 @@ object DataOps {
     // probe a fixed watchlist and drop the truth lane).
     "sk03_cm_freq" -> { (s, d) =>
       cmFreqEstimates(Tables.documents(s, d), width = 16384, depth = 3,
-        topN = 40, preCounters = Some(cmCountersMemo(s, d)),
-        preTokenCounts = Some(cmTokenCountsMemo(s, d)))
+        topN = 40, preCounters = Some(Shared.get(s, d, CmCounters)),
+        preTokenCounts = Some(Shared.get(s, d, CmTokenCounts)))
     },
 
     // sk04: pairwise source JOIN-SIZE estimation from the CM sketches
@@ -2245,8 +2132,8 @@ object DataOps {
     // rel_err is measured in-row, not claimed.
     "sk04_cm_join_size" -> { (s, d) =>
       cmJoinSizes(Tables.documents(s, d), width = 16384, depth = 3,
-        preCounters = Some(cmCountersMemo(s, d)),
-        preTokenCounts = Some(cmTokenCountsMemo(s, d)))
+        preCounters = Some(Shared.get(s, d, CmCounters)),
+        preTokenCounts = Some(Shared.get(s, d, CmTokenCounts)))
     },
 
     // o09: column profiler — the per-column null/cardinality/range
@@ -2291,12 +2178,12 @@ object DataOps {
     // comma-joined list) next to the x02 counts: the integrity record
     // a dataset release ships so a consumer can prove the shard they
     // downloaded is the shard that was published (and a re-run
-    // reproduced the same cut). Shard membership rides the memoized
+    // reproduced the same cut). Shard membership rides the shared
     // x01 training set; per-shard id lists are bounded by shard size
     // (8 chunks), so the collect_list never sees corpus-scale groups.
     "x10_release_manifest" -> { (s, d) =>
       import s.implicits._
-      preparedTrainingSet(s, d)
+      Shared.get(s, d, PreparedTrainingSet)
         .groupBy(expr("first_chunk div 8").as("shard"))
         .agg(count(lit(1)).as("n_docs"),
           sum($"n_tokens").as("n_tokens"),
@@ -2404,14 +2291,14 @@ object DataOps {
     // lane rides the vocab-bound aggregation for the in-row rel_err.
     "sk05_cm_skew" -> { (s, d) =>
       import s.implicits._
-      val est = cmCountersMemo(s, d)
+      val est = Shared.get(s, d, CmCounters)
         .groupBy($"source", $"j")
         .agg(sum(($"c".cast("decimal(38,0)") * $"c")
           .cast("decimal(38,0)")).as("__f2j"))
         .groupBy($"source").agg(min($"__f2j").as("__est"))
       // truth over the shared counted relation (round 15) — the corpus
       // n-gram explode no longer re-runs for this lane
-      val truth = cmTokenCountsMemo(s, d)
+      val truth = Shared.get(s, d, CmTokenCounts)
         .select($"source", $"cnt".as("__c"))
         .groupBy($"source")
         .agg(sum($"__c").as("n_grams"),
@@ -2815,7 +2702,7 @@ object DataOps {
     // holdout, the c01/c02 benchmark stand-in) → temperature-sample →
     // pack. Value-oracled END-TO-END (trainingSetSql composes the
     // stages' own oracle fragments), plus the subset/tiling spec.
-    "x01_training_set" -> ((s, d) => preparedTrainingSet(s, d)),
+    "x01_training_set" -> ((s, d) => Shared.get(s, d, PreparedTrainingSet)),
 
     // x02's WRITE side as a driver-checkable query: the x01 pipeline
     // materialized as token-balanced shards, returning the manifest the
@@ -2823,7 +2710,7 @@ object DataOps {
     // on disk, so a green row here oracle-verifies the physical write
     // (partition layout + read-back types), not just the plan.
     "x02_shard_manifest" -> { (s, d) =>
-      writeTrainingShards(preparedTrainingSet(s, d), stagingDir("x02", d))
+      writeTrainingShards(Shared.get(s, d, PreparedTrainingSet), stagingDir("x02", d))
     },
 
     // x03: the x02 shards as JSONL (the LLM-training interchange
@@ -2831,7 +2718,7 @@ object DataOps {
     // green row oracle-verifies the serialize→parse round trip against
     // the same closed-form shard aggregation as x02.
     "x03_jsonl_manifest" -> { (s, d) =>
-      writeJsonlShards(preparedTrainingSet(s, d), stagingDir("x03", d))
+      writeJsonlShards(Shared.get(s, d, PreparedTrainingSet), stagingDir("x03", d))
     },
 
     // x04: context-window packing by TRUE tokenizer counts — train the
@@ -2956,7 +2843,7 @@ object DataOps {
     "x06_contrastive_pairs" -> { (s, d) =>
       import s.implicits._
       val docs = Tables.documents(s, d)
-      val pos = Dedup.jaccardFromStats(corpusShinglePairsMemo(s, d),
+      val pos = Dedup.jaccardFromStats(Shared.get(s, d, ShingleStats),
           minJaccard = 0.5)
         .select($"doc_a".as("anchor"), $"doc_b".as("paired_doc"))
       val anchors = pos.select($"anchor").distinct()
@@ -3747,7 +3634,7 @@ object DataOps {
     // runs its jobs eagerly; no SQL oracle (a 20-round fixpoint isn't a
     // query) — golden-merge and monotonicity specs gate it instead.
     "t18_bpe_merges" -> { (s, d) =>
-      trainedMergeTable(s, d)
+      Shared.get(s, d, BpeMerges)
     },
 
     // Tokenizer APPLICATION: encode the corpus with its own t18-trained
@@ -4010,7 +3897,7 @@ object DataOps {
       import s.implicits._
       import graft.functions.TopKPairs.top_k_pairs
       val emb = Tables.embeddings(s, d)
-      val centroids = corpusCentroidsMemo(s, d, nCells = 16, iterations = 3)
+      val centroids = Shared.get(s, d, IvfCentroids)
       Ivf.index(emb, centroids)
         .select($"cell", md5Bucket($"vec_id").as("__bkt"), $"vec_id")
         .groupBy($"cell")
@@ -4111,7 +3998,7 @@ object DataOps {
     // five times). The number a data-mixture plan should budget
     // against: raw counts overstate what a deduplicating trainer will
     // see. Per-doc contributions round 6 dp then sum through DECIMAL
-    // (the t13 convention); clusters ride the memoized d05 fixpoint
+    // (the t13 convention); clusters ride the shared d05 fixpoint
     // the rest of the d-family shares.
     "t36_effective_tokens" -> { (s, d) =>
       import s.implicits._
@@ -4176,10 +4063,10 @@ object DataOps {
     "t37_js_pairs" -> { (s, d) =>
       import s.implicits._
       // the per-(source, 3-gram) counts are the SAME relation the CM
-      // family builds (round 15): consume the shared checkpointed memo
+      // family builds (round 15): consume the shared checkpointed relation
       // instead of re-running the corpus explode + aggregate three
       // times (tot, a, b below all re-derived it)
-      val st = cmTokenCountsMemo(s, d).select($"source", $"tok",
+      val st = Shared.get(s, d, CmTokenCounts).select($"source", $"tok",
         $"cnt".as("c"))
       val tot = st.groupBy($"source").agg(sum($"c").as("n"))
       val sided = st.join(broadcast(tot), "source")
@@ -7251,7 +7138,7 @@ object DataOps {
         |FROM tr LEFT JOIN sm ON tr.event_type = sm.event_type""".stripMargin,
 
     // d15's recursive-CTE clustering verbatim, extended with the token
-    // ledger (the oracle-side twin of riding the memoized d05 fixpoint)
+    // ledger (the oracle-side twin of riding the shared d05 fixpoint)
     "t36_effective_tokens" ->
       """WITH RECURSIVE
         |toks AS (SELECT doc_id, source, string_split(text, ' ') t

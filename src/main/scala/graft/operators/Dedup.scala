@@ -59,12 +59,6 @@ object Dedup {
     *     connected-components clustering — dropping it would silently
     *     keep every member — at the cost of pair-level recall inside the
     *     cluster (members pair via the representative, not all-pairs). */
-  /** Test-scope window into [[bucketPairs]] for the D12Probe stage
-    * decomposition — never part of the shipped query surface. */
-  private[operators] def bucketPairsForProbe(items: DataFrame,
-      keyCols: Seq[String], payload: Column, cap: Long): DataFrame =
-    bucketPairs(items, keyCols, payload, cap, starHot = false)
-
   private def bucketPairs(items: DataFrame, keyCols: Seq[String],
       payload: Column, cap: Long, starHot: Boolean): DataFrame = {
     val keys = keyCols.map(col)
@@ -147,9 +141,10 @@ object Dedup {
 
   /** The threshold tail of [[ngramJaccardPairs]] over an already-built
     * [[shinglePairStats]] relation — factored out (round 14) so the
-    * corpus-default stats relation can be session-memoized and served
-    * to every consumer threshold (the stats are threshold-independent;
-    * a higher τ is a pure filter of the same relation). */
+    * corpus-default stats relation can be one shared relation
+    * (DataOps.ShingleStats) served to every consumer threshold (the
+    * stats are threshold-independent; a higher τ is a pure filter of
+    * the same relation). */
   private[operators] def jaccardFromStats(stats: DataFrame,
       minJaccard: Double): DataFrame =
     stats
@@ -777,7 +772,7 @@ object Dedup {
     // right), so the index build is MAP-ONLY: the former explode →
     // groupBy(doc, h) shape shuffled one narrow row per corpus
     // CHARACTER (sf2: ~40M rows, measured as 80% of the whole
-    // operator's runtime in the D12Probe decomposition) to produce the
+    // operator's runtime in a per-stage decomposition) to produce the
     // same relation this emits directly. Per-document dedup state is
     // bounded by the doc's own distinct-window count. CHECKPOINT the
     // (doc, h, pos, h2) result before bucketPairs: its two deliberate

@@ -119,7 +119,7 @@ object Graph {
     val localOk = edges.sparkSession.conf
       .get("graft.localIterate", "true").toBoolean
     // one O(E) count gates the lane; on the big path it reads
-    // checkpointed blocks (or the memoized trade relation) — one cheap
+    // checkpointed blocks (or the shared trade relation) — one cheap
     // extra job against ~9 saved per round on the small path
     if (localOk && underEdgeGate(e))
       return localPowerIterate(e, iterations, damping, seeds)
@@ -1421,55 +1421,41 @@ object Graph {
   }
 
   /** The (customer, supplier, lineitem-count) trade relation every
-    * g-family query projects its graph from, memoized per (session,
-    * sfDir) — the corpusCentroidsMemo convention. Fifteen registrations
-    * consume this same 6M-row orders⋈lineitem aggregate; before the memo
-    * each rebuilt it per invocation (~11 s of the 38 s g04 paid at sf1
-    * was this join). The memoized value is checkpointed (lineage-cut,
-    * blocks shared), deterministic (a plain aggregate), and every
-    * consumer layers its own filters/projections on top. */
-  /** The lp01/g07 shared inputs and labels: both queries spread labels
-    * over the SAME weighted symmetrized trade graph (that sharing is the
-    * point — g07 scores lp01's communities), so the vote fixpoint
-    * memoizes per (session, sfDir) like [[tradeRelation]] — values
-    * unchanged, the two queries just stop re-running the identical
-    * 2-round propagation. */
+    * g-family query projects its graph from (shared: g01–g13 and lp01
+    * read this same 6M-row orders⋈lineitem aggregate; ~11
+    * s of the 38 s g04 paid at sf1 was this join when each rebuilt it).
+    * Checkpointed (lineage-cut, blocks shared) and deterministic (a
+    * plain aggregate); every consumer layers its own filters and
+    * projections on top, and most read it 2+ times (union branches, the
+    * cap probe, the pair self-join). */
+  private val TradeRelation = Shared.relation("trade_relation") { (s, d) =>
+    Tables.orders(s, d)
+      .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
+      .groupBy(col("o_custkey").as("c"), col("l_suppkey").as("sp"))
+      .agg(count(lit(1)).as("w"))
+      .graftCheckpoint(true)
+  }
+
+  /** The lp01/g07 weighted symmetrized trade graph and its labels
+    * (shared: g07 scores lp01's communities, so both read the SAME
+    * 2-round vote fixpoint). */
   private def lpEdges(s: SparkSession, d: String): DataFrame = {
-    val cs = tradeRelation(s, d)
+    val cs = Shared.get(s, d, TradeRelation)
     cs.select((col("c") * 2).as("src"),
         (col("sp") * 2 + 1).as("dst"), col("w"))
       .union(cs.select((col("sp") * 2 + 1).as("src"),
         (col("c") * 2).as("dst"), col("w")))
   }
-  private val lpMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  private def spreadLabelsMemo(s: SparkSession, d: String): DataFrame =
-    DataOps.memoGet(lpMemo, s, d) {
-      val nodes = Tables.customer(s, d)
-        .select((col("c_custkey") * 2).as("id"),
-          col("c_nationkey").cast("long").as("label"))
-        .union(Tables.supplier(s, d)
-          .select((col("s_suppkey") * 2 + 1).as("id"),
-            lit(null).cast("long").as("label")))
-      Graph.labelSpread(nodes, lpEdges(s, d), iterations = 2,
-        clampSeeds = false)
-    }
-
-  private val tradeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  DataOps.onMemoEvict { () => lpMemo.clear(); tradeMemo.clear() }
-  private def tradeRelation(s: SparkSession, d: String): DataFrame =
-    DataOps.memoGet(tradeMemo, s, d) {
-      Tables.orders(s, d)
-        .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("o_custkey").as("c"), col("l_suppkey").as("sp"))
-        .agg(count(lit(1)).as("w"))
-        // every consumer reads this 2+ times (union branches, the cap
-        // probe, the pair self-join) — materialize the 6M-row join once
-        // per SESSION instead of re-shuffling it per branch/query (the
-        // pageRank e/norm convention, widened by the memo)
-        .graftCheckpoint(true)
-    }
+  private val SpreadLabels = Shared.relation("lp_spread_labels") { (s, d) =>
+    val nodes = Tables.customer(s, d)
+      .select((col("c_custkey") * 2).as("id"),
+        col("c_nationkey").cast("long").as("label"))
+      .union(Tables.supplier(s, d)
+        .select((col("s_suppkey") * 2 + 1).as("id"),
+          lit(null).cast("long").as("label")))
+    Graph.labelSpread(nodes, lpEdges(s, d), iterations = 2,
+      clampSeeds = false)
+  }
 
   /** Co-purchase projection: canonical (ca < cb) customer pairs sharing
     * at least `minShared` suppliers in `cs` — posting-list pair
@@ -1501,7 +1487,7 @@ object Graph {
     * partitions live in one integer keyspace and every join below stays
     * a plain long equi-join. */
   private def tradeEdges(s: SparkSession, d: String): DataFrame = {
-    val cs = tradeRelation(s, d).select(col("c"), col("sp"))
+    val cs = Shared.get(s, d, TradeRelation).select(col("c"), col("sp"))
     cs.select((col("c") * 2).as("src"), (col("sp") * 2 + 1).as("dst"))
       .union(cs.select((col("sp") * 2 + 1).as("src"), (col("c") * 2).as("dst")))
   }
@@ -1533,7 +1519,7 @@ object Graph {
     // oracled operator must fail rather than silently degrade when a
     // hot bucket breaks the fan-out bound. Integer-exact, fully oracled.
     "g03_triangle_counts" -> { (s, d) =>
-      val cs = tradeRelation(s, d).filter(col("w") >= 2)
+      val cs = Shared.get(s, d, TradeRelation).filter(col("w") >= 2)
         .select(col("c"), col("sp"))
       val cop = copurchaseEdges(cs, minShared = 2,
         maxSupplierDeg = 50000L)
@@ -1550,7 +1536,7 @@ object Graph {
     // 2T / d(d−1) is one integer-over-integer division, round 9;
     // degree-1 vertices are NULL (undefined), never a 0-division.
     "g13_clustering_coeff" -> { (s, d) =>
-      val cs = tradeRelation(s, d).filter(col("w") >= 2)
+      val cs = Shared.get(s, d, TradeRelation).filter(col("w") >= 2)
         .select(col("c"), col("sp"))
       val cop = copurchaseEdges(cs, minShared = 2,
         maxSupplierDeg = 50000L)
@@ -1572,7 +1558,7 @@ object Graph {
         .filter(col("c_nationkey") === 0)
         .select((col("c_custkey") * 2).as("id"))
       // tradeEdges is a DISJOINT union (even-src ∪ odd-src) of two
-      // projections of the memoized distinct (c, sp) relation — distinct
+      // projections of the shared distinct (c, sp) relation — distinct
       // by construction, blocks already materialized
       Graph.personalizedPageRank(tradeEdges(s, d), seeds,
           iterations = 10, assumeDistinctEdges = true)
@@ -1593,7 +1579,7 @@ object Graph {
     // (clampSeeds=false). Two rounds = two nested aggregate CTEs in the
     // oracle, so the whole iterative operator is value-exact-checked.
     "lp01_label_spread" -> { (s, d) =>
-      spreadLabelsMemo(s, d)
+      Shared.get(s, d, SpreadLabels)
         .select(
           when(col("id") % 2 === 0, lit("customer"))
             .otherwise(lit("supplier")).as("kind"),
@@ -1613,7 +1599,7 @@ object Graph {
     // proves convergence within the oracle's unroll depth (sf0.1
     // measures 13 peel rounds, 7897 -> 2737 vertices — a real cascade).
     "g05_kcore" -> { (s, d) =>
-      val cs = tradeRelation(s, d).filter(col("w") >= 2)
+      val cs = Shared.get(s, d, TradeRelation).filter(col("w") >= 2)
         .select(col("c"), col("sp"))
       val cop = copurchaseEdges(cs, minShared = 1,
         maxSupplierDeg = 50000L)
@@ -1635,7 +1621,7 @@ object Graph {
     // trick at edge granularity); Spark throws past 24 rounds, so green
     // proves convergence inside the unroll depth.
     "g06_ktruss" -> { (s, d) =>
-      val cs = tradeRelation(s, d).filter(col("w") >= 2)
+      val cs = Shared.get(s, d, TradeRelation).filter(col("w") >= 2)
         .select(col("c"), col("sp"))
       val cop = copurchaseEdges(cs, minShared = 2,
         maxSupplierDeg = 50000L)
@@ -1653,11 +1639,11 @@ object Graph {
     // invariance) and the driver records rows-only. Ranks are rounded to
     // 10 dp for a stable dump; sum(rank) ≈ 1 is part of the spec gate.
     "g02_pagerank" -> { (s, d) =>
-      // (c, sp) is the memoized relation's GROUP BY key, so the directed
+      // (c, sp) is the shared relation's GROUP BY key, so the directed
       // projection is distinct by construction and rides checkpointed
       // blocks — the operator's own dedup pass would re-prove it with a
       // full O(E) shuffle
-      val directed = tradeRelation(s, d)
+      val directed = Shared.get(s, d, TradeRelation)
         .select((col("c") * 2).as("src"), (col("sp") * 2 + 1).as("dst"))
       Graph.pageRank(directed, iterations = 10,
           assumeDistinctEdges = true)
@@ -1676,7 +1662,8 @@ object Graph {
     // CTEs) and stacks the modularity aggregation on top — the iterative
     // operator AND its quality metric checked end-to-end in one row set.
     "g07_modularity" -> { (s, d) =>
-      val labeled = spreadLabelsMemo(s, d).select(col("id"), col("label"))
+      val labeled = Shared.get(s, d, SpreadLabels)
+        .select(col("id"), col("label"))
       Graph.modularityByLabel(labeled, lpEdges(s, d))
     },
 
@@ -1689,7 +1676,7 @@ object Graph {
     // after convergence), and the Spark side throws past 14 improving
     // rounds, so green proves convergence inside the unroll depth.
     "g08_sssp" -> { (s, d) =>
-      val cs = tradeRelation(s, d)
+      val cs = Shared.get(s, d, TradeRelation)
       val cost = when(col("w") >= 4, 1L).when(col("w") >= 2, 2L)
         .otherwise(3L)
       val edges = cs.select((col("c") * 2).as("src"),
@@ -1715,7 +1702,7 @@ object Graph {
     // 9 dp-rounded divisions; triangles reuse the canonical a<b<c
     // 3-join, counted once each. Cross-joins are 1-row × 1-row.
     "g10_graph_summary" -> { (s, d) =>
-      val cs = tradeRelation(s, d).filter(col("w") >= 2)
+      val cs = Shared.get(s, d, TradeRelation).filter(col("w") >= 2)
         .select(col("c"), col("sp"))
       val cop = copurchaseEdges(cs, minShared = 2,
           maxSupplierDeg = 50000L)
@@ -1791,7 +1778,7 @@ object Graph {
     // labels and the distribution. Exact: sizes and counts are
     // integers; vertex_share is one division rounded 9 dp.
     "g12_components" -> { (s, d) =>
-      val cs = tradeRelation(s, d).filter(col("w") >= 2)
+      val cs = Shared.get(s, d, TradeRelation).filter(col("w") >= 2)
         .select(col("c"), col("sp"))
       val cop = copurchaseEdges(cs, minShared = 2,
         maxSupplierDeg = 50000L)
@@ -1807,7 +1794,7 @@ object Graph {
     // decimal-summed AA terms (the t13 ln convention), unique top-k
     // order key — fully value-oracled including the k cut.
     "g09_link_prediction" -> { (s, d) =>
-      val cs = tradeRelation(s, d).filter(col("w") >= 2)
+      val cs = Shared.get(s, d, TradeRelation).filter(col("w") >= 2)
         .select(col("c"), col("sp"))
       val cop = copurchaseEdges(cs, minShared = 2,
         maxSupplierDeg = 50000L)

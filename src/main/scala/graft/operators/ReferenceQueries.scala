@@ -35,7 +35,7 @@ object ReferenceQueries {
   private def ensureViews(s: SparkSession): Unit = {
     // Re-register unconditionally: other query packs may bind the same
     // view names to other tables (the temp-view namespace is shared per
-    // session); the EtlQueries memo makes this free.
+    // session); the shared replay relations make this free.
     EtlQueries.replay(s, "tracking").createOrReplaceTempView("tracking")
     EtlQueries.replay(s, "events").createOrReplaceTempView("events")
   }

@@ -21,7 +21,8 @@ import org.apache.spark.sql.SparkSession
   *   sbt "Test/runMain graft.etl.pgwire.EtlScaleBench /tmp/etl_corpus_10x"
   *
   * Timings are cold-lineage per leg (fresh DataFrame each time; the
-  * session-memo layer in EtlQueries is deliberately bypassed by calling
+  * shared replay relations of EtlQueries — built once per session, see
+  * graft.operators.Shared — are deliberately bypassed by calling
   * Pipelines directly). The sink leg stages through COPY + set-based
   * promotion into a throwaway table per leg, dropped afterwards, so the
   * two legs see the same cluster state.

@@ -280,28 +280,28 @@ class DataOpsSpec extends SparkSpec {
 
   test("centroid memo under two LIVE sessions: thrash (retrain) allowed, " +
     "values identical, own-session entries kept within a session") {
-    // The memo convention's eviction sweeps entries of ANY other session
-    // uuid — documented as "two live sessions thrash each other's memo
-    // and merely retrain, never corrupt". This pins both halves of that
-    // claim: alternating the SAME key between two live sessions retrains
-    // (allowed — the eviction removed the other session's entry) yet
-    // every retraining lands on identical centroid values (required —
-    // the builder is a deterministic corpus function), and repeated
+    // The shared-relation registry's sweep drops entries of ANY other
+    // session uuid — documented as "two live sessions merely rebuild each
+    // other's entries, never read a wrong one". This pins both halves of
+    // that claim: alternating the SAME key between two live sessions
+    // retrains (allowed — the sweep removed the other session's entry)
+    // yet every retraining lands on identical centroid values (required
+    // — the builder is a deterministic corpus function), and repeated
     // calls WITHIN one session return the identical cached DataFrame
-    // (the memo still memoizes when only one session is active).
+    // (the registry still shares when only one session is active).
     val d = sf("sf0.001")
     val s2 = spark.newSession()
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.orderBy($"cell").collect().map(_.toString).toSeq
-    val a1 = DataOps.corpusCentroidsMemo(spark, d, nCells = 16, iterations = 3)
-    val a1Again = DataOps.corpusCentroidsMemo(spark, d, nCells = 16, iterations = 3)
+    val a1 = Shared.get(spark, d, DataOps.IvfCentroids)
+    val a1Again = Shared.get(spark, d, DataOps.IvfCentroids)
     assert(a1 eq a1Again, "same session must hit the cached instance")
     val va = rows(a1)
-    val b1 = DataOps.corpusCentroidsMemo(s2, d, nCells = 16, iterations = 3)
+    val b1 = Shared.get(s2, d, DataOps.IvfCentroids)
     assert(!(b1 eq a1), "other session evicts and retrains (thrash allowed)")
     assert(rows(b1) === va, "retrained centroids must be value-identical")
     // and back: session 1 retrains again, still identical
-    val a2 = DataOps.corpusCentroidsMemo(spark, d, nCells = 16, iterations = 3)
+    val a2 = Shared.get(spark, d, DataOps.IvfCentroids)
     assert(!(a2 eq a1), "s2's call evicted session 1's entry")
     assert(rows(a2) === va, "third training, same values")
   }

@@ -30,10 +30,24 @@ META = {"value", "sf", "n", "rc", "cpus", "failed", "reps", "cold_total",
         "total_s"}
 
 
+def evict_protocol(doc):
+    """How the artifact's shared relations were evicted: "per_query"
+    (graft.Bench evicts before every timed query), "per_sweep" (the
+    earlier between-sweeps rule, `memo_evict_between_sweeps`), "none"
+    (a builder artifact older than either), or None for a driver tail,
+    which does not carry the field."""
+    if "shared_evict" in doc:
+        return doc["shared_evict"]
+    if doc.get("memo_evict_between_sweeps"):
+        return "per_sweep"
+    return "none"
+
+
 def load(path):
     """Return (per-query seconds map, loadavg stamps or None, adjudicated
-    query names). When the artifact carries an "adjudicated" map (the
-    Bench self-adjudication pass: isolated re-runs of queries whose
+    query names, eviction protocol or None). When the artifact carries
+    an "adjudicated" map (the Bench self-adjudication pass: isolated
+    re-runs of queries whose
     in-sweep median exceeded 1.3x the prior committed reading), those
     readings REPLACE the in-sweep ones here — the isolated number is the
     trustworthy one on a loaded host; the raw in-sweep value stays in
@@ -46,13 +60,13 @@ def load(path):
         adj = {k: float(v) for k, v in (doc.get("adjudicated") or {}).items()
                if float(v) >= 0}
         qs.update(adj)
-        return qs, doc.get("loadavg"), sorted(adj)
+        return qs, doc.get("loadavg"), sorted(adj), evict_protocol(doc)
     src = (doc.get("tail") or "") if isinstance(doc, dict) else ""
     out = {}
     for name, val in PAIR.findall(src):
         if name not in META:
             out[name] = float(val)
-    return out, None, []
+    return out, None, [], None
 
 
 def main():
@@ -66,7 +80,13 @@ def main():
         args = [a for a in sys.argv[1:] if a not in ("--emit", emit)]
     if len(args) != 2:
         sys.exit(__doc__)
-    (a, load_a, adj_a), (b, load_b, adj_b) = load(args[0]), load(args[1])
+    (a, load_a, adj_a, ev_a), (b, load_b, adj_b, ev_b) = \
+        load(args[0]), load(args[1])
+    if ev_a and ev_b and ev_a != ev_b:
+        print(f"WARNING: shared-relation eviction differs (old={ev_a}, "
+              f"new={ev_b}): under per_query every consumer of a shared "
+              "relation (x02/x03, sk04/sk05, d07/d13, g07, ...) pays its "
+              "build, so those queries read slower without any code change")
     if adj_a or adj_b:
         print(f"adjudicated readings in use: old={adj_a} new={adj_b}")
     shared = sorted(set(a) & set(b))

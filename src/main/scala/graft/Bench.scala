@@ -79,7 +79,7 @@ object Bench {
     try SparkEntry.queries("q01_pricing_summary")(spark, sfDir).count()
     catch { case _: Throwable => () }
     // Deterministic page-cache state: stream every input file once.
-    warmPageCache(Seq(sfDir, "/root/reference/data/extracted"))
+    warmPageCache(Seq(sfDir, operators.EtlQueries.CorpusDir))
     // Optional comma-separated query filter for local iteration; the
     // driver never sets it, so the full surface is benched per round.
     // Unknown names fail fast — a typo must not yield an empty "success".

@@ -23,7 +23,9 @@ import graft.etl.Pipelines
   */
 object EtlQueries {
 
-  private val CorpusDir = "/root/reference/data/extracted"
+  /** The reference's extracted CDC corpus: the default input of the
+    * replay queries, their DuckDB oracles and the events staging. */
+  val CorpusDir = "/root/reference/data/extracted"
 
   /** Fixed clock so replay output is deterministic run-to-run. */
   private val ReplayClock = Some(Timestamp.valueOf("2023-09-05 00:00:00"))
@@ -43,24 +45,25 @@ object EtlQueries {
     * which re-triggers the 881-root listing job; the dir is all-CSV by
     * construction (the extractor writes nothing else, and the DuckDB
     * replay oracles read the same '*.csv'). */
-  private def corpus(): Seq[String] = {
-    val dir = new java.io.File(CorpusDir)
-    if (!dir.isDirectory) Seq.empty else Seq(CorpusDir)
-  }
+  private def corpus(dir: String): Seq[String] =
+    if (!new java.io.File(dir).isDirectory) Seq.empty else Seq(dir)
 
   /** The CACHED replay outputs (shared: each is read by its replay dump
     * and by the reference's SQL views, `ReferenceQueries`; the events
     * replay also feeds the parquet staging) — parse the corpus once per
     * session, not once per query. Keyed by the corpus directory; the
     * registry unpersists them on eviction. */
-  private val TrackingReplay = Shared.relation("replay_tracking") { (s, _) =>
-    Pipelines.tracking(s, corpus(), clock = ReplayClock).cache()
+  private val TrackingReplay = Shared.relation("replay_tracking") { (s, dir) =>
+    Pipelines.tracking(s, corpus(dir), clock = ReplayClock).cache()
   }
-  private val EventsReplay = Shared.relation("replay_events") { (s, _) =>
-    Pipelines.events(s, corpus(), clock = ReplayClock).cache()
+  private val EventsReplay = Shared.relation("replay_events") { (s, dir) =>
+    Pipelines.events(s, corpus(dir), clock = ReplayClock).cache()
   }
-  def replay(s: SparkSession, name: String): DataFrame =
-    Shared.get(s, CorpusDir,
+
+  /** The `name` ("tracking" or "events") replay of the corpus directory
+    * `dir`; the registered queries read the reference corpus. */
+  def replay(s: SparkSession, name: String, dir: String = CorpusDir): DataFrame =
+    Shared.get(s, dir,
       if (name == "tracking") TrackingReplay else EventsReplay)
 
   /** One-time CSV→parquet staging of the events corpus — the real

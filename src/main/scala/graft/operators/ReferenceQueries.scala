@@ -31,13 +31,14 @@ object ReferenceQueries {
 
   /** Register the replay outputs as CACHED temp views once per session —
     * the interactive-SQL surface queries the loaded tables repeatedly;
-    * re-running the 881-file parse per query would be the pandas way. */
-  private def ensureViews(s: SparkSession): Unit = {
+    * re-running the 881-file parse per query would be the pandas way.
+    * The views are the replay of the corpus directory `dir`. */
+  private def ensureViews(s: SparkSession, dir: String): Unit = {
     // Re-register unconditionally: other query packs may bind the same
     // view names to other tables (the temp-view namespace is shared per
     // session); the shared replay relations make this free.
-    EtlQueries.replay(s, "tracking").createOrReplaceTempView("tracking")
-    EtlQueries.replay(s, "events").createOrReplaceTempView("events")
+    EtlQueries.replay(s, "tracking", dir).createOrReplaceTempView("tracking")
+    EtlQueries.replay(s, "events", dir).createOrReplaceTempView("events")
   }
 
   /** Q1 (README.md:269-279): trackings created per minute. */
@@ -80,11 +81,17 @@ object ReferenceQueries {
       |ORDER BY total_events DESC, `trackingCode`
       |LIMIT 1000""".stripMargin
 
-  def q1(s: SparkSession): DataFrame = { ensureViews(s); s.sql(q1Sql) }
-  def q2(s: SparkSession): DataFrame = { ensureViews(s); s.sql(q2Sql) }
-  def q3(s: SparkSession): DataFrame = { ensureViews(s); s.sql(q3Sql) }
-  def q2Deterministic(s: SparkSession): DataFrame = {
-    ensureViews(s); s.sql(q2DeterministicSql)
+  def q1(s: SparkSession, dir: String = EtlQueries.CorpusDir): DataFrame = {
+    ensureViews(s, dir); s.sql(q1Sql)
+  }
+  def q2(s: SparkSession, dir: String = EtlQueries.CorpusDir): DataFrame = {
+    ensureViews(s, dir); s.sql(q2Sql)
+  }
+  def q3(s: SparkSession, dir: String = EtlQueries.CorpusDir): DataFrame = {
+    ensureViews(s, dir); s.sql(q3Sql)
+  }
+  def q2Deterministic(s: SparkSession, dir: String = EtlQueries.CorpusDir): DataFrame = {
+    ensureViews(s, dir); s.sql(q2DeterministicSql)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -6,17 +6,18 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Replay of the reference pipelines over a slice of the real CDC corpus
-  * (/root/reference/data/extracted — read-only). Invariants are computed
-  * independently (raw line counts, literal-level array-length counts) so
-  * the pipeline is not checking itself.
+  * ([[graft.operators.EtlQueries.CorpusDir]] — read-only); the slice tests
+  * run wherever that corpus exists. Invariants are computed independently
+  * (raw line counts, literal-level array-length counts) so the pipeline is
+  * not checking itself.
   */
 class EtlPipelineSpec extends SparkSpec {
   import spark.implicits._
 
-  private val corpusDir = "/root/reference/data/extracted"
-  private val files = new java.io.File(corpusDir).listFiles()
+  private val corpusDir = graft.operators.EtlQueries.CorpusDir
+  private lazy val files = new java.io.File(corpusDir).listFiles()
     .map(_.getName).filter(_.endsWith(".csv")).sorted.take(3)
-  private val paths = files.map(f => s"$corpusDir/$f")
+  private lazy val paths = files.map(f => s"$corpusDir/$f")
   private val clock = Some(Timestamp.valueOf("2023-09-05 00:00:00"))
 
   private lazy val rawLines: Long = paths.map { p =>
@@ -25,6 +26,7 @@ class EtlPipelineSpec extends SparkSpec {
   }.sum
 
   test("tracking pipeline: one row per raw CSV line modulo keep-last dedup") {
+    TestCorpus.assumeReference()
     val df = Pipelines.tracking(spark, paths.toSeq, clock = clock)
     val n = df.count()
     val keys = df.select($"oid__id").distinct().count()
@@ -36,6 +38,7 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("tracking pipeline without dedup keeps every distinct raw line") {
+    TestCorpus.assumeReference()
     val df = Pipelines.tracking(spark, paths.toSeq, clock = clock,
       intendedDedup = false)
     // distinct() drops full-row duplicates; with fileName part of every row
@@ -53,6 +56,7 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("staged replay: parquet stage-and-read is row-identical to the live pipeline and stages once") {
+    TestCorpus.assumeReference()
     val live = Pipelines.events(spark, paths.toSeq, clock = clock)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_staged_test").toString
@@ -73,6 +77,7 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("events pipeline: row count equals total array elements plus empties") {
+    TestCorpus.assumeReference()
     // Independent expectation: count '$date' occurrences per line (one per
     // event) and empty/whitespace-only arrays straight from the raw text.
     var expected = 0L
@@ -92,6 +97,7 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("events pipeline: no sentinel strings survive, statuses keep zeros") {
+    TestCorpus.assumeReference()
     val df = Pipelines.events(spark, paths.toSeq, clock = clock)
     val sentinels = df.filter($"status".isin("None", "NaN", "NaT", "") ||
       $"description".isin("None", "NaN", "NaT", "")).count()
@@ -128,6 +134,7 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("watermark makes the load incremental and strictly monotone") {
+    TestCorpus.assumeReference()
     val all = Pipelines.events(spark, paths.toSeq, clock = clock)
     val wm = files(0) // watermark = first file already loaded
     val inc = Pipelines.events(spark, paths.toSeq,

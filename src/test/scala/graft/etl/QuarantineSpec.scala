@@ -31,7 +31,7 @@ class QuarantineSpec extends SparkSpec {
   }
 
   test("header validation flags drifted files, passes the real corpus") {
-    val ok = new java.io.File(corpusFiles(0))
+    val ok = new java.io.File(TestCorpus.dir, TestCorpus.files(1).head)
     val dir = Files.createTempDirectory("hdr").toFile
     val drifted = new java.io.File(dir, "drifted.csv")
     val w = new java.io.PrintWriter(drifted, "UTF-8")
@@ -43,10 +43,6 @@ class QuarantineSpec extends SparkSpec {
     assert(bad.map(_._1) === Seq(drifted.toString))
     assert(bad.head._2.contains("updatedAt,array_trackingEvents"))
   }
-
-  private val corpusFiles =
-    Option(new java.io.File("/root/reference/data/extracted").listFiles())
-      .getOrElse(Array.empty[java.io.File]).map(_.toString).sorted.take(2)
 
   test("unparseable event literals are flagged, not fatal") {
     val df = Seq(

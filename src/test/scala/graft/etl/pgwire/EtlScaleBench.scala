@@ -39,7 +39,7 @@ object EtlScaleBench {
 
   def main(args: Array[String]): Unit = {
     val bigDir = args.headOption.getOrElse("/tmp/etl_corpus_10x")
-    val oneDir = "/root/reference/data/extracted"
+    val oneDir = graft.operators.EtlQueries.CorpusDir
     require(PgServerFixture.available, "no postgres installation")
 
     val spark = SparkSession.builder()

@@ -21,7 +21,7 @@ import org.scalatest.BeforeAndAfterAll
 class PostgresReferenceParitySpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
 
-  private val corpusDir = "/root/reference/data/extracted"
+  private val corpusDir = graft.operators.EtlQueries.CorpusDir
   private lazy val paths = new java.io.File(corpusDir).listFiles()
     .map(_.getName).filter(_.endsWith(".csv")).sorted.take(3)
     .map(f => s"$corpusDir/$f").toSeq

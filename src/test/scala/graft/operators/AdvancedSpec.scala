@@ -265,10 +265,11 @@ class AdvancedSpec extends SparkSpec {
   }
 
   test("reference SQL-text queries run via spark.sql and match DSL versions") {
-    val q2 = ReferenceQueries.q2(spark)
+    val corpus = graft.etl.TestCorpus.dir
+    val q2 = ReferenceQueries.q2(spark, corpus)
     assert(q2.columns.toSeq === Seq("trackingCode", "total_events"))
     assert(q2.count() > 0)
-    val q3 = ReferenceQueries.q3(spark).collect()
+    val q3 = ReferenceQueries.q3(spark, corpus).collect()
     assert(q3.length >= 10) // rank ≤ 10 with possible ties
     // DSL equivalent of Q3 over the same view
     val events = spark.table("events")
@@ -279,7 +280,7 @@ class AdvancedSpec extends SparkSpec {
     val dsl = counts.withColumn("event_rank", rank().over(w))
       .filter($"event_rank" <= 10)
       .select($"description", $"total_events", $"event_rank")
-    assert(ReferenceQueries.q3(spark).exceptAll(dsl).count() === 0)
+    assert(ReferenceQueries.q3(spark, corpus).exceptAll(dsl).count() === 0)
   }
 
   test("partitioned parquet write enables partition pruning") {

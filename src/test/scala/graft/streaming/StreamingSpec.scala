@@ -12,7 +12,7 @@ class StreamingSpec extends SparkSpec
     with org.scalatest.BeforeAndAfterAll {
   import spark.implicits._
 
-  private val corpusDir = "/root/reference/data/extracted"
+  private lazy val corpusDir = graft.etl.TestCorpus.dir
   private val clock = Some(Timestamp.valueOf("2023-09-05 00:00:00"))
   private val derbyColTypes = Some(
     "oid__id VARCHAR(64), trackingCode VARCHAR(64), status VARCHAR(16), " +
@@ -67,8 +67,7 @@ class StreamingSpec extends SparkSpec
       "match the batch pipeline; restart is incremental via checkpoint") {
     val work = Files.createTempDirectory("stream_in").toFile
     val ckpt = Files.createTempDirectory("stream_ckpt").toString
-    val all = new java.io.File(corpusDir).listFiles()
-      .map(_.getName).filter(_.endsWith(".csv")).sorted.take(6)
+    val all = graft.etl.TestCorpus.files(6)
 
     // The file source admits maxFilesPerTrigger files per batch ordered
     // by MODIFICATION time; freshly-copied files share an mtime, making
@@ -132,8 +131,7 @@ class StreamingSpec extends SparkSpec
   test("streaming tracking ETL: per-key uniqueness holds after micro-batches") {
     val work = Files.createTempDirectory("strk_in").toFile
     val ckpt = Files.createTempDirectory("strk_ckpt").toString
-    val all = new java.io.File(corpusDir).listFiles()
-      .map(_.getName).filter(_.endsWith(".csv")).sorted.take(4)
+    val all = graft.etl.TestCorpus.files(4)
     all.zipWithIndex.foreach { case (f, i) =>
       Files.copy(Paths.get(s"$corpusDir/$f"), Paths.get(work.toString, f),
         StandardCopyOption.REPLACE_EXISTING)

@@ -13,8 +13,6 @@ import org.apache.spark.sql.SparkSession
   *  - `graft.checkpoint` from SPARK_GRAFT_CHECKPOINT (default `local`;
   *    `reliable:<dir>` is the strategy FaultInject's kill leg recovers
   *    under, see Checkpoints);
-  *  - `graft.wideScans` from SPARK_GRAFT_WIDE_SCANS (default `true`; the
-  *    kill-switch that pins the scan widen's value-identity claim);
   *  - a generated-class cache sized to the whole query surface: Spark's
   *    default holds 100 entries, and a sweep that visits all 244 queries
   *    between one query's reps would otherwise recompile every codegen
@@ -32,8 +30,6 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("graft.checkpoint",
         sys.env.getOrElse("SPARK_GRAFT_CHECKPOINT", "local"))
-      .config("graft.wideScans",
-        sys.env.getOrElse("SPARK_GRAFT_WIDE_SCANS", "true"))
       .config("spark.sql.codegen.cache.maxEntries", "8192")
       .config("spark.ui.enabled", "false")
     ClusterEnv.withExecutorEnv(builder, sys.env.get("SPARK_GRAFT_JARS"),

@@ -56,8 +56,7 @@ object Tables {
     * count check); a dense small-file corpus pays one corpus-linear
     * raw-byte exchange to put the expensive map work on every core.
     * Values are partitioning-invariant by engine convention (decimal
-    * sums, deterministic tiebreaks — spec-pinned); `graft.wideScans =
-    * false` is the A/B kill-switch that pins the claim per deployment. */
+    * sums, deterministic tiebreaks — spec-pinned). */
   private def widen(spark: SparkSession, df: DataFrame, sfDir: String,
       name: String): DataFrame =
     if (!CpuDenseTables.contains(name)) df else widenDense(df)
@@ -88,19 +87,14 @@ object Tables {
     * never the table default. */
   val CpuHeavyMapMinBytes: Long = 256L << 10
 
-  /** The widen with an explicit size floor (see [[CpuHeavyMapMinBytes]]);
-    * the `graft.wideScans` kill-switch still pins the whole claim. */
-  def widenDense(df: DataFrame, minBytes: Long): DataFrame = {
-    val spark = df.sparkSession
-    if (!spark.conf.get("graft.wideScans", "true").toBoolean) df
-    else if (df.queryExecution.optimizedPlan.stats.sizeInBytes <
-        minBytes) df
+  /** The widen with an explicit size floor (see [[CpuHeavyMapMinBytes]]). */
+  def widenDense(df: DataFrame, minBytes: Long): DataFrame =
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes < minBytes) df
     else {
-      val target = spark.sparkContext.defaultParallelism
+      val target = df.sparkSession.sparkContext.defaultParallelism
       if (df.rdd.getNumPartitions >= target) df
       else df.repartition(target)
     }
-  }
 
   /** Normalize a `ts` column to session-tz TimestampType whatever the
     * parquet encoding delivered (see [[load]]); shared with the streaming

@@ -802,8 +802,8 @@ object Dedup {
     // run the whole operator on one core (measured at sf2: the
     // 12 MB single-file corpus put the entire pair stage on one task,
     // 5× the wall clock). The POLICY (4 MB size floor +
-    // narrower-than-parallelism + graft.wideScans kill-switch) is
-    // Tables.widenDense — ONE copy, shared with the table loaders
+    // narrower-than-parallelism) is Tables.widenDense — ONE copy,
+    // shared with the table loaders
     // (ADVICE r13: this site used to repartition unconditionally with
     // no size floor, a useless second exchange on tiny corpora and a
     // divergent policy from the loader's). A 100 TB corpus in

@@ -4,8 +4,10 @@ import graft.Checkpoints._
 import java.sql.Timestamp
 import java.util.Properties
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.etl.{JdbcUpsert, Pipelines, Schemas, Transforms}
 
@@ -196,11 +198,8 @@ object Streaming {
               shingleN, numPerm, bands, indexParts)
             .write.mode("append").partitionBy("bucket_p").parquet(indexDir)
         } finally { survivors.unpersist(); () }
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1) {
-          graft.sources.ParquetSink.compactHotPartitions(spark, indexDir,
-            compactMaxFiles)
-          ()
-        }
+        compactOnSchedule(spark, batchId, compactEvery, compactMaxFiles,
+          indexDir)
       }
       .start()
 
@@ -280,11 +279,8 @@ object Streaming {
           Ivf.index(survivors, centroids)
             .write.mode("append").partitionBy("cell").parquet(indexDir)
         } finally { survivors.unpersist(); batchKept.unpersist(); () }
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1) {
-          graft.sources.ParquetSink.compactHotPartitions(spark, indexDir,
-            compactMaxFiles)
-          ()
-        }
+        compactOnSchedule(spark, batchId, compactEvery, compactMaxFiles,
+          indexDir)
       }
       .start()
 
@@ -299,16 +295,9 @@ object Streaming {
     *
     * Unlike the append-mode ingests ([[dedupIngest]]), a merge is NOT
     * idempotent — an at-least-once replay would double-count the
-    * delta. Snapshots are therefore versioned BY BATCH ID:
-    * `statsDir/snapshot=<batchId>/` written with mode=overwrite, and a
-    * batch whose snapshot id is ≤ the latest COMMITTED snapshot is
-    * skipped (the replayed delta is already merged). Commit = the
-    * parquet `_SUCCESS` marker; a torn write has no marker, is invisible
-    * to [[readStats]], and is overwritten by the checkpoint's replay of
-    * the same batch id — the effectively-exactly-once foreachBatch
-    * recipe from the Structured Streaming docs. Older snapshots are
-    * pruned after each commit (the previous one is kept as the rollback
-    * point), so storage is O(keys), not O(batches · keys).
+    * delta — so the table is committed through [[snapshotIngest]]:
+    * versioned by batch id, torn writes invisible, replayed ids skipped,
+    * storage O(keys).
     *
     * Sums accumulate in decimal(38,2): exact under any partitioning or
     * merge order (the engine convention), so N batches + any number of
@@ -316,39 +305,16 @@ object Streaming {
     * which is exactly what the spec asserts via the q70 oracle shape. */
   def statsIngest(events: DataFrame, keyCol: String, valueCol: String,
       statsDir: String, checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val latest = latestSnapshot(spark, statsDir)
-        if (latest.forall(_._1 < batchId)) {
-          val delta = batch.groupBy(col(keyCol))
-            .agg(count(lit(1)).as("n_events"),
-              sum(col(valueCol).cast("decimal(18,2)"))
-                .cast("decimal(38,2)").as("sum_value"))
-          val merged = latest match {
-            case Some((_, base)) =>
-              base.unionByName(delta)
-                .groupBy(col(keyCol))
-                .agg(sum(col("n_events")).as("n_events"),
-                  sum(col("sum_value")).cast("decimal(38,2)").as("sum_value"))
-            case None => delta
-          }
-          merged.write.mode("overwrite")
-            .parquet(s"$statsDir/snapshot=$batchId")
-          // prune all but the new snapshot and its predecessor (the
-          // rollback point while the new _SUCCESS is the commit record)
-          val keep = Set(Some(batchId), latest.map(_._1)).flatten
-          snapshotIds(spark, statsDir).filterNot(keep.contains).foreach { id =>
-            val p = new org.apache.hadoop.fs.Path(s"$statsDir/snapshot=$id")
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .delete(p, true)
-            ()
-          }
-        } // else: checkpoint replay of an already-merged batch — skip
-      }
-      .start()
+    snapshotIngest(events, statsDir, checkpointDir) { (batch, base) =>
+      val delta = batch.groupBy(col(keyCol))
+        .agg(count(lit(1)).as("n_events"),
+          sum(col(valueCol).cast("decimal(18,2)"))
+            .cast("decimal(38,2)").as("sum_value"))
+      base.fold(delta)(_.unionByName(delta)
+        .groupBy(col(keyCol))
+        .agg(sum(col("n_events")).as("n_events"),
+          sum(col("sum_value")).cast("decimal(38,2)").as("sum_value")))
+    }
 
   /** Streaming twin of q93's incremental view maintenance: a persisted
     * per-user signed aggregate view maintained per micro-batch of
@@ -361,60 +327,31 @@ object Streaming {
     * cost ∝ view + batch, never history.
     *
     * Signed addition is NOT idempotent (a replayed retraction would
-    * double-retract), so snapshots are batch-id versioned with
-    * `_SUCCESS` commits and rewound ids skipped BEFORE any merge — the
-    * [[statsIngest]] discipline. */
+    * double-retract), so the view is committed through
+    * [[snapshotIngest]], which skips rewound ids BEFORE any merge. */
   def ivmIngest(events: DataFrame, viewDir: String,
       checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val latest = latestSnapshot(spark, viewDir)
-        if (latest.forall(_._1 < batchId)) {
-          val signed = batch
-            .withColumn("__w",
-              when(col("event_type") === "error", -1L).otherwise(1L))
-            .withColumn("__cents",
-              col("__w") * round(col("value") * 100).cast("long"))
-          val delta = signed.groupBy(col("user_id"))
-            .agg(sum(col("__w")).as("n"), sum(col("__cents")).as("cents"))
-          val merged = latest match {
-            case Some((_, base)) => graft.operators.Cdc
-              .mergeAggregates(base, delta, "user_id", Seq("n", "cents"))
-            case None =>
-              delta.filter(col("n") =!= 0L || col("cents") =!= 0L)
-          }
-          merged.write.mode("overwrite")
-            .parquet(s"$viewDir/snapshot=$batchId")
-          val keep = Set(Some(batchId), latest.map(_._1)).flatten
-          snapshotIds(spark, viewDir).filterNot(keep.contains).foreach { id =>
-            val p = new org.apache.hadoop.fs.Path(s"$viewDir/snapshot=$id")
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .delete(p, true)
-            ()
-          }
-        } // else: replay/rewind — skipped BEFORE any signed merge
+    snapshotIngest(events, viewDir, checkpointDir) { (batch, base) =>
+      val signed = batch
+        .withColumn("__w",
+          when(col("event_type") === "error", -1L).otherwise(1L))
+        .withColumn("__cents",
+          col("__w") * round(col("value") * 100).cast("long"))
+      val delta = signed.groupBy(col("user_id"))
+        .agg(sum(col("__w")).as("n"), sum(col("__cents")).as("cents"))
+      base match {
+        case Some(b) => graft.operators.Cdc
+          .mergeAggregates(b, delta, "user_id", Seq("n", "cents"))
+        case None => delta.filter(col("n") =!= 0L || col("cents") =!= 0L)
       }
-      .start()
+    }
 
   /** The latest COMMITTED maintained view (user_id, n, cents). Empty
     * but typed when nothing has committed (the readStats convention). */
   def readIvmView(spark: SparkSession, viewDir: String): DataFrame =
-    latestSnapshot(spark, viewDir) match {
-      case Some((_, df)) => df.select(col("user_id"), col("n"), col("cents"))
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("user_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("n",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("cents",
-              org.apache.spark.sql.types.LongType))))
-    }
+    committedSnapshot(spark, viewDir)
+      .getOrElse(emptyFrame(spark, "user_id BIGINT, n BIGINT, cents BIGINT"))
+      .select(col("user_id"), col("n"), col("cents"))
 
   /** Streaming twin of q74's changelog apply: a persisted keyed base
     * table updated per micro-batch of CDC rows via
@@ -426,10 +363,7 @@ object Streaming {
     * Apply is ORDER-sensitive across batches — a rewound batch
     * re-applied on newer state would REGRESS keys to stale values (the
     * within-batch seq window cannot defend against cross-batch rewinds) —
-    * so the base is versioned BY BATCH ID exactly like [[statsIngest]]:
-    * `baseDir/snapshot=<batchId>/` overwrite-written, `_SUCCESS` as the
-    * commit record, batch ids ≤ the latest committed snapshot skipped,
-    * all but the newest snapshot and its rollback predecessor pruned.
+    * so the base is committed through [[snapshotIngest]].
     * Cross-batch correctness assumes the feed arrives in per-key seq
     * order (what a keyed CDC topic guarantees); WITHIN a batch any
     * disorder is absorbed by the seq window.
@@ -440,68 +374,32 @@ object Streaming {
   def cdcIngest(changelog: DataFrame, key: String, opCol: String,
       seqCols: Seq[String], valueCols: Seq[String],
       baseDir: String, checkpointDir: String): StreamingQuery =
-    changelog.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val latest = latestSnapshot(spark, baseDir)
-        if (latest.forall(_._1 < batchId)) {
-          val base = latest match {
-            case Some((_, df)) => df
-            case None => batch // empty, typed like the feed's value schema
-              .select(col(key) +: valueCols.map(col): _*)
-              .filter(lit(false))
-              .withColumn("src", lit("base"))
-          }
-          graft.operators.Cdc.applyChangelog(base, batch, key, opCol,
-              seqCols, valueCols)
-            .write.mode("overwrite").parquet(s"$baseDir/snapshot=$batchId")
-          val keep = Set(Some(batchId), latest.map(_._1)).flatten
-          snapshotIds(spark, baseDir).filterNot(keep.contains).foreach { id =>
-            val p = new org.apache.hadoop.fs.Path(s"$baseDir/snapshot=$id")
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .delete(p, true)
-            ()
-          }
-        } // else: checkpoint replay/rewind of an applied batch — skip
-      }
-      .start()
+    snapshotIngest(changelog, baseDir, checkpointDir) { (batch, base) =>
+      graft.operators.Cdc.applyChangelog(
+        base.getOrElse(batch // empty, typed like the feed's value schema
+          .select(col(key) +: valueCols.map(col): _*)
+          .filter(lit(false))
+          .withColumn("src", lit("base"))),
+        batch, key, opCol, seqCols, valueCols)
+    }
 
   /** The latest COMMITTED CDC base table. Loud when nothing committed —
     * an unseeded, never-drained ingest has no meaningful read. */
   def readCdcBase(spark: SparkSession, baseDir: String): DataFrame =
-    latestSnapshot(spark, baseDir) match {
-      case Some((_, df)) => df
-      case None => throw new IllegalStateException(
-        s"readCdcBase: no committed snapshot under $baseDir")
-    }
+    committedSnapshot(spark, baseDir).getOrElse(throw new IllegalStateException(
+      s"readCdcBase: no committed snapshot under $baseDir"))
 
   /** Latest COMMITTED per-key stats (q70's output shape: key, n_events,
     * sum_value, avg_value) — empty result when no snapshot exists. */
   def readStats(spark: SparkSession, statsDir: String,
       keyCol: String = "user_id"): DataFrame =
-    latestSnapshot(spark, statsDir) match {
-      case Some((_, df)) =>
-        df.select(col(keyCol), col("n_events"),
-          col("sum_value").cast("double").as("sum_value"),
-          round(col("sum_value").cast("double") / col("n_events"), 6)
-            .as("avg_value"))
-      case None =>
-        // empty but TYPED: callers select these columns on the empty
-        // case too, and a zero-column emptyDataFrame would throw
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(keyCol,
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("n_events",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("sum_value",
-              org.apache.spark.sql.types.DoubleType),
-            org.apache.spark.sql.types.StructField("avg_value",
-              org.apache.spark.sql.types.DoubleType))))
-    }
+    committedSnapshot(spark, statsDir)
+      .getOrElse(emptyFrame(spark,
+        s"`$keyCol` BIGINT, n_events BIGINT, sum_value DECIMAL(38,2)"))
+      .select(col(keyCol), col("n_events"),
+        col("sum_value").cast("double").as("sum_value"),
+        round(col("sum_value").cast("double") / col("n_events"), 6)
+          .as("avg_value"))
 
   /** Streaming twin of sk01's KMV sketch build: a persisted per-source
     * k-minimum-values sketch maintained per micro-batch of documents —
@@ -517,51 +415,22 @@ object Streaming {
     * the state is k rows per source however much data has flowed.
     *
     * Set union IS idempotent, so a replayed batch would merge
-    * harmlessly — snapshots are still versioned by batch id with
-    * `_SUCCESS` commits and rewound ids skipped ([[statsIngest]]
-    * discipline) so torn writes and rewinds never surface a
+    * harmlessly — the sketch is still committed through
+    * [[snapshotIngest]] so torn writes and rewinds never surface a
     * half-written sketch. */
   def sketchIngest(docs: DataFrame, sketchDir: String,
       checkpointDir: String, k: Int = 256): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val latest = latestSnapshot(spark, sketchDir)
-        if (latest.forall(_._1 < batchId)) {
-          val delta = graft.operators.DataOps.kmvHashes(batch)
-          val merged = latest match {
-            case Some((_, base)) => base.unionByName(delta)
-            case None => delta
-          }
-          graft.operators.DataOps.kmvPrune(merged, k)
-            .write.mode("overwrite").parquet(s"$sketchDir/snapshot=$batchId")
-          val keep = Set(Some(batchId), latest.map(_._1)).flatten
-          snapshotIds(spark, sketchDir).filterNot(keep.contains).foreach { id =>
-            val p = new org.apache.hadoop.fs.Path(s"$sketchDir/snapshot=$id")
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .delete(p, true)
-            ()
-          }
-        } // else: replay/rewind of an already-merged batch — skip
-      }
-      .start()
+    snapshotIngest(docs, sketchDir, checkpointDir) { (batch, base) =>
+      val delta = graft.operators.DataOps.kmvHashes(batch)
+      graft.operators.DataOps.kmvPrune(base.fold(delta)(_.unionByName(delta)), k)
+    }
 
   /** The latest COMMITTED per-source sketch rows (source, h). Empty but
     * typed when nothing has committed (the readStats convention). */
   def readSketch(spark: SparkSession, sketchDir: String): DataFrame =
-    latestSnapshot(spark, sketchDir) match {
-      case Some((_, df)) => df.select(col("source"), col("h"))
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("source",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("h",
-              org.apache.spark.sql.types.LongType))))
-    }
+    committedSnapshot(spark, sketchDir)
+      .getOrElse(emptyFrame(spark, "source STRING, h BIGINT"))
+      .select(col("source"), col("h"))
 
   /** Streaming twin of sk03/sk04's Count-Min counter build: a persisted
     * per-source CM counter table maintained per micro-batch of
@@ -577,82 +446,26 @@ object Streaming {
     *
     * Addition is NOT idempotent — a replayed batch would double-count
     * every gram it carries (the statsIngest lesson, unlike
-    * [[sketchIngest]]'s harmless set union) — so snapshots are
-    * versioned by batch id with `_SUCCESS` commits and ids ≤ the
-    * committed high-water are skipped BEFORE any arithmetic. */
+    * [[sketchIngest]]'s harmless set union) — so the table is committed
+    * through [[snapshotIngest]], which skips ids ≤ the committed
+    * high-water BEFORE any arithmetic. */
   def cmCounterIngest(docs: DataFrame, counterDir: String,
       checkpointDir: String, width: Int = 16384,
       depth: Int = 3): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val latest = latestSnapshot(spark, counterDir)
-        if (latest.forall(_._1 < batchId)) {
-          val delta = graft.operators.DataOps.cmCounters(
-            graft.operators.DataOps.cmTokens(batch), width, depth)
-          val merged = latest match {
-            case Some((_, base)) => base.unionByName(delta)
-              .groupBy(col("source"), col("j"), col("pos"))
-              .agg(sum(col("c")).as("c"))
-            case None => delta
-          }
-          merged.write.mode("overwrite")
-            .parquet(s"$counterDir/snapshot=$batchId")
-          val keep = Set(Some(batchId), latest.map(_._1)).flatten
-          snapshotIds(spark, counterDir).filterNot(keep.contains)
-            .foreach { id =>
-              val p = new org.apache.hadoop.fs.Path(
-                s"$counterDir/snapshot=$id")
-              p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-                .delete(p, true)
-              ()
-            }
-        } // else: replay/rewind — skipped BEFORE any addition
-      }
-      .start()
+    snapshotIngest(docs, counterDir, checkpointDir) { (batch, base) =>
+      val delta = graft.operators.DataOps.cmCounters(
+        graft.operators.DataOps.cmTokens(batch), width, depth)
+      base.fold(delta)(_.unionByName(delta)
+        .groupBy(col("source"), col("j"), col("pos"))
+        .agg(sum(col("c")).as("c")))
+    }
 
   /** The latest COMMITTED counter table (source, j, pos, c). Empty but
     * typed when nothing has committed (the readStats convention). */
   def readCmCounters(spark: SparkSession, counterDir: String): DataFrame =
-    latestSnapshot(spark, counterDir) match {
-      case Some((_, df)) =>
-        df.select(col("source"), col("j"), col("pos"), col("c"))
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("source",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("j",
-              org.apache.spark.sql.types.IntegerType),
-            org.apache.spark.sql.types.StructField("pos",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("c",
-              org.apache.spark.sql.types.LongType))))
-    }
-
-  private def snapshotIds(spark: SparkSession, statsDir: String): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(statsDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith("snapshot="))
-      .map(_.stripPrefix("snapshot=").toLong)
-  }
-
-  /** (batchId, stats) of the newest snapshot carrying a _SUCCESS marker. */
-  private def latestSnapshot(spark: SparkSession,
-      statsDir: String): Option[(Long, DataFrame)] = {
-    val dir = new org.apache.hadoop.fs.Path(statsDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    snapshotIds(spark, statsDir).sorted.reverse
-      .find(id => fs.exists(
-        new org.apache.hadoop.fs.Path(s"$statsDir/snapshot=$id/_SUCCESS")))
-      .map(id => (id, spark.read.parquet(s"$statsDir/snapshot=$id")))
-  }
+    committedSnapshot(spark, counterDir)
+      .getOrElse(emptyFrame(spark, "source STRING, j INT, pos BIGINT, c BIGINT"))
+      .select(col("source"), col("j"), col("pos"), col("c"))
 
   /** Streaming twin of t33's n-gram novelty: per micro-batch of
     * documents, each doc scores the fraction of its distinct shingles
@@ -668,66 +481,51 @@ object Streaming {
     * snapshot rewrite per batch would be O(corpus), the statsIngest
     * shape is wrong here), hash-bucketed by shingle
     * (`bucket_p = pmod(xxhash64(shingle), indexParts)`) so probes and
-    * compaction work per-partition. Appends are not atomic, so index
-    * rows carry their writer's batch id and readers TRUST ONLY rows
-    * whose batch has a commit marker (`commitsDir/batch=<id>/_SUCCESS`,
-    * written last): a torn append is invisible, a replayed batch is
-    * detected by its marker and SKIPPED before any recompute (novelty
-    * against an index already holding the batch's own shingles would
-    * score 0 — the merge is NOT idempotent, the statsIngest lesson),
-    * and duplicate index rows from a crash-then-retry collapse in the
-    * anti-join. Per-batch output lands in `outDir/batch=<id>`
-    * (overwritten on recompute, final once the marker exists). */
+    * compaction work per-partition. It is committed through
+    * [[markedIngest]]: index rows carry their writer's batch id and
+    * only committed batches' rows are read, so a torn append is
+    * invisible, and a replayed batch is SKIPPED before any recompute
+    * (novelty against an index already holding the batch's own
+    * shingles would score 0 — the merge is NOT idempotent, the
+    * statsIngest lesson); duplicate index rows from a crash-then-retry
+    * collapse in the anti-join. Per-batch output lands in
+    * `outDir/batch=<id>` (overwritten on recompute, final once the
+    * marker exists). */
   def noveltyIngest(docs: DataFrame, idCol: String, textCol: String,
       outDir: String, indexDir: String, commitsDir: String,
       checkpointDir: String, shingleN: Int = 3,
       indexParts: Int = 64): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val committed = committedBatches(spark, commitsDir)
-        if (!committed.contains(batchId)) {
-          val sh = batch.select(col(idCol).as("doc_id"),
-              explode(graft.functions.Text.shingles(col(textCol), shingleN))
-                .as("shingle"))
-          val firstIn = sh.groupBy(col("shingle"))
-            .agg(min(col("doc_id")).as("first_doc"))
-          val indexPath = new org.apache.hadoop.fs.Path(indexDir)
-          val fs = indexPath.getFileSystem(
-            spark.sparkContext.hadoopConfiguration)
-          // anti-join against COMMITTED index rows only (torn appends
-          // invisible); missing index = first batch, same loud-failure
-          // stance as dedupIngest for any other read error
-          val newShingles = (if (fs.exists(indexPath)) {
-            val seen = spark.read.parquet(indexDir)
-              .filter(col("batch_id").isin(committed.toSeq: _*))
-            firstIn.join(seen.select(col("shingle")), Seq("shingle"),
-              "left_anti")
-          } else firstIn).graftCheckpoint(true) // consumed by score + append
-          val perDoc = sh
-            .join(newShingles.hint("shuffle_hash"), Seq("shingle"), "left")
-            .groupBy(col("doc_id"))
-            .agg(count(lit(1)).as("n_shingles"),
-              sum(when(col("doc_id") === col("first_doc"), 1L)
-                .otherwise(0L)).as("n_novel"))
-            .select(col("doc_id"), col("n_shingles"), col("n_novel"),
-              round(col("n_novel") / col("n_shingles"), 9).as("novelty"))
-          perDoc.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          newShingles
-            .select(col("shingle"), lit(batchId).as("batch_id"),
-              pmod(xxhash64(col("shingle")), lit(indexParts.toLong))
-                .as("bucket_p"))
-            .write.mode("append").partitionBy("bucket_p").parquet(indexDir)
-          // the commit record, written LAST: everything above is now real
-          val marker = new org.apache.hadoop.fs.Path(
-            s"$commitsDir/batch=$batchId/_SUCCESS")
-          marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .create(marker, true).close()
-        } // else: checkpoint replay of a committed batch — skip
-      }
-      .start()
+    markedIngest(docs, commitsDir, checkpointDir) {
+        (batch, batchId, highWater) =>
+      val spark = batch.sparkSession
+      val sh = batch.select(col(idCol).as("doc_id"),
+          explode(graft.functions.Text.shingles(col(textCol), shingleN))
+            .as("shingle"))
+      val firstIn = sh.groupBy(col("shingle"))
+        .agg(min(col("doc_id")).as("first_doc"))
+      // anti-join against COMMITTED index rows only (torn appends
+      // invisible); missing index = first batch, same loud-failure
+      // stance as dedupIngest for any other read error
+      val newShingles = (committedIndex(spark, indexDir, highWater) match {
+        case Some(seen) => firstIn.join(seen.select(col("shingle")),
+          Seq("shingle"), "left_anti")
+        case None => firstIn
+      }).graftCheckpoint(true) // consumed by score + append
+      val perDoc = sh
+        .join(newShingles.hint("shuffle_hash"), Seq("shingle"), "left")
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_shingles"),
+          sum(when(col("doc_id") === col("first_doc"), 1L)
+            .otherwise(0L)).as("n_novel"))
+        .select(col("doc_id"), col("n_shingles"), col("n_novel"),
+          round(col("n_novel") / col("n_shingles"), 9).as("novelty"))
+      perDoc.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      newShingles
+        .select(col("shingle"), lit(batchId).as("batch_id"),
+          pmod(xxhash64(col("shingle")), lit(indexParts.toLong))
+            .as("bucket_p"))
+        .write.mode("append").partitionBy("bucket_p").parquet(indexDir)
+    }
 
   /** Streaming EXACT near-dup pair feed — d17
     * ([[graft.operators.Dedup.incrementalPrefixJaccardPairs]]) run per
@@ -743,84 +541,58 @@ object Streaming {
     * qualifying pair reported exactly once, when its later member
     * ingests.
     *
-    * Exactly-once via batch-id commit markers written LAST (the
-    * noveltyIngest pattern): the pair feed is NOT idempotent under
-    * replay (re-emitting double-reports pairs, re-appending the
+    * Exactly-once via [[markedIngest]]: the pair feed is NOT idempotent
+    * under replay (re-emitting double-reports pairs, re-appending the
     * inventory would double n_common and corrupt every later jaccard),
     * so a checkpoint replay of a committed batch is skipped BEFORE any
     * pair math, and the inventory append itself is RETRY-idempotent
     * ([[graft.sources.ParquetSink.idempotentBatchAppend]]) so a
     * foreachBatch retry between a completed index write and the marker
-    * cannot leave two copies of the batch's rows under one batch_id. */
+    * cannot leave two copies of the batch's rows under one batch_id.
+    * Every `compactEvery` batches, after the commit, the hot `bucket_p`
+    * partitions are compacted ([[compactOnSchedule]]). */
   def exactPairsIngest(docs: DataFrame, idCol: String, textCol: String,
       outDir: String, indexDir: String, commitsDir: String,
       checkpointDir: String, shingleN: Int = 3, minJaccard: Double = 0.7,
       indexParts: Int = 64,
       compactEvery: Int = 8, compactMaxFiles: Int = 8): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val committed = committedBatches(spark, commitsDir)
-        if (!committed.contains(batchId)) {
-          val batchInv0 = graft.operators.Dedup
-            .canonicalShingleInventory(batch, idCol, textCol, shingleN)
-          val indexPath = new org.apache.hadoop.fs.Path(indexDir)
-          val fs = indexPath.getFileSystem(
-            spark.sparkContext.hadoopConfiguration)
-          // COMMITTED index rows only (torn appends invisible); missing
-          // index = first batch — any other read failure fails the batch
-          // so the checkpoint replays it (the dedupIngest stance)
-          val corpusInv = if (fs.exists(indexPath)) {
-            spark.read.parquet(indexDir)
-              .filter(col("batch_id").isin(committed.toSeq: _*))
-              .select(col("doc"), col("shingle"), col("__rk"), col("n_sh"))
-          } else batchInv0.filter(lit(false))
-            .select(col("doc"), col("shingle"), col("__rk"), col("n_sh"))
-          // at-least-once guard: a doc RE-DELIVERED under a fresh batch
-          // id (source rewind, upstream retry) is already in the index —
-          // the index IS the identity record. Without this anti-join its
-          // inventory rows would duplicate, double-counting n_common and
-          // corrupting (even zeroing) every affected jaccard denominator
-          val batchInv = batchInv0
-            .join(corpusInv.select(col("doc")).distinct(),
-              Seq("doc"), "left_anti")
-            .graftCheckpoint(true) // probe + index append both consume it
-          val inv = batchInv.withColumn("__new", lit(true))
-            .unionByName(corpusInv.withColumn("__new", lit(false)))
-          graft.operators.Dedup.prefixPairsFromInventory(inv, minJaccard)
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          // idempotent append: a foreachBatch RETRY between a completed
-          // index write and the marker must not duplicate inventory rows
-          // (duplicates double n_common and corrupt later jaccards) —
-          // the per-batch-prefix recipe in ParquetSink
-          graft.sources.ParquetSink.idempotentBatchAppend(
-            batchInv
-              .select(col("doc"), col("shingle"), col("__rk"), col("n_sh"),
-                lit(batchId).as("batch_id"),
-                pmod(xxhash64(col("shingle")), lit(indexParts.toLong))
-                  .as("bucket_p")),
-            indexDir, "bucket_p", batchId)
-          // the commit record, written LAST: everything above is now real
-          val marker = new org.apache.hadoop.fs.Path(
-            s"$commitsDir/batch=$batchId/_SUCCESS")
-          marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .create(marker, true).close()
-          // every compactEvery batches, sweep hot bucket_p partitions —
-          // the dedupIngest maintenance story: without it the per-batch
-          // appends grow the probe's file count with batch COUNT forever.
-          // Safe AFTER the commit: compaction preserves rows (incl. the
-          // batch_id column the committed-filter reads), and micro-
-          // batches serialize so the swap never races a probe
-          if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1) {
-            graft.sources.ParquetSink.compactHotPartitions(spark, indexDir,
-              compactMaxFiles)
-            ()
-          }
-        } // else: checkpoint replay of a committed batch — skip
-      }
-      .start()
+    markedIngest(docs, commitsDir, checkpointDir,
+        compactOnSchedule(_, _, compactEvery, compactMaxFiles, indexDir)) {
+        (batch, batchId, highWater) =>
+      val spark = batch.sparkSession
+      val batchInv0 = graft.operators.Dedup
+        .canonicalShingleInventory(batch, idCol, textCol, shingleN)
+      // COMMITTED index rows only (torn appends invisible); missing
+      // index = first batch — any other read failure fails the batch
+      // so the checkpoint replays it (the dedupIngest stance)
+      val corpusInv = committedIndex(spark, indexDir, highWater)
+        .getOrElse(batchInv0.filter(lit(false)))
+        .select(col("doc"), col("shingle"), col("__rk"), col("n_sh"))
+      // at-least-once guard: a doc RE-DELIVERED under a fresh batch
+      // id (source rewind, upstream retry) is already in the index —
+      // the index IS the identity record. Without this anti-join its
+      // inventory rows would duplicate, double-counting n_common and
+      // corrupting (even zeroing) every affected jaccard denominator
+      val batchInv = batchInv0
+        .join(corpusInv.select(col("doc")).distinct(),
+          Seq("doc"), "left_anti")
+        .graftCheckpoint(true) // probe + index append both consume it
+      val inv = batchInv.withColumn("__new", lit(true))
+        .unionByName(corpusInv.withColumn("__new", lit(false)))
+      graft.operators.Dedup.prefixPairsFromInventory(inv, minJaccard)
+        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      // idempotent append: a foreachBatch RETRY between a completed
+      // index write and the marker must not duplicate inventory rows
+      // (duplicates double n_common and corrupt later jaccards) —
+      // the per-batch-prefix recipe in ParquetSink
+      graft.sources.ParquetSink.idempotentBatchAppend(
+        batchInv
+          .select(col("doc"), col("shingle"), col("__rk"), col("n_sh"),
+            lit(batchId).as("batch_id"),
+            pmod(xxhash64(col("shingle")), lit(indexParts.toLong))
+              .as("bucket_p")),
+        indexDir, "bucket_p", batchId)
+    }
 
   /** The incremental training-set capstone — the streaming twin of the
     * x01/x02 batch pipeline: per micro-batch of (doc_id, text, lang,
@@ -860,13 +632,13 @@ object Streaming {
     * 0.8 curation threshold clusters are near-cliques and the
     * equivalence spec proves the real corpus has no such chain.
     *
-    * Replay safety: a batch id is skipped BEFORE any work when its
-    * commit marker exists (the statsIngest discipline); markers are
-    * written LAST; index reads see COMMITTED batches only (torn appends
-    * invisible). The remaining window — a foreachBatch RETRY between a
-    * completed append and the marker, which a plain mode(append) would
-    * turn into duplicated rows under the same batch_id once the retry's
-    * marker lands — is closed by writing the shard and index deltas via
+    * Replay safety: the batches are committed through [[markedIngest]]
+    * (a committed id is skipped BEFORE any work, index reads see
+    * committed batches only). The remaining window — a foreachBatch
+    * RETRY between a completed append and the marker, which a plain
+    * mode(append) would turn into duplicated rows under the same
+    * batch_id once the retry's marker lands — is closed by writing the
+    * shard and index deltas via
     * [[graft.sources.ParquetSink.idempotentBatchAppend]]: each retry
     * first deletes its own torn attempt's (batch-prefixed) files, so
     * committed reads are exact across any crash point. The manifest is
@@ -886,213 +658,308 @@ object Streaming {
       capacity: Long = 512L, chunksPerShard: Long = 8L,
       shingleN: Int = 3, minJaccard: Double = 0.8,
       indexParts: Int = 64,
-      compactEvery: Int = 8, compactMaxFiles: Int = 8): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val committed = committedBatches(spark, commitsDir)
-        if (!committed.contains(batchId)) {
-          val digestsDir = s"$indexDir/digests"
-          val invDir = s"$indexDir/inventory"
-          def existing(dir: String): Option[DataFrame] = {
-            val p = new org.apache.hadoop.fs.Path(dir)
-            val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            if (fs.exists(p)) Some(spark.read.parquet(dir)
-              .filter(col("batch_id").isin(committed.toSeq: _*)))
-            else None
-          }
-          // (1) per-document gates + dedup canonical form
-          val gated = graft.operators.Dedup
-            .qualityGate(batch, idCol, textCol, langCol)
-            .withColumn("__norm",
-              graft.functions.Text.normalizeForDedup(col(textCol)))
-            .withColumn("__digest", md5(col("__norm")))
-            .withColumn("__dp",
-              pmod(xxhash64(col("__digest")), lit(indexParts.toLong)))
-            .graftCheckpoint(true) // exact pass + index append consume it
-          // (2a) exact dedup: min id per digest in-batch, then the
-          // committed digest index (join carries the partition column so
-          // the probe prunes digest directories, the probeBandIndex DPP
-          // shape)
-          val inKeep = gated.groupBy(col("__digest"))
-            .agg(min(col(idCol)).as(idCol)).select(col(idCol))
-          val exactKept = existing(digestsDir) match {
-            case Some(prior) =>
-              // probe the corpus-sized index with the BROADCAST batch
-              // digest set (the probeBandIndex DPP shape: __dp is the
-              // partition column, so unmatched digest directories are
-              // pruned at the scan); the hit set is ≤ the batch's
-              // distinct digests, so the anti-join back is a broadcast
-              val batchDigests = gated
-                .select(col("__dp"), col("__digest")).distinct()
-              val hit = prior.select(col("__dp"), col("__digest"))
-                .join(broadcast(batchDigests),
-                  Seq("__dp", "__digest"), "left_semi")
-                .distinct()
-              gated.join(inKeep, Seq(idCol), "left_semi")
-                .join(broadcast(hit), Seq("__dp", "__digest"), "left_anti")
-            case None => gated.join(inKeep, Seq(idCol), "left_semi")
-          }
-          // (2b) near-dup dedup: canonical-prefix inventory of the
-          // batch's exact survivors vs the committed inventory — the
-          // exactPairsIngest probe at the curation threshold. ALL exact
-          // survivors are indexed below (kept or near-dup-dropped): a
-          // dropped doc must keep witnessing later cluster members.
-          val batchInv = graft.operators.Dedup.canonicalShingleInventory(
-              exactKept.select(col(idCol).as("doc"),
-                col("__norm").as("__t")), "doc", "__t", shingleN)
-            .graftCheckpoint(true) // probe + index append consume it
-          val corpusInv = existing(invDir) match {
-            case Some(prior) =>
-              prior.select(col("doc"), col("shingle"), col("__rk"),
-                col("n_sh"))
-            case None => batchInv.filter(lit(false))
-              .select(col("doc"), col("shingle"), col("__rk"), col("n_sh"))
-          }
-          val inv = batchInv.withColumn("__new", lit(true))
-            .unionByName(corpusInv.withColumn("__new", lit(false)))
-          val nearDropped = graft.operators.Dedup
-            .prefixPairsFromInventory(inv, minJaccard)
-            .filter(col("new_b")) // ordered ingest: the later member drops
-            .select(col("doc_b").as(idCol)).distinct()
-          val survivors = exactKept.join(nearDropped, Seq(idCol), "left_anti")
-          // (3) decontamination: per-doc vs the static benchmark
-          val clean = survivors.join(
-            broadcast(graft.operators.DataOps.contaminatedIds(
-              survivors, benchmark, idCol, textCol)),
-            Seq(idCol), "left_anti")
-          // (4) sampling under the static policy
-          val sampled = graft.operators.DataOps
-            .applySampleRates(clean, rates, idCol, sourceCol)
-          // (5) packing continued from the committed token total
-          val startTokens = (if (committed.isEmpty) None
-            else Some(committed.max)) match {
-            case Some(last) =>
-              spark.read.parquet(s"$manifestDir/batch=$last")
-                .agg(coalesce(sum(col("n_tokens")), lit(0L)))
-                .collect()(0).getLong(0)
-            case None => 0L
-          }
-          val sized = sampled.select(col(idCol),
-            graft.functions.Text.tokenCount(col(textCol)).cast("long")
-              .as("n_tokens"))
-          val packed = graft.operators.DataOps
-            .packChunksBySize(sized, idCol, capacity,
-              startTokens = startTokens)
-            .join(sampled.select(col(idCol), col(sourceCol),
-              col("keep_rate")), Seq(idCol))
-            .withColumn("shard",
-              floor(col("first_chunk") / chunksPerShard).cast("long"))
-            .withColumn("batch_id", lit(batchId))
-            .graftCheckpoint(true) // shard append + manifest consume it
-          // (6) writes: shard append, merged manifest snapshot, indexes.
-          // All three appends are RETRY-idempotent (ParquetSink per-batch
-          // prefix recipe): a foreachBatch retry between a completed write
-          // and the marker would otherwise re-append the same batch's
-          // rows under the same batch_id — duplicated shard rows would
-          // double-report documents and duplicated inventory rows would
-          // inflate n_common/jaccard for later batches' near-dup
-          // decisions once the retry's marker lands.
-          graft.sources.ParquetSink.idempotentBatchAppend(
-            packed, shardsDir, "shard", batchId)
-          val batchAgg = packed.groupBy(col("shard")).agg(
-            count(lit(1)).as("n_docs"),
-            sum(col("n_tokens")).as("n_tokens"),
-            min(col("first_chunk")).as("first_chunk"),
-            max(col("last_chunk")).as("last_chunk"))
-          val merged = ((if (committed.isEmpty) None
-            else Some(committed.max)) match {
-            case Some(last) => spark.read.parquet(s"$manifestDir/batch=$last")
-              .unionByName(batchAgg)
-            case None => batchAgg
-          }).groupBy(col("shard")).agg(
-            sum(col("n_docs")).as("n_docs"),
-            sum(col("n_tokens")).as("n_tokens"),
-            min(col("first_chunk")).as("first_chunk"),
-            max(col("last_chunk")).as("last_chunk"))
-          merged.write.mode("overwrite").parquet(s"$manifestDir/batch=$batchId")
-          graft.sources.ParquetSink.idempotentBatchAppend(
-            gated.select(col(idCol).as("doc"), col("__digest"), col("__dp"),
-              lit(batchId).as("batch_id")),
-            digestsDir, "__dp", batchId)
-          graft.sources.ParquetSink.idempotentBatchAppend(
-            batchInv
-              .select(col("doc"), col("shingle"), col("__rk"), col("n_sh"),
-                lit(batchId).as("batch_id"),
-                pmod(xxhash64(col("shingle")), lit(indexParts.toLong))
-                  .as("bucket_p")),
-            invDir, "bucket_p", batchId)
-          // the commit record, written LAST: everything above is now real
-          val marker = new org.apache.hadoop.fs.Path(
-            s"$commitsDir/batch=$batchId/_SUCCESS")
-          marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .create(marker, true).close()
-          if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1) {
-            graft.sources.ParquetSink.compactHotPartitions(spark, invDir,
-              compactMaxFiles)
-            graft.sources.ParquetSink.compactHotPartitions(spark, digestsDir,
-              compactMaxFiles)
-            ()
-          }
-        } // else: checkpoint replay of a committed batch — skip
+      compactEvery: Int = 8, compactMaxFiles: Int = 8): StreamingQuery = {
+    val digestsDir = s"$indexDir/digests"
+    val invDir = s"$indexDir/inventory"
+    markedIngest(docs, commitsDir, checkpointDir,
+        compactOnSchedule(_, _, compactEvery, compactMaxFiles, invDir,
+          digestsDir)) { (batch, batchId, highWater) =>
+      val spark = batch.sparkSession
+      // (1) per-document gates + dedup canonical form
+      val gated = graft.operators.Dedup
+        .qualityGate(batch, idCol, textCol, langCol)
+        .withColumn("__norm",
+          graft.functions.Text.normalizeForDedup(col(textCol)))
+        .withColumn("__digest", md5(col("__norm")))
+        .withColumn("__dp",
+          pmod(xxhash64(col("__digest")), lit(indexParts.toLong)))
+        .graftCheckpoint(true) // exact pass + index append consume it
+      // (2a) exact dedup: min id per digest in-batch, then the
+      // committed digest index (join carries the partition column so
+      // the probe prunes digest directories, the probeBandIndex DPP
+      // shape)
+      val inKeep = gated.groupBy(col("__digest"))
+        .agg(min(col(idCol)).as(idCol)).select(col(idCol))
+      val exactKept = committedIndex(spark, digestsDir, highWater) match {
+        case Some(prior) =>
+          // probe the corpus-sized index with the BROADCAST batch
+          // digest set (the probeBandIndex DPP shape: __dp is the
+          // partition column, so unmatched digest directories are
+          // pruned at the scan); the hit set is ≤ the batch's
+          // distinct digests, so the anti-join back is a broadcast
+          val batchDigests = gated
+            .select(col("__dp"), col("__digest")).distinct()
+          val hit = prior.select(col("__dp"), col("__digest"))
+            .join(broadcast(batchDigests),
+              Seq("__dp", "__digest"), "left_semi")
+            .distinct()
+          gated.join(inKeep, Seq(idCol), "left_semi")
+            .join(broadcast(hit), Seq("__dp", "__digest"), "left_anti")
+        case None => gated.join(inKeep, Seq(idCol), "left_semi")
       }
-      .start()
+      // (2b) near-dup dedup: canonical-prefix inventory of the
+      // batch's exact survivors vs the committed inventory — the
+      // exactPairsIngest probe at the curation threshold. ALL exact
+      // survivors are indexed below (kept or near-dup-dropped): a
+      // dropped doc must keep witnessing later cluster members.
+      val batchInv = graft.operators.Dedup.canonicalShingleInventory(
+          exactKept.select(col(idCol).as("doc"),
+            col("__norm").as("__t")), "doc", "__t", shingleN)
+        .graftCheckpoint(true) // probe + index append consume it
+      val corpusInv = committedIndex(spark, invDir, highWater)
+        .getOrElse(batchInv.filter(lit(false)))
+        .select(col("doc"), col("shingle"), col("__rk"), col("n_sh"))
+      val inv = batchInv.withColumn("__new", lit(true))
+        .unionByName(corpusInv.withColumn("__new", lit(false)))
+      val nearDropped = graft.operators.Dedup
+        .prefixPairsFromInventory(inv, minJaccard)
+        .filter(col("new_b")) // ordered ingest: the later member drops
+        .select(col("doc_b").as(idCol)).distinct()
+      val survivors = exactKept.join(nearDropped, Seq(idCol), "left_anti")
+      // (3) decontamination: per-doc vs the static benchmark
+      val clean = survivors.join(
+        broadcast(graft.operators.DataOps.contaminatedIds(
+          survivors, benchmark, idCol, textCol)),
+        Seq(idCol), "left_anti")
+      // (4) sampling under the static policy
+      val sampled = graft.operators.DataOps
+        .applySampleRates(clean, rates, idCol, sourceCol)
+      // (5) packing continued from the committed token total
+      val lastManifest =
+        highWater.map(last => spark.read.parquet(s"$manifestDir/batch=$last"))
+      val startTokens = lastManifest.fold(0L)(_
+        .agg(coalesce(sum(col("n_tokens")), lit(0L)))
+        .collect()(0).getLong(0))
+      val sized = sampled.select(col(idCol),
+        graft.functions.Text.tokenCount(col(textCol)).cast("long")
+          .as("n_tokens"))
+      val packed = graft.operators.DataOps
+        .packChunksBySize(sized, idCol, capacity,
+          startTokens = startTokens)
+        .join(sampled.select(col(idCol), col(sourceCol),
+          col("keep_rate")), Seq(idCol))
+        .withColumn("shard",
+          floor(col("first_chunk") / chunksPerShard).cast("long"))
+        .withColumn("batch_id", lit(batchId))
+        .graftCheckpoint(true) // shard append + manifest consume it
+      // (6) writes: shard append, merged manifest snapshot, indexes.
+      // All three appends are RETRY-idempotent (ParquetSink per-batch
+      // prefix recipe): a foreachBatch retry between a completed write
+      // and the marker would otherwise re-append the same batch's
+      // rows under the same batch_id — duplicated shard rows would
+      // double-report documents and duplicated inventory rows would
+      // inflate n_common/jaccard for later batches' near-dup
+      // decisions once the retry's marker lands.
+      graft.sources.ParquetSink.idempotentBatchAppend(
+        packed, shardsDir, "shard", batchId)
+      val batchAgg = packed.groupBy(col("shard")).agg(
+        count(lit(1)).as("n_docs"),
+        sum(col("n_tokens")).as("n_tokens"),
+        min(col("first_chunk")).as("first_chunk"),
+        max(col("last_chunk")).as("last_chunk"))
+      lastManifest.fold(batchAgg)(_.unionByName(batchAgg))
+        .groupBy(col("shard")).agg(
+          sum(col("n_docs")).as("n_docs"),
+          sum(col("n_tokens")).as("n_tokens"),
+          min(col("first_chunk")).as("first_chunk"),
+          max(col("last_chunk")).as("last_chunk"))
+        .write.mode("overwrite").parquet(s"$manifestDir/batch=$batchId")
+      graft.sources.ParquetSink.idempotentBatchAppend(
+        gated.select(col(idCol).as("doc"), col("__digest"), col("__dp"),
+          lit(batchId).as("batch_id")),
+        digestsDir, "__dp", batchId)
+      graft.sources.ParquetSink.idempotentBatchAppend(
+        batchInv
+          .select(col("doc"), col("shingle"), col("__rk"), col("n_sh"),
+            lit(batchId).as("batch_id"),
+            pmod(xxhash64(col("shingle")), lit(indexParts.toLong))
+              .as("bucket_p")),
+        invDir, "bucket_p", batchId)
+    }
+  }
 
   /** Shard rows of every COMMITTED trainingSetIngest batch, in the batch
     * x01 column layout (+ shard). */
   def readTrainingShards(spark: SparkSession, shardsDir: String,
-      commitsDir: String): DataFrame = {
-    val committed = committedBatches(spark, commitsDir)
-    spark.read.option("basePath", shardsDir).parquet(shardsDir)
-      .filter(col("batch_id").isin(committed.toSeq: _*))
+      commitsDir: String): DataFrame =
+    committedRows(spark.read.option("basePath", shardsDir).parquet(shardsDir),
+        "batch_id", lastCommittedBatch(spark, commitsDir))
       .withColumn("shard", col("shard").cast("long"))
       .select(col("doc_id"), col("n_tokens"), col("first_chunk"),
         col("last_chunk"), col("n_chunks"), col("source"),
         col("keep_rate"), col("shard"))
-  }
 
   /** The manifest snapshot of the LATEST committed trainingSetIngest
     * batch — the x02 manifest shape. */
   def readTrainingManifest(spark: SparkSession,
       manifestDir: String, commitsDir: String): DataFrame = {
-    val committed = committedBatches(spark, commitsDir)
-    require(committed.nonEmpty, "no committed training-set batches")
-    spark.read.parquet(s"$manifestDir/batch=${committed.max}")
+    val last = lastCommittedBatch(spark, commitsDir)
+    require(last.nonEmpty, "no committed training-set batches")
+    spark.read.parquet(s"$manifestDir/batch=${last.get}")
   }
 
   /** Pair rows of every COMMITTED exactPairsIngest batch. */
   def readPairs(spark: SparkSession, outDir: String,
-      commitsDir: String): DataFrame = {
-    val committed = committedBatches(spark, commitsDir)
-    spark.read.option("basePath", outDir).parquet(outDir)
-      .filter(col("batch").isin(committed.toSeq: _*))
-      .drop("batch")
-  }
+      commitsDir: String): DataFrame =
+    readCommittedOutputs(spark, outDir, commitsDir)
 
   /** Novelty rows of every COMMITTED batch (torn outputs excluded). */
   def readNovelty(spark: SparkSession, outDir: String,
-      commitsDir: String): DataFrame = {
-    val committed = committedBatches(spark, commitsDir)
-    spark.read.option("basePath", outDir).parquet(outDir)
-      .filter(col("batch").isin(committed.toSeq: _*))
-      .drop("batch")
+      commitsDir: String): DataFrame =
+    readCommittedOutputs(spark, outDir, commitsDir)
+
+  /** The commit record both protocols share: the ids `n`, ascending,
+    * whose `dir/<prefix>=<n>/_SUCCESS` exists. Micro-batch N+1 starts
+    * only after batch N's foreachBatch has returned, and batch N writes
+    * its record before returning, so the committed ids form one
+    * contiguous run and the last one is the high-water: every id at or
+    * below it is committed. */
+  private def committedIds(spark: SparkSession, dir: String,
+      prefix: String): Seq[Long] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq
+      .map(_.getPath.getName)
+      .filter(_.startsWith(s"$prefix="))
+      .map(_.stripPrefix(s"$prefix=").toLong)
+      .filter(id => fs.exists(commitRecord(dir, prefix, id)))
+      .sorted
   }
 
-  private def committedBatches(spark: SparkSession,
-      commitsDir: String): Set[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(commitsDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Set.empty
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .filter(n => fs.exists(
-        new org.apache.hadoop.fs.Path(s"$commitsDir/$n/_SUCCESS")))
-      .map(_.stripPrefix("batch=").toLong)
-      .toSet
+  private def commitRecord(dir: String, prefix: String, id: Long): Path =
+    new Path(s"$dir/$prefix=$id/_SUCCESS")
+
+  /** Drain `stream` (AvailableNow), running `f` on each micro-batch whose
+    * id is above the high-water of `dir`'s commit record, with the
+    * committed ids. A batch at or below it is a checkpoint replay or a
+    * rewind of committed work and is skipped before any work: neither
+    * protocol's step is idempotent. */
+  private def uncommitted(stream: DataFrame, checkpointDir: String,
+      dir: String, prefix: String)(
+      f: (DataFrame, Long, Seq[Long]) => Unit): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val committed = committedIds(batch.sparkSession, dir, prefix)
+        if (committed.lastOption.forall(_ < batchId))
+          f(batch, batchId, committed)
+      }
+      .start()
+
+  private val SnapshotPrefix = "snapshot"
+
+  private def snapshot(dir: String, id: Long): String =
+    s"$dir/$SnapshotPrefix=$id"
+
+  /** The versioned-snapshot protocol of the merge ingests
+    * ([[statsIngest]], [[ivmIngest]], [[cdcIngest]], [[sketchIngest]],
+    * [[cmCounterIngest]]), whose state is rewritten whole per batch:
+    * batch N writes `merge(batch, latest committed snapshot)` to
+    * `dir/snapshot=N/` with mode=overwrite. The parquet `_SUCCESS`
+    * marker is the commit record: a torn write has none, is invisible
+    * to the readers, and is overwritten by the checkpoint's replay of
+    * the same batch id — the effectively-exactly-once foreachBatch
+    * recipe from the Structured Streaming docs. After the commit, every
+    * snapshot but the new one and its predecessor (the rollback point)
+    * is pruned, so storage is O(state), not O(batches · state). */
+  private def snapshotIngest(stream: DataFrame, dir: String,
+      checkpointDir: String)(
+      merge: (DataFrame, Option[DataFrame]) => DataFrame): StreamingQuery =
+    uncommitted(stream, checkpointDir, dir, SnapshotPrefix) {
+        (batch, batchId, committed) =>
+      val spark = batch.sparkSession
+      merge(batch, committed.lastOption.map(id =>
+          spark.read.parquet(snapshot(dir, id))))
+        .write.mode("overwrite").parquet(snapshot(dir, batchId))
+      committed.dropRight(1).foreach { id =>
+        val p = new Path(snapshot(dir, id))
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      }
+    }
+
+  /** The latest committed snapshot under `dir`, if any. */
+  private def committedSnapshot(spark: SparkSession,
+      dir: String): Option[DataFrame] =
+    committedIds(spark, dir, SnapshotPrefix).lastOption
+      .map(id => spark.read.parquet(snapshot(dir, id)))
+
+  /** An empty frame typed by `ddl`: readers select their columns on the
+    * nothing-committed case too, and a zero-column frame would throw. */
+  private def emptyFrame(spark: SparkSession, ddl: String): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType.fromDDL(ddl))
+
+  private val MarkerPrefix = "batch"
+
+  /** The commit-marker protocol of the append ingests
+    * ([[noveltyIngest]], [[exactPairsIngest]], [[trainingSetIngest]]),
+    * whose state is an append-only index too large to rewrite per batch
+    * (the snapshot protocol would be O(corpus) per batch): `compute`
+    * writes batch N's outputs and its index rows, tagged with N, given
+    * the committed high-water, and the commit record
+    * `commitsDir/batch=N/_SUCCESS` is written LAST, so everything
+    * `compute` wrote is real once it exists. Readers trust only rows of
+    * committed batches ([[committedRows]]), so a torn append is
+    * invisible. `afterCommit` runs once the record exists, for
+    * maintenance that must not touch an uncommitted batch's files. */
+  private def markedIngest(stream: DataFrame, commitsDir: String,
+      checkpointDir: String,
+      afterCommit: (SparkSession, Long) => Unit = (_, _) => ())(
+      compute: (DataFrame, Long, Option[Long]) => Unit): StreamingQuery =
+    uncommitted(stream, checkpointDir, commitsDir, MarkerPrefix) {
+        (batch, batchId, committed) =>
+      val spark = batch.sparkSession
+      compute(batch, batchId, committed.lastOption)
+      val marker = commitRecord(commitsDir, MarkerPrefix, batchId)
+      marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .create(marker, true).close()
+      afterCommit(spark, batchId)
+    }
+
+  /** The high-water of the committed batches under `commitsDir`. */
+  private def lastCommittedBatch(spark: SparkSession,
+      commitsDir: String): Option[Long] =
+    committedIds(spark, commitsDir, MarkerPrefix).lastOption
+
+  /** The rows of `rows` written by committed batches: batch id column
+    * `c` at or below the high-water (none before the first commit). */
+  private def committedRows(rows: DataFrame, c: String,
+      highWater: Option[Long]): DataFrame =
+    rows.filter(highWater.fold(lit(false))(col(c) <= _))
+
+  /** The committed rows of the index under `dir` (column `batch_id`), or
+    * None when it does not exist yet (first batch): any other read
+    * failure must fail the batch so the checkpoint replays it. */
+  private def committedIndex(spark: SparkSession, dir: String,
+      highWater: Option[Long]): Option[DataFrame] = {
+    val p = new Path(dir)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      None
+    else Some(committedRows(spark.read.parquet(dir), "batch_id", highWater))
   }
+
+  /** Per-batch outputs `outDir/batch=<id>` of every committed batch. */
+  private def readCommittedOutputs(spark: SparkSession, outDir: String,
+      commitsDir: String): DataFrame =
+    committedRows(spark.read.option("basePath", outDir).parquet(outDir),
+        "batch", lastCommittedBatch(spark, commitsDir))
+      .drop("batch")
+
+  /** Every `every` batches (0 never), compact the partitions of `dirs`
+    * holding more than `maxFiles` files
+    * ([[graft.sources.ParquetSink.compactHotPartitions]]): without it
+    * per-batch appends grow a probe's file count (and open/footer cost)
+    * with batch COUNT forever. Safe inside foreachBatch: micro-batches
+    * serialize, so the swap never races a probe of the same stream, and
+    * compaction preserves rows, including the `batch_id` column the
+    * committed-row filter reads. */
+  private def compactOnSchedule(spark: SparkSession, batchId: Long,
+      every: Int, maxFiles: Int, dirs: String*): Unit =
+    if (every > 0 && batchId % every == every - 1)
+      dirs.foreach(graft.sources.ParquetSink.compactHotPartitions(spark, _,
+        maxFiles))
 
   /** Stream-stream interval join: left events matched to right events of
     * the same key with right.ts in [left.ts - lower, left.ts + upper].

@@ -60,11 +60,6 @@ class TablesSpec extends SparkSpec {
     // consumers shuffle right after a cheap scan)
     assert(Tables.lineitem(spark, dir).rdd.getNumPartitions ===
       scan.rdd.getNumPartitions)
-    // kill-switch pins the A/B claim per deployment
-    spark.conf.set("graft.wideScans", "false")
-    try assert(Tables.documents(spark, dir).rdd.getNumPartitions ===
-      scan.rdd.getNumPartitions)
-    finally spark.conf.unset("graft.wideScans")
     // small dense table (the committed sf dirs) stays on the narrow
     // path — the oracle exercises it unchanged
     val small = Tables.documents(spark, sf("sf0.001"))

@@ -3,7 +3,6 @@ package graft.etl.pgwire
 import java.sql.Timestamp
 
 import graft.etl.{JdbcUpsert, Pipelines}
-import org.apache.spark.sql.SparkSession
 
 /** Manual scaling benchmark (test scope, not part of the suite) for the
   * ETL/reference half — VERDICT r12 item 5: the analytics surface has a
@@ -42,14 +41,9 @@ object EtlScaleBench {
     val oneDir = graft.operators.EtlQueries.CorpusDir
     require(PgServerFixture.available, "no postgres installation")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("etl-scale-bench")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = graft.GraftSession(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
     spark.sparkContext.setLogLevel("WARN")
 
     // page-cache warm both corpora once (the Bench.scala protocol): the

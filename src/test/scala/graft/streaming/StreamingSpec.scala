@@ -396,6 +396,48 @@ class StreamingSpec extends SparkSpec
     assert(snaps.length <= 2, s"snapshots not pruned: ${snaps.toSeq}")
   }
 
+  /** Delete each file, with the `.<name>.crc` checksum sibling Hadoop's
+    * local file system writes next to it: a torn commit, as a crash
+    * between a batch's writes and its commit record leaves it. */
+  private def tear(files: String*): Unit = files.foreach { f =>
+    val p = Paths.get(f)
+    Files.delete(p)
+    Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc")); ()
+  }
+
+  test("stats ingest: a torn snapshot commit is invisible to the reader, " +
+    "and the checkpoint's replay of its batch id completes it") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val tmp = Files.createTempDirectory("stats_torn").toString
+    val (statsDir, ckpt) = (s"$tmp/stats", s"$tmp/ckpt")
+    val ev = graft.Tables.events(spark, sf("sf0.001"))
+      .select($"user_id", $"event_id", $"ts", $"value")
+      .as[Streaming.UserEvent].collect()
+    val input = MemoryStream[Streaming.UserEvent]
+    def drain(): Unit = Streaming.statsIngest(
+      input.toDF().select($"user_id", $"ts", $"value"),
+      "user_id", "value", statsDir, ckpt).awaitTermination()
+    def collectStats() = Streaming.readStats(spark, statsDir)
+      .as[(Long, Long, Double, Double)].collect().sortBy(_._1).toSeq
+    val states = (0 to 2).map { r =>
+      input.addData(ev.filter(_.event_id % 3 == r).toSeq)
+      drain()
+      collectStats()
+    }
+    // batch 2 wrote its snapshot but died before the parquet commit
+    // record, and before the checkpoint recorded the batch as done
+    tear(s"$statsDir/snapshot=2/_SUCCESS", s"$ckpt/commits/2")
+    assert(collectStats() === states(1),
+      "a snapshot without its commit record must be invisible")
+    drain() // restart: the checkpoint replays batch 2 on the committed state
+    assert(collectStats() === states(2),
+      "the replayed batch must merge exactly once")
+    val snaps = new java.io.File(statsDir).listFiles()
+      .map(_.getName).filter(_.startsWith("snapshot="))
+    assert(snaps.length <= 2, s"snapshots not pruned: ${snaps.toSeq}")
+  }
+
   test("sketch ingest: 3 batches + restarts reproduce the whole-corpus " +
     "KMV sketch ROW-FOR-ROW (the merge theorem, operational); rewound " +
     "batch ids are skipped") {
@@ -661,6 +703,41 @@ class StreamingSpec extends SparkSpec
     input.addData(docs.slice(cuts(0), cuts(1)).toSeq)
     drain(s"$tmp/ckpt_rewound")
     assert(collectNovelty() === got, "a rewound batch must be skipped")
+  }
+
+  test("novelty ingest: a torn commit marker hides its batch from the " +
+    "reader, and the checkpoint's replay rescores it to equal t33") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val tmp = Files.createTempDirectory("novelty_torn").toString
+    val (outDir, idxDir, comDir, ckpt) =
+      (s"$tmp/out", s"$tmp/index", s"$tmp/commits", s"$tmp/ckpt")
+    val docs = graft.Tables.documents(spark, sf("sf0.001"))
+      .select($"doc_id", $"text").as[(Long, String)].collect().sortBy(_._1)
+    val input = MemoryStream[(Long, String)]
+    def drain(): Unit = Streaming.noveltyIngest(
+      input.toDF().toDF("doc_id", "text"),
+      "doc_id", "text", outDir, idxDir, comDir, ckpt).awaitTermination()
+    def collectNovelty() = Streaming.readNovelty(spark, outDir, comDir)
+      .as[(Long, Long, Long, Double)].collect().sortBy(_._1).toSeq
+    val cuts = Seq(0, docs.length / 3, 2 * docs.length / 3, docs.length)
+    val states = (0 until 3).map { r =>
+      input.addData(docs.slice(cuts(r), cuts(r + 1)).toSeq)
+      drain()
+      collectNovelty()
+    }
+    // batch 2 wrote its output and index rows but died before its
+    // marker, and before the checkpoint recorded the batch as done
+    tear(s"$comDir/batch=2/_SUCCESS", s"$ckpt/commits/2")
+    assert(collectNovelty() === states(1),
+      "a batch without its commit marker must be invisible")
+    drain() // restart: batch 2 rescored against batches 0 and 1 only
+    val want = graft.operators.DataOps
+      .queries("t33_ngram_novelty")(spark, sf("sf0.001"))
+      .as[(Long, Long, Long, Double)].collect().sortBy(_._1).toSeq
+    assert(collectNovelty() === want,
+      "the replayed batch must score as if it had never been torn")
+    assert(states(2) === want)
   }
 
   test("exact-pairs ingest: cumulative feed over 3 restarts equals the " +

@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Value-level diff of two Verify dump directories (A/B harness for
-config experiments like graft.wideScans): for every query present in
+code or config changes that must not move a value): for every query present in
 both dumps, load the parquet, sort columns by name and rows by value,
 and compare exactly. Prints one line per mismatch and a summary.
 

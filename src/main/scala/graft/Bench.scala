@@ -115,19 +115,28 @@ object Bench {
     // broadcast/RDD/shuffle state are reclaimed now rather than during
     // someone's timed run (r12's sf2 sweep measured in-sweep inflation
     // up to 7x from accumulated heap debris). The adjudication pass
-    // below applies the same rule.
-    def timedRun(fn: (SparkSession, String) => DataFrame): Double = {
+    // below applies the same rule. A failed run times as -1.0; its cause
+    // ("ExceptionClass: message", first failure per query) goes to stderr
+    // and to the file artifact's "failures" map.
+    val failures = scala.collection.mutable.LinkedHashMap[String, String]()
+    def timedRun(name: String, fn: (SparkSession, String) => DataFrame): Double = {
       graft.operators.DataOps.evictSessionMemos(); System.gc()
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count()
             (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => -1.0 }
+      catch { case e: Throwable =>
+        if (!failures.contains(name)) {
+          failures(name) = s"${e.getClass.getName}: ${e.getMessage}"
+          System.err.println(s"[bench] $name failed: ${failures(name)}")
+        }
+        -1.0
+      }
     }
     for (i <- 0 until reps) {
       stampLoad()
       queries.foreach { case (name, fn) =>
         if (!failedNames.contains(name)) {
-          val t = timedRun(fn)
+          val t = timedRun(name, fn)
           if (t < 0) failedNames += name else timesByName(name)(i) = t
         }
       }
@@ -177,7 +186,7 @@ object Bench {
         stampLoad() // the adjudication pass gets its own load context
         flagged.map { name =>
           val fn = SparkEntry.queries(name)
-          val ts = (0 until 3).map(_ => timedRun(fn)).sorted
+          val ts = (0 until 3).map(_ => timedRun(name, fn)).sorted
           name -> (if (ts.exists(_ < 0)) -1.0 else ts(ts.length / 2))
         }
       }
@@ -235,8 +244,12 @@ object Bench {
     val coldTotal = raw.flatMap(_._2.headOption).filter(_ >= 0).sum
     // "loadavg": one [1m,5m,15m] triple per sweep boundary (reps+1 of
     // them) — the adjudication data for a noisy headline.
+    import scala.jdk.CollectionConverters._
+    val failuresJson = new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValueAsString(failures.asJava)
     val fileLine = line.dropRight(1) +
       s""","shared_evict":"per_query"""" +
+      s""","failures":$failuresJson""" +
       s""","cold_total":$coldTotal,"cold":$coldJson,""" +
       s""""loadavg":[${loadStamps.mkString(",")}],"raw":$rawJson}"""
     // A filtered run (SPARK_GRAFT_BENCH_ONLY) writes to a suffixed file:

@@ -11,17 +11,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * worker executor relaunch — none of which `local[*]` can even
   * represent (there is no executor process to lose).
   *
-  * Modes:
+  * Mode:
   *   batch <query> [killAfterMs]  — run a registered SparkEntry query
   *     twice in fresh sessions (baseline, then with one executor killed
   *     `killAfterMs` after the action starts); compare sorted row
   *     strings (Double.toString is injective, the NaN-safe compare
   *     convention).
-  *   stream [killAfterMs] — the exact-pairs ingest scenario from
-  *     StreamingSpec (3 doc batches through exactPairsIngest) with one
-  *     executor killed during the drain; asserts the cumulative
-  *     committed pair feed equals the whole-corpus batch d16 join —
-  *     the oracle-shape equality, now across a mid-ingest process loss.
   *
   * Usage (the local-cluster recipe from SCALE.md):
   *   sbt package && export SPARK_SCALA_VERSION=2.13
@@ -108,8 +103,7 @@ object FaultInject {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val mode = args(1)
-    val killAfterMs = args.lift(3).orElse(args.lift(2).filter(_.forall(_.isDigit)))
-      .map(_.toLong).getOrElse(2500L)
+    val killAfterMs = args.lift(3).map(_.toLong).getOrElse(2500L)
 
     val ok = mode match {
       case "batch" =>
@@ -136,38 +130,6 @@ object FaultInject {
         println(s"""{"mode":"batch","query":"$query","killed":$k,""" +
           s""""rows":${want.size},"match":${got == want}}""")
         k && got == want
-
-      case "stream" =>
-        val spark = session()
-        import spark.implicits._
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-        val tmp = java.nio.file.Files.createTempDirectory("fault_stream").toString
-        val docs = Tables.documents(spark, sfDir)
-          .select($"doc_id", $"text").as[(Long, String)].collect().sortBy(_._1)
-        val input = MemoryStream[(Long, String)]
-        val cuts = Seq(0, docs.length / 3, 2 * docs.length / 3, docs.length)
-        (0 until 3).foreach(r => input.addData(docs.slice(cuts(r), cuts(r + 1)).toSeq))
-        val killed = killOneAfter(spark.sparkContext.applicationId, killAfterMs)
-        val q = streaming.Streaming.exactPairsIngest(
-          input.toDF().toDF("doc_id", "text"), "doc_id", "text",
-          s"$tmp/out", s"$tmp/index", s"$tmp/commits", s"$tmp/ckpt",
-          minJaccard = 0.7)
-        q.awaitTermination()
-        val got = streaming.Streaming.readPairs(spark, s"$tmp/out", s"$tmp/commits")
-          .select($"doc_a", $"doc_b", $"n_common", $"size_a", $"size_b", $"jaccard")
-        val want = operators.Dedup.prefixFilterJaccardPairs(
-          Tables.documents(spark, sfDir), "doc_id", "text",
-          n = 3, minJaccard = 0.7)
-        val (g, w) = (rows(got), rows(want))
-        val k = killed.get()
-        spark.stop()
-        if (!k) System.err.println("[fault] FAIL: no executor was killed")
-        if (g != w) System.err.println(
-          s"[fault] FAIL: pair feed differs from batch d16 (${g.size} vs ${w.size})")
-        println(s"""{"mode":"stream","killed":$k,"pairs":${w.size},""" +
-          s""""match":${g == w}}""")
-        k && g == w
 
       case other => System.err.println(s"unknown mode: $other"); false
     }

@@ -97,9 +97,8 @@ object Tables {
     }
 
   /** Normalize a `ts` column to session-tz TimestampType whatever the
-    * parquet encoding delivered (see [[load]]); shared with the streaming
-    * readers, whose source schema is the raw parquet schema. */
-  def normalizeTs(df: DataFrame): DataFrame =
+    * parquet encoding delivered (see [[load]]). */
+  private def normalizeTs(df: DataFrame): DataFrame =
     df.schema.find(_.name == "ts").map(_.dataType) match {
       case Some(LongType) =>
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))

@@ -6,12 +6,10 @@ import java.util.Properties
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The two reference DAGs (dags/postgres_etl/{tracking,events}_table.py)
-  * as lazy DataFrame pipelines. Each table's transform chain is defined
-  * once ([[trackingChain]], [[eventsChain]]) as a function of the scanned
-  * CSV rows tagged with their file name ([[Transforms.addFileName]]); the
-  * batch read ([[tracking]], [[events]]) and the streaming micro-batch
-  * bodies (`graft.streaming.Streaming`) both call it. The chain is one plan per batch, executed only by the sink's
-  * staging write (or by the caller for tests and queries).
+  * as lazy DataFrame pipelines over the CSV rows tagged with their file
+  * name ([[Transforms.addFileName]]). Each is one plan per batch,
+  * executed only by the sink's staging write (or by the caller for tests
+  * and queries).
   *
   * Incremental contract (SURVEY.md §2.9): the watermark is max(fileName)
   * in the target table; only files strictly greater are read — the
@@ -23,15 +21,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Pipelines {
 
-  /** tracking: one row per CDC document (no explode).
+  private def scan(spark: SparkSession, csvPaths: Seq[String]): DataFrame =
+    Transforms.addFileName(
+      spark.read.schema(Schemas.source).option("header", "true").csv(csvPaths: _*))
+
+  /** tracking: one row per CDC document (no explode) of the CSV files at
+    * `csvPaths` newer than `watermark`.
     * watermark → epoch→ts → uploadDate → project → normalizeNulls →
     * dedupKeepLast (or distinct on the as-written path). The watermark
-    * filter comes first so it reaches the scan; a stream passes none, its
-    * checkpoint is its watermark. */
-  def trackingChain(tagged: DataFrame, clock: Option[Timestamp],
+    * filter comes first so it reaches the scan. */
+  def tracking(spark: SparkSession, csvPaths: Seq[String],
       watermark: Option[String] = None,
+      clock: Option[Timestamp] = None,
       intendedDedup: Boolean = true): DataFrame = {
-    val fresh = Transforms.afterWatermark(watermark)(tagged).drop("array_trackingEvents")
+    val fresh = Transforms.afterWatermark(watermark)(scan(spark, csvPaths))
+      .drop("array_trackingEvents")
     val converted = Transforms.withUploadDate(clock)(
       Transforms.epochSecondsToTs(fresh))
     val projected = Transforms.normalizeNulls(
@@ -42,37 +46,20 @@ object Pipelines {
     else Transforms.distinctRows(projected)
   }
 
-  /** events: one row per nested tracking event (explode_outer).
+  /** events: one row per nested tracking event (explode_outer) of the CSV
+    * files at `csvPaths` newer than `watermark`.
     * watermark → parse(py literal → array) → explode → uploadDate →
     * project → normalizeNulls → distinct. */
-  def eventsChain(tagged: DataFrame, clock: Option[Timestamp],
-      watermark: Option[String] = None): DataFrame = {
-    val fresh = Transforms.afterWatermark(watermark)(tagged)
+  def events(spark: SparkSession, csvPaths: Seq[String],
+      watermark: Option[String] = None,
+      clock: Option[Timestamp] = None): DataFrame = {
+    val fresh = Transforms.afterWatermark(watermark)(scan(spark, csvPaths))
     val exploded = Transforms.explodeEvents(Transforms.parseEventArray(fresh))
     val converted = Transforms.withUploadDate(clock)(exploded)
     val projected = Transforms.normalizeNulls(
       Transforms.project(Schemas.eventsColumns)(converted))
     Transforms.distinctRows(projected)
   }
-
-  private def scan(spark: SparkSession, csvPaths: Seq[String]): DataFrame =
-    Transforms.addFileName(
-      spark.read.schema(Schemas.source).option("header", "true").csv(csvPaths: _*))
-
-  /** The tracking table of the CSV files at `csvPaths` newer than
-    * `watermark`. */
-  def tracking(spark: SparkSession, csvPaths: Seq[String],
-      watermark: Option[String] = None,
-      clock: Option[Timestamp] = None,
-      intendedDedup: Boolean = true): DataFrame =
-    trackingChain(scan(spark, csvPaths), clock, watermark, intendedDedup)
-
-  /** The events table of the CSV files at `csvPaths` newer than
-    * `watermark`. */
-  def events(spark: SparkSession, csvPaths: Seq[String],
-      watermark: Option[String] = None,
-      clock: Option[Timestamp] = None): DataFrame =
-    eventsChain(scan(spark, csvPaths), clock, watermark)
 
   /** Full incremental load step: probe the watermark, build the pipeline,
     * upsert. One call = one reference "DAG run". Returns the rows the

@@ -22,8 +22,7 @@ object Transforms {
     * the CDC version order. The column is constant per file, so Catalyst
     * pushes a filter on it — the watermark's `fileName > wm` — into file
     * listing: files at or below the watermark are never opened. `df` must
-    * be a file scan, batch or streaming; a `foreachBatch` frame has no
-    * `_metadata`, so a stream is tagged before `writeStream`. */
+    * be a file scan. */
   def withFileName(df: DataFrame): Column =
     df.metadataColumn("_metadata").getField("file_name")
 

@@ -21,8 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * document. Replacing the join with this expression removes one
   * corpus-token-scale exchange, two aggregations and a doc-keyed join
   * from every consumer (the t12 clean report, the quality gate under
-  * the x01 curation fixpoint, and the streaming gate, which paid the
-  * join per micro-batch).
+  * the x01 curation fixpoint).
   *
   * Value identity with the relational form, piece by piece: the token
   * split is Java `String.split(" ", -1)` = Spark `split(c, " ")`

@@ -68,14 +68,7 @@ object Cdc {
     * row_number window over the changelog (keyed, so the shuffle is the
     * feed — never the base), one anti-join, one union; latest-op-wins
     * means the result is independent of how many intermediate ops the
-    * feed carried, which is what makes compacted-topic replays safe.
-    *
-    * When `base` already carries a `src` column (a snapshot produced by
-    * an earlier apply — the [[graft.streaming.Streaming.cdcIngest]]
-    * loop), untouched rows KEEP it: a key whose current value came from
-    * feed N−3 is still 'applied' after three pass-through rounds, which
-    * is what makes the chained per-batch applies equal one apply of the
-    * concatenated feed. */
+    * feed carried, which is what makes compacted-topic replays safe. */
   def applyChangelog(base: DataFrame, changelog: DataFrame, key: String,
       opCol: String, seqCols: Seq[String],
       valueCols: Seq[String]): DataFrame = {
@@ -84,11 +77,9 @@ object Cdc {
     val latest = changelog.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .select(col(key) +: col(opCol).as("__op") +: valueCols.map(col): _*)
-    val untouched0 = base
+    val untouched = base
       .join(latest.select(col(key)), Seq(key), "left_anti")
-    val untouched =
-      if (base.columns.contains("src")) untouched0
-      else untouched0.withColumn("src", lit("base"))
+      .withColumn("src", lit("base"))
     val applied = latest.filter(col("__op") =!= "D")
       .drop("__op").withColumn("src", lit("applied"))
     untouched.unionByName(applied)

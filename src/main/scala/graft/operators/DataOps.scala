@@ -66,9 +66,8 @@ object DataOps {
     * where h is the 52-bit md5-derived hash of a word 3-shingle
     * (13 hex chars — 52 bits so the double lane in the heap is exact;
     * the oracle mirrors it with the md5Bucket UBIGINT-cast
-    * convention). `private[graft]`: the streaming sketch ingest hashes
-    * its micro-batches through the same definition. */
-  private[graft] def kmvHashes(docs: DataFrame): DataFrame =
+    * convention). */
+  private def kmvHashes(docs: DataFrame): DataFrame =
     docs.select(col("source"),
         explode(graft.functions.Text.shingles(col("text"), 3)).as("tok"))
       .select(col("source"),
@@ -79,12 +78,11 @@ object DataOps {
     * exploded (source, h) rows. The distinct is load-bearing — a true
     * KMV keeps k smallest VALUES, not offers, and it is what makes
     * this function idempotent and associative (prune(prune(A) ∪
-    * prune(B)) = prune(A ∪ B), the merge theorem) — the property the
-    * streaming ingest's cross-batch merge rides. Spark's partial hash
+    * prune(B)) = prune(A ∪ B), the merge theorem). Spark's partial hash
     * aggregation dedups map-side, so the shuffled volume is
     * vocabulary-bound, never corpus-bound; the heap then ships ≤ k
     * rows per source per map task. */
-  private[graft] def kmvPrune(hashes: DataFrame, k: Int): DataFrame =
+  private def kmvPrune(hashes: DataFrame, k: Int): DataFrame =
     hashes.distinct()
       .groupBy(col("source"))
       .agg(graft.functions.TopKPairs.top_k_pairs(
@@ -93,8 +91,8 @@ object DataOps {
       .select(col("source"), col("__e.id").as("h"))
 
   /** The per-source KMV sketch of a document relation (sk02's probe
-    * relation, the streaming ingest's batch-mode twin). */
-  private[graft] def kmvSketchRows(docs: DataFrame, k: Int): DataFrame =
+    * relation). */
+  private def kmvSketchRows(docs: DataFrame, k: Int): DataFrame =
     kmvPrune(kmvHashes(docs), k)
 
   /** The sk03/sk04 term relation: one `(source, tok)` row per word
@@ -103,10 +101,8 @@ object DataOps {
     * reason sk01 sketches shingles: the n-gram space is what outgrows
     * memory at corpus scale; this corpus' unigram vocabulary is 31
     * words while its 3-gram vocabulary already beats the sketch width,
-    * so the overestimate lanes are non-vacuous at every SF).
-    * `private[graft]`: the streaming counter ingest tokenizes its
-    * micro-batches through the same definition. */
-  private[graft] def cmTokens(docs: DataFrame): DataFrame =
+    * so the overestimate lanes are non-vacuous at every SF). */
+  private def cmTokens(docs: DataFrame): DataFrame =
     docs.select(col("source"),
       explode(graft.functions.Text.ngrams(col("text"), 3)).as("tok"))
 
@@ -117,33 +113,18 @@ object DataOps {
   private def cmPos(j: Column, tok: Column, width: Int): Column =
     md5Bucket(concat(lit("cm"), j.cast("string"), lit(":"), tok)) % width
 
-  /** The Count-Min counter table of a token-occurrence relation:
-    * `(source, j, pos, c)` with `depth` hash rows of `width` counters.
-    * At most `sources · depth · width` rows whatever the corpus size —
-    * the fixed-footprint frequency summary — and counters are SUMS, so
-    * the table is mergeable by addition (counters(A ∪ B) =
-    * counters(A) + counters(B) groupwise; the streaming ingest's
-    * cross-batch merge and Spark's map-side partial aggregation both
-    * ride that). Parameterized so the spec can shrink `width` until
-    * collisions are forced (the c04 convention). */
-  private[graft] def cmCounters(toks: DataFrame, width: Int,
-      depth: Int): DataFrame =
-    toks
-      .select(col("source"),
-        explode(sequence(lit(1), lit(depth))).as("j"), col("tok"))
-      .withColumn("pos", cmPos(col("j"), col("tok"), width))
-      .groupBy(col("source"), col("j"), col("pos"))
-      .agg(count(lit(1)).as("c"))
-
-  /** [[cmCounters]] over a PRE-COUNTED (source, tok, cnt) relation
-    * (round 15): the occurrence form md5-hashed every token OCCURRENCE
-    * depth times; counters are sums, so hashing each DISTINCT
-    * (source, token) once and summing its count is value-identical
-    * while the md5 + explode work drops from corpus scale to
-    * vocabulary scale. The sk03/sk04/sk05 truth lanes consume the same
-    * counted relation ([[CmTokenCounts]]), so the corpus n-gram
-    * explode runs once per sweep for the whole sketch family. */
-  private[graft] def cmCountersFromCounts(counts: DataFrame, width: Int,
+  /** The Count-Min counter table `(source, j, pos, c)` of a PRE-COUNTED
+    * (source, tok, cnt) relation, with `depth` hash rows of `width`
+    * counters. At most `sources · depth · width` rows whatever the
+    * corpus size — the fixed-footprint frequency summary — and counters
+    * are SUMS, so the table is mergeable by addition (counters(A ∪ B) =
+    * counters(A) + counters(B) groupwise; Spark's map-side partial
+    * aggregation rides that). Hashing each DISTINCT (source, token) once
+    * and summing its count keeps the md5 + explode work at vocabulary
+    * scale; the sk03/sk04/sk05 truth lanes consume the same counted
+    * relation ([[CmTokenCounts]]), so the corpus n-gram explode runs
+    * once per sweep for the whole sketch family. */
+  private def cmCountersFromCounts(counts: DataFrame, width: Int,
       depth: Int): DataFrame =
     counts
       .select(col("source"),
@@ -349,14 +330,7 @@ object DataOps {
     * sizing) occupy no chunk and are EXCLUDED — keeping them would emit
     * inverted chunk ranges (last = first − 1) at capacity boundaries. */
   def packChunksBySize(sized: DataFrame, idCol: String = "doc_id",
-      capacity: Long = 512L, nBuckets: Long = 1024L,
-      startTokens: Long = 0L): DataFrame = {
-    // startTokens offsets the global cumsum — the incremental-extension
-    // hook: a stream of id-ORDERED batches packs each batch starting at
-    // the committed corpus's token total, and because the cumsum of a
-    // doc depends only on docs with smaller ids, the per-batch packing
-    // is bit-identical to re-packing the whole corpus (the
-    // trainingSetIngest ≡ batch-x01 equivalence rides exactly this).
+      capacity: Long = 512L, nBuckets: Long = 1024L): DataFrame = {
     val id = col(idCol)
     val nonEmpty = sized.filter(col("n_tokens") > 0)
     val bounds = nonEmpty.agg(min(id).as("__lo"), max(id).as("__hi"))
@@ -374,7 +348,7 @@ object DataOps {
     bucketed
       .withColumn("__lcum", sum(col("n_tokens")).over(wLocal))
       .join(broadcast(offs), Seq("__b"))
-      .withColumn("__cum", col("__lcum") + col("__off") + lit(startTokens))
+      .withColumn("__cum", col("__lcum") + col("__off"))
       // doc occupies token interval [cum - n, cum); chunk = floor(/cap)
       // (exact: token totals sit far below 2^53)
       .select(id, col("n_tokens"),
@@ -896,41 +870,23 @@ object DataOps {
     * decisions are the deterministic md5 threshold. Returns the sampled
     * rows with keep_rate appended. */
   def temperatureSample(docs: DataFrame, budget: Double,
-      idCol: String = "doc_id", sourceCol: String = "source"): DataFrame =
-    applySampleRates(docs, temperatureRates(docs, budget, sourceCol),
-      idCol, sourceCol)
-
-  /** The (source, keep_rate) POLICY relation of [[temperatureSample]],
-    * exposed on its own: per-source quotas follow n_src^0.5, rates are
-    * 9dp-rounded doubles. Factored out so the streaming capstone
-    * ([[graft.streaming.Streaming.trainingSetIngest]]) can apply a
-    * policy computed OUT-OF-BAND as a static relation — the
-    * embeddingIngest centroid convention: corpus-statistics artifacts
-    * (sampling weights, centroids, merge tables) are versioned policy
-    * inputs to an ingest, never recomputed under it per batch. */
-  def temperatureRates(docs: DataFrame, budget: Double,
-      sourceCol: String = "source"): DataFrame = {
+      idCol: String = "doc_id", sourceCol: String = "source"): DataFrame = {
     val weights = docs.groupBy(col(sourceCol))
       .agg(count(lit(1)).as("__n_src"))
       .withColumn("__w",
         round(sqrt(col("__n_src").cast("double")), 9).cast("decimal(18,9)"))
     val tot = weights.agg(sum(col("__w")).as("__tot"))
-    weights.crossJoin(broadcast(tot))
+    val rates = weights.crossJoin(broadcast(tot))
       .withColumn("keep_rate",
         round(least(lit(1.0),
           lit(budget) * col("__w").cast("double") / col("__tot").cast("double") /
             col("__n_src")), 9))
       .select(col(sourceCol), col("keep_rate"))
-  }
-
-  /** The deterministic keep decision of [[temperatureSample]] under a
-    * given rates policy: md5 coin of the id against keep_rate · 2^32.
-    * Inner join — a source absent from the policy keeps nothing. */
-  def applySampleRates(docs: DataFrame, rates: DataFrame,
-      idCol: String = "doc_id", sourceCol: String = "source"): DataFrame =
+    // the keep decision: md5 coin of the id against keep_rate · 2^32
     docs.join(broadcast(rates), Seq(sourceCol))
       .filter(md5Bucket(col(idCol)).cast("double") <
         col("keep_rate") * 4294967296.0)
+  }
 
   /** One-call training-set preparation — the composition a pipeline
     * actually ships: quality/PII/repetition gates + exact/near dedup
@@ -1201,8 +1157,7 @@ object DataOps {
   // md5 / 16 minhash lanes / 64 simhash bit sums) straight off the
   // documents scan, and a sub-4 MB corpus file runs that build — and the
   // eager checkpoint materializing it — on ONE core (the c03/c04/c05
-  // class from the round-14 floor A/B; batch sites only, streaming's
-  // per-batch calls are untouched). Values are partitioning-invariant
+  // class from the round-14 floor A/B). Values are partitioning-invariant
   // (deterministic hashes, exact counts — spec-pinned).
   private val MinhashPairs = Shared.relation("minhash_pairs") { (s, d) =>
     Dedup.minHashLshPairs(
@@ -2106,7 +2061,7 @@ object DataOps {
     // are live at every SF, not just in the forced-collision spec).
     // Counters
     // are sums → mergeable by addition (map-side combine, per-shard
-    // build + add, the streaming ingest's merge), and the estimate
+    // build + add), and the estimate
     // min_j c[j][pos_j(t)] is a pure function of the data under the
     // md5Bucket hash convention — so like sk01/c04 and unlike HLL, the
     // ORACLE REPRODUCES THE APPROXIMATION EXACTLY, overestimates and

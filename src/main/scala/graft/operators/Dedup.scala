@@ -378,10 +378,8 @@ object Dedup {
     * The prefix order is CANONICAL — (xxhash64(shingle), shingle) — not
     * corpus-df rare-first as in d16. The prefix lemma (Xiao et al. 2008)
     * holds for ANY total order shared by both sides, and a df-independent
-    * order makes a PERSISTED corpus prefix IMMUTABLE: document prefixes
-    * never need recomputation as corpus df drifts, which is what lets
-    * [[graft.streaming.Streaming.exactPairsIngest]] append to its prefix
-    * index instead of rebuilding it per batch. The price is more
+    * order makes a corpus prefix IMMUTABLE: document prefixes never need
+    * recomputation as corpus df drifts. The price is more
     * candidates than rare-first (hash order has no selectivity
     * preference); the exact verify keeps the OUTPUT identical — the
     * agreement-with-d16 spec pins that the two orders produce the same
@@ -404,9 +402,8 @@ object Dedup {
   /** The canonical-order shingle inventory of a corpus slice: one row per
     * (doc, shingle) with the doc's canonical rank `__rk` (position in
     * (xxhash64(shingle), shingle) order — df-independent, so persisted
-    * rows never need re-ranking) and size `n_sh`. This IS the schema of
-    * [[graft.streaming.Streaming.exactPairsIngest]]'s persisted index. */
-  def canonicalShingleInventory(df: DataFrame, idCol: String,
+    * rows never need re-ranking) and size `n_sh`. */
+  private def canonicalShingleInventory(df: DataFrame, idCol: String,
       textCol: String, n: Int): DataFrame = {
     val sh = df.select(col(idCol).as("doc"),
       explode(Text.shingles(col(textCol), n)).as("shingle"))
@@ -423,7 +420,7 @@ object Dedup {
     * prefixes, τ-factor length filter, exact verify on survivors.
     * Callers checkpoint the inventory — it is consumed by the prefix
     * filter and both verify probes. */
-  private[graft] def prefixPairsFromInventory(inv: DataFrame,
+  private def prefixPairsFromInventory(inv: DataFrame,
       minJaccard: Double): DataFrame = {
     require(minJaccard > 0.0 && minJaccard <= 1.0,
       s"prefixPairsFromInventory: minJaccard must be in (0, 1], got $minJaccard")
@@ -569,63 +566,6 @@ object Dedup {
           b => b)).cast("double") / numPerm)
       .filter($"est_jaccard" >= minEstJaccard)
       .select($"doc_a", $"doc_b", $"est_jaccard")
-  }
-
-  /** Persist the banded MinHash index for INCREMENTAL ingest — the
-    * storage half of [[incrementalJaccardPairs]]: the kept corpus's
-    * (doc, sig, band, bucket) rows land once, partitioned by a bucket
-    * prefix (`bucket_p = pmod(bucket, indexParts)`), and every future
-    * batch probes the index instead of re-shingling the corpus.
-    *
-    * Partitioning by the RAW bucket would create one directory per
-    * distinct hash (unbounded); the prefix keeps the directory count
-    * fixed at `indexParts` while still letting a probe batch — whose
-    * bucket set is small — dynamically prune the directories it cannot
-    * match. Per-ingest read cost therefore scales with the batch's
-    * bucket footprint, not with corpus age (the d11 argument, minus
-    * even the corpus re-scan).
-    *
-    * [[bandIndexRows]] is the row form (doc, sig, band, bucket,
-    * bucket_p) shared by this bulk writer and the streaming appender
-    * ([[graft.streaming.Streaming.dedupIngest]]). */
-  def bandIndexRows(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, numPerm: Int = 16, bands: Int = 4,
-      indexParts: Int = 64): DataFrame =
-    bandedSignatures(df, idCol, textCol, shingleN, numPerm, bands)
-      .withColumn("bucket_p", pmod($"bucket", lit(indexParts)))
-
-  def writeBandIndex(df: DataFrame, idCol: String, textCol: String,
-      dir: String, shingleN: Int = 3, numPerm: Int = 16, bands: Int = 4,
-      indexParts: Int = 64): Unit =
-    graft.sources.ParquetSink.writePartitioned(
-      bandIndexRows(df, idCol, textCol, shingleN, numPerm, bands, indexParts),
-      dir, Seq("bucket_p"))
-
-  /** Probe a persisted band index with a new batch: old×new candidate
-    * pairs meet on (bucket_p, band, bucket) — bucket_p is the partition
-    * column, so the broadcast probe side drives DYNAMIC partition
-    * pruning on the index scan (IvfStorageSpec's cell-join mechanics) —
-    * then estimated Jaccard filters exactly like [[minHashLshPairs]].
-    * Signature params must match the ones the index was written with.
-    * New×new pairs are the in-memory path's job ([[minHashLshPairs]] on
-    * the batch); old×old pairs are never regenerated. */
-  def probeBandIndex(index: DataFrame, newDocs: DataFrame, idCol: String,
-      textCol: String, shingleN: Int = 3, numPerm: Int = 16, bands: Int = 4,
-      minEstJaccard: Double = 0.5, indexParts: Int = 64): DataFrame = {
-    val probes = bandedSignatures(newDocs, idCol, textCol, shingleN,
-        numPerm, bands)
-      .withColumn("bucket_p", pmod($"bucket", lit(indexParts)))
-      .withColumnRenamed("doc", "doc_new")
-      .withColumnRenamed("sig", "sig_new")
-    index
-      .join(broadcast(probes), Seq("bucket_p", "band", "bucket"))
-      .filter($"doc" =!= $"doc_new")
-      .dropDuplicates("doc", "doc_new") // key-pair dedupe, not array hashing
-      .withColumn("est_jaccard",
-        size(filter(zip_with($"sig", $"sig_new", (x, y) => x === y),
-          b => b)).cast("double") / numPerm)
-      .filter($"est_jaccard" >= minEstJaccard)
-      .select($"doc".as("doc_old"), $"doc_new", $"est_jaccard")
   }
 
   /** 64-bit SimHash per document: per-bit majority vote of token hashes.
@@ -878,13 +818,6 @@ object Dedup {
       idCol: String, textCol: String, window: Int = 20,
       maxBroadcastSpans: Long = 1000000L): DataFrame = {
     import graft.functions.RollingWindowHashes.window_hashes
-    // The size probe below is an EAGER action — on a streaming plan it
-    // would throw from deep inside head() with an AnalysisException that
-    // names no contract; fail here with the real one instead (batch-only:
-    // the benchmark is a held-out eval set, not a stream).
-    require(!benchmark.isStreaming,
-      "substringContamination: benchmark must be a batch DataFrame " +
-        "(its span inventory is probed eagerly at plan construction)")
     // ≤ 1M spans ≈ tens of MB serialized (h: long, wt: `window` chars,
     // bdoc: long) — comfortably broadcastable; anything larger shuffles.
     val benchSpanBound = benchmark
@@ -1014,8 +947,7 @@ object Dedup {
   /** The per-document quality gates of [[curateCorpus]] on their own:
     * language-ID, quality heuristics, PII, and top-2-gram repetition.
     * Every decision is a function of the SINGLE document — no corpus
-    * statistics — which is what lets the streaming capstone apply the
-    * identical gates per micro-batch and still equal the batch run. */
+    * statistics. */
   def qualityGate(df: DataFrame, idCol: String, textCol: String,
       langCol: String,
       maxTop2GramFrac: Double = DataOps.MaxTop2GramFrac): DataFrame = {

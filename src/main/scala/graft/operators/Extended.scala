@@ -294,8 +294,7 @@ object Extended {
         .select($"event_id", $"event_type")
     },
 
-    // Batch gap-based sessionization (the batch twin of the streaming
-    // flatMapGroupsWithState sessionizer): session boundary = >30 min
+    // Batch gap-based sessionization: session boundary = >30 min
     // since the previous event; session id = running count of boundaries.
     "q42_sessionize_batch" -> ((s, d) => sessionizeBatch(s, d)),
 

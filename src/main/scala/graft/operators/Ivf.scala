@@ -116,11 +116,6 @@ object Ivf {
   def writeIndex(indexed: DataFrame, path: String): Unit =
     graft.sources.ParquetSink.writePartitioned(indexed, path, Seq("cell"))
 
-  /** Read the persisted inverted file back (partition column `cell` is
-    * restored from the directory layout). */
-  def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    graft.sources.ParquetSink.read(spark, path)
-
   /** Approximate top-k: each probe searches its `nProbe` nearest cells
     * only, then exact cosine rerank inside the candidate set. Both the
     * nearest-cell pick and the final rerank are partial-aggregating heap

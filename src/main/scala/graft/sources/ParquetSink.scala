@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** Partition-aware parquet layout — the storage half of the 100 TB design.
@@ -29,148 +29,5 @@ object ParquetSink {
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy(partitionCols: _*)
       .parquet(path)
-  }
-
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** IDEMPOTENT per-batch append into an append-mode partitioned layout —
-    * the write primitive for commit-marker ingests whose index/shard rows
-    * are NOT safe to duplicate (exactPairsIngest, trainingSetIngest: a
-    * duplicated inventory row double-counts n_common and corrupts every
-    * later jaccard; a duplicated shard row double-reports a document).
-    *
-    * The crash window it closes: foreachBatch is at-least-once, and the
-    * commit marker is written LAST — so a retry AFTER a completed
-    * mode(append) write but BEFORE the marker re-appends the same batch's
-    * rows under the same batch_id, and once the retry's marker lands the
-    * committed-filter exposes BOTH copies. Plain appends can't be cleaned
-    * up because their file names are random per attempt.
-    *
-    * Recipe: (1) write the batch delta to a dot-prefixed staging dir under
-    * `root` (invisible to partition discovery), (2) sweep every live
-    * partition for files named `batch<id>-*` — debris from a torn earlier
-    * attempt of the SAME batch — and delete them, (3) move the staged
-    * files into the live partition dirs under `batch<id>-`-prefixed names.
-    * Why the prefix always identifies exactly the torn attempt's files:
-    * committed batches are never re-executed (marker check), and
-    * compaction (which renames files) only runs after a batch's own
-    * commit, so an uncommitted batch's files still carry their prefix at
-    * retry time. The staged write is atomic-enough (overwrite mode
-    * clears a torn staging), and a crash mid-move is healed by the next
-    * retry's sweep. Driver-side listing is O(partitions touched), bounded
-    * by design (hash buckets, shards).
-    *
-    * Mirrors Spark's own listing rule: a directory whose name starts with
-    * `_` is still a PARTITION dir if it contains `=` (`__dp=3`), so the
-    * sweep must not skip those. */
-  def idempotentBatchAppend(df: DataFrame, root: String,
-      partitionCol: String, batchId: Long): Unit = {
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(conf)
-    val staged = new org.apache.hadoop.fs.Path(root, s".staged_batch$batchId")
-    df.write.mode("overwrite").partitionBy(partitionCol)
-      .parquet(staged.toString)
-    val prefix = s"batch$batchId-"
-    def isVisible(p: org.apache.hadoop.fs.Path): Boolean = {
-      val n = p.getName
-      !(n.startsWith(".") || (n.startsWith("_") && !n.contains("=")))
-    }
-    // (2) torn-attempt debris of THIS batch, gone before the move
-    fs.listStatus(rootPath).filter(s => s.isDirectory && isVisible(s.getPath))
-      .foreach { pd =>
-        fs.listStatus(pd.getPath)
-          .filter(f => f.isFile && f.getPath.getName.startsWith(prefix))
-          .foreach(f => fs.delete(f.getPath, false))
-      }
-    // (3) staged files → live partitions, deterministically named
-    fs.listStatus(staged).filter(s => s.isDirectory && isVisible(s.getPath))
-      .foreach { pd =>
-        val live = new org.apache.hadoop.fs.Path(rootPath, pd.getPath.getName)
-        fs.mkdirs(live)
-        fs.listStatus(pd.getPath)
-          .filter(f => f.isFile && isVisible(f.getPath))
-          .foreach { f =>
-            val dest = new org.apache.hadoop.fs.Path(live,
-              prefix + f.getPath.getName)
-            if (!fs.rename(f.getPath, dest))
-              throw new java.io.IOException(
-                s"idempotent append: cannot move ${f.getPath} to $dest")
-          }
-      }
-    fs.delete(staged, true)
-    ()
-  }
-
-  /** Compact ONE partition directory of an append-mode partitioned
-    * layout — the small-files maintenance every streaming ingest needs:
-    * each micro-batch appends a file per touched partition, so after N
-    * batches a hot partition holds N tiny files and scan cost is
-    * dominated by open/footer overhead rather than bytes (the classic
-    * lakehouse OPTIMIZE problem). Rewrites exactly `partition`'s
-    * directory into `targetFiles` files via write-to-temp + swap;
-    * the working set is ONE partition, never the table, so maintenance
-    * parallelizes across partitions and never blocks more than the one
-    * being swapped. The swap (delete + rename) is not atomic against
-    * concurrent readers of THAT partition — run per-partition compaction
-    * in the maintenance window between ingests, the same contract as
-    * every filesystem-table OPTIMIZE. Returns rows compacted. */
-  def compactPartition(spark: SparkSession, root: String,
-      partition: String, targetFiles: Int = 1): Long = {
-    require(partition.matches("[A-Za-z0-9_.=-]+") &&
-        partition.exists(c => c != '.'),
-      s"partition must be a single dir segment like col=value: $partition")
-    val dir = new org.apache.hadoop.fs.Path(s"$root/$partition")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(dir), s"no such partition directory: $dir")
-    val df = spark.read.parquet(dir.toString)
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/.compact_$partition")
-    val old = new org.apache.hadoop.fs.Path(s"$root/.old_$partition")
-    val rows = df.count()
-    df.coalesce(targetFiles).write.mode("overwrite").parquet(tmp.toString)
-    // swap order matters for crash safety: move the LIVE dir aside
-    // first, then the rewrite in, then drop the old copy — a crash
-    // between any two steps leaves the data recoverable under a
-    // dot-dir (delete-then-rename would drop the partition for good if
-    // the JVM died in between)
-    fs.delete(old, true) // clear any debris from a previous crash
-    if (!fs.rename(dir, old))
-      throw new java.io.IOException(s"compaction: cannot move $dir aside")
-    if (!fs.rename(tmp, dir)) {
-      fs.rename(old, dir) // roll back; the rewrite stays under tmp
-      throw new java.io.IOException(s"compaction swap failed for $dir")
-    }
-    fs.delete(old, true)
-    rows
-  }
-
-  /** Maintenance sweep: compact every partition directory under `root`
-    * holding more than `maxFiles` data files down to `targetFiles`.
-    * This is the OPTIMIZE pass streaming ingests schedule between
-    * micro-batches — append sinks write one file per touched partition
-    * per batch, so an uncompacted hot partition's scan cost grows with
-    * batch COUNT (open/footer overhead) instead of data size. The sweep
-    * is driver-side directory listing only (partition cardinality is
-    * bounded by design: LSH bands, IVF cells, dates), and each rewrite's
-    * working set is one partition, so at 100 TB the sweeps parallelize
-    * per-partition and never touch cold directories. Returns the
-    * partitions compacted. */
-  def compactHotPartitions(spark: SparkSession, root: String,
-      maxFiles: Int = 8, targetFiles: Int = 1): Seq[String] = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rootPath)) return Nil
-    def isData(p: org.apache.hadoop.fs.Path): Boolean = {
-      val n = p.getName; !n.startsWith("_") && !n.startsWith(".")
-    }
-    fs.listStatus(rootPath).toSeq
-      .filter(s => s.isDirectory && isData(s.getPath))
-      .map(_.getPath)
-      .filter(p => fs.listStatus(p).count(f => f.isFile && isData(f.getPath))
-        > maxFiles)
-      .map { p =>
-        compactPartition(spark, root, p.getName, targetFiles); p.getName
-      }
   }
 }

@@ -32,7 +32,7 @@ class JdbcUpsertSpec extends SparkSpec {
     assume(!isClusterMaster,
       "embedded in-memory Derby is per-JVM: executor tasks would see an " +
       "empty instance; multi-JVM sink coverage lives in the PG15 fixture " +
-      "specs (PostgresUpsertSpec / StreamingSpec cluster lane)")
+      "specs (PostgresUpsertSpec, LoadIncrementalSpec's PG15 test)")
     val t = "tracking_test"
     val batch1 = Seq(("k1", "v1"), ("k2", "v1")).toDF("oid__id", "payload")
     JdbcUpsert.upsert(batch1, url, t, "oid__id",
@@ -55,7 +55,7 @@ class JdbcUpsertSpec extends SparkSpec {
     assume(!isClusterMaster,
       "embedded in-memory Derby is per-JVM: executor tasks would see an " +
       "empty instance; multi-JVM sink coverage lives in the PG15 fixture " +
-      "specs (PostgresUpsertSpec / StreamingSpec cluster lane)")
+      "specs (PostgresUpsertSpec, LoadIncrementalSpec's PG15 test)")
     val t = "nullkey_test"
     val batch = Seq((Option("k1"), "v1"), (Option.empty[String], "vnull"))
       .toDF("oid__id", "payload")
@@ -79,7 +79,7 @@ class JdbcUpsertSpec extends SparkSpec {
     assume(!isClusterMaster,
       "embedded in-memory Derby is per-JVM: executor tasks would see an " +
       "empty instance; multi-JVM sink coverage lives in the PG15 fixture " +
-      "specs (PostgresUpsertSpec / StreamingSpec cluster lane)")
+      "specs (PostgresUpsertSpec, LoadIncrementalSpec's PG15 test)")
     val types = Some("oid__id VARCHAR(64), payload VARCHAR(64), fileName VARCHAR(64)")
     val batch1 = Seq(("k1", "v1", "f1.csv"), ("k2", "v1", "f1.csv"))
       .toDF("oid__id", "payload", "fileName")
@@ -117,7 +117,7 @@ class JdbcUpsertSpec extends SparkSpec {
     assume(!isClusterMaster,
       "embedded in-memory Derby is per-JVM: executor tasks would see an " +
       "empty instance; multi-JVM sink coverage lives in the PG15 fixture " +
-      "specs (PostgresUpsertSpec / StreamingSpec cluster lane)")
+      "specs (PostgresUpsertSpec, LoadIncrementalSpec's PG15 test)")
     val t = "pushdown_test"
     val df = Seq(("k1", "a.csv"), ("k2", "b.csv"), ("k3", "c.csv"))
       .toDF("oid__id", "fileName")
@@ -135,7 +135,7 @@ class JdbcUpsertSpec extends SparkSpec {
     assume(!isClusterMaster,
       "embedded in-memory Derby is per-JVM: executor tasks would see an " +
       "empty instance; multi-JVM sink coverage lives in the PG15 fixture " +
-      "specs (PostgresUpsertSpec / StreamingSpec cluster lane)")
+      "specs (PostgresUpsertSpec, LoadIncrementalSpec's PG15 test)")
     assert(JdbcUpsert.lastUploadedFile(spark, url, "nope_missing") === None)
     val t = "wm_test"
     val df = Seq(("k1", "f1.csv"), ("k2", "f2.csv")).toDF("oid__id", "fileName")

@@ -288,7 +288,7 @@ class AdvancedSpec extends SparkSpec {
     val ev = graft.Tables.events(spark, sf("sf0.001"))
     graft.sources.ParquetSink.writePartitioned(ev, dir,
       partitionCols = Seq("event_type"), sortCols = Seq("ts"))
-    val pruned = graft.sources.ParquetSink.read(spark, dir)
+    val pruned = spark.read.parquet(dir)
       .filter($"event_type" === "purchase")
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(event_type"),

@@ -35,7 +35,7 @@ class IvfStorageSpec extends SparkSpec {
       .map(_.getName).filter(_.startsWith("cell=")).sorted
     assert(subdirs.nonEmpty, s"expected cell= partition dirs, got ${subdirs.toSeq}")
 
-    val onDisk = graft.sources.ParquetSink.read(spark, dir)
+    val onDisk = spark.read.parquet(dir)
     val probes = emb.filter($"vec_id" < 2).select($"vec_id".as("probe_id"),
       Similarity.toDouble($"embedding").as("q"))
     val diskKnn = Pq.ivfPqKnn(assigned, coarse, books, onDisk, probes,
@@ -71,7 +71,7 @@ class IvfStorageSpec extends SparkSpec {
       .map(_.getName).filter(_.startsWith("cell=")).sorted
     assert(subdirs.nonEmpty, s"expected cell= partition dirs, got ${subdirs.toSeq}")
 
-    val onDisk = Ivf.readIndex(spark, dir)
+    val onDisk = spark.read.parquet(dir)
     val probedCells = Seq(subdirs.head, subdirs.last)
       .map(_.stripPrefix("cell=").toInt)
     val pruned = onDisk.filter($"cell".isin(probedCells: _*))

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ParquetBridge
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
@@ -16,8 +17,20 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** The table `name` under `sfDir`, read with no Spark job: the schema
+    * comes from the parquet footer on the driver
+    * ([[org.apache.spark.sql.graft.ParquetBridge.footerSchema]], the
+    * schema inference would return) and is handed to the reader, so the
+    * read skips inference's one-task footer job. The schema is read, not
+    * declared, because the `ts` encoding differs between testdata
+    * generations (below). With `spark.sql.parquet.mergeSchema` on, the
+    * table is read the plain way. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val df = ParquetBridge.footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
     // Normalize the events `ts` column across driver testdata generations:
     //  - TIMESTAMP(NANOS) parquet arrives as nanos-since-epoch LongType when
     //    spark.sql.legacy.parquet.nanosAsLong=true (set by our builders);

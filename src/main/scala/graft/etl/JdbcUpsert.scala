@@ -153,19 +153,25 @@ object JdbcUpsert {
     } finally conn.close()
   }
 
-  /** A connection through the driver class named in `props("driver")`, as
-    * Spark's JDBC writer made them, else through DriverManager. */
-  private def connect(url: String, props: Properties): Connection =
+  /** The driver class named in `props("driver")`, loaded as Spark's JDBC
+    * writer loads it, else the DriverManager driver for `url`. */
+  private def driverFor(url: String, props: Properties): Driver =
     Option(props.getProperty("driver")) match {
-      case None => DriverManager.getConnection(url, props)
+      case None => DriverManager.getDriver(url)
       case Some(cls) =>
         val loader = Option(Thread.currentThread.getContextClassLoader)
           .getOrElse(getClass.getClassLoader)
-        val driver = Class.forName(cls, true, loader)
+        Class.forName(cls, true, loader)
           .getDeclaredConstructor().newInstance().asInstanceOf[Driver]
-        Option(driver.connect(url, props))
-          .getOrElse(throw new SQLException(s"driver $cls does not accept $url"))
     }
+
+  /** `c`, a driver's answer to `connect(url, …)`; null means it declined. */
+  private def accepted(c: Connection, url: String): Connection =
+    if (c != null) c else throw new SQLException(s"no driver accepts $url")
+
+  /** A connection through [[driverFor]]. */
+  private def connect(url: String, props: Properties): Connection =
+    accepted(driverFor(url, props).connect(url, props), url)
 
   /** Postgres staging: drop-if-exists and create the staging table over
     * `conn`, then one job in which every non-empty partition COPYs its
@@ -255,7 +261,10 @@ object JdbcUpsert {
   def lastUploadedFile(spark: org.apache.spark.sql.SparkSession, url: String,
       table: String, fileCol: String = "fileName",
       props: Properties = new Properties()): Option[String] = {
-    val conn = DriverManager.getConnection(url, props)
+    // connects here rather than through [[connect]]: a wrapping driver
+    // (perfbench's TracingDriver) files each connection under the engine
+    // method that opened it
+    val conn = accepted(driverFor(url, props).connect(url, props), url)
     try {
       if (!tableExists(conn, table)) None
       else {

@@ -98,18 +98,12 @@ object ConnectedComponents {
   private def localRun(sym: DataFrame, maxIter: Int,
       cmpId: (Any, Any) => Int): DataFrame = {
     val spark = sym.sparkSession
-    val rows = sym.collect()
-    val vx = new LocalIter.VertexIndex
-    val srcA = new Array[Int](rows.length)
-    val dstA = new Array[Int](rows.length)
-    var i = 0
-    while (i < rows.length) {
-      srcA(i) = vx(rows(i).get(0)); dstA(i) = vx(rows(i).get(1)); i += 1
-    }
+    val edges = LocalIter.collectEdges(sym)
+    val (vx, srcA, dstA) = (edges.vx, edges.src, edges.dst)
     val nV = vx.size
     // rank(v) = position of v's id in Spark order; vertexAtRank inverts
     val order = new java.util.ArrayList[Integer](nV)
-    i = 0; while (i < nV) { order.add(Integer.valueOf(i)); i += 1 }
+    var i = 0; while (i < nV) { order.add(Integer.valueOf(i)); i += 1 }
     order.sort((a, b) => cmpId(vx.ids(a.intValue()), vx.ids(b.intValue())))
     val vertexAtRank = new Array[Int](nV)
     val rank = new Array[Int](nV)

@@ -362,16 +362,20 @@ object Graph {
   def bfsDepth(edges: DataFrame, seeds: DataFrame,
       maxDepth: Int, srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
-    val e = edges.select(col(srcCol).as("e_src"), col(dstCol).as("e_dst"))
-      .graftCheckpoint(true)
+    val plan = edges.select(col(srcCol).as("e_src"), col(dstCol).as("e_dst"))
     // driver-local lane (round 14): integer hop depths over id equality —
     // the local twin replays the frontier rounds verbatim (same maxDepth
     // cut, same drained early-exit, same no-seed require). ~5 Spark jobs
-    // per round saved below the gate. GraphSpec pins lane equality.
-    if (LocalIter.cmp(e.schema("e_src").dataType) != null &&
+    // per round saved below the gate. GraphSpec pins lane equality. The
+    // gate sizes the edge plan itself — a projection or union over
+    // checkpointed leaves costs no job — so the lane's collects of edges
+    // and seeds are the only jobs it runs, and only the distributed
+    // branch checkpoints.
+    if (LocalIter.cmp(plan.schema("e_src").dataType) != null &&
         edges.sparkSession.conf.get("graft.localIterate", "true").toBoolean
-        && underEdgeGate(e))
-      return localBfsDepth(e, seeds, maxDepth)
+        && underEdgeGate(plan))
+      return localBfsDepth(plan, seeds, maxDepth)
+    val e = plan.graftCheckpoint(true)
     // seeds ∩ vertices, mirroring personalizedPageRank's seed handling:
     // a seed that is not a vertex of the edge list is ignored (it is not
     // "reachable" in this graph), and an all-foreign seed set fails
@@ -407,14 +411,8 @@ object Graph {
   private def localBfsDepth(e: DataFrame, seeds: DataFrame,
       maxDepth: Int): DataFrame = {
     val spark = e.sparkSession
-    val rows = e.collect()
-    val vx = new LocalIter.VertexIndex
-    val srcA = new Array[Int](rows.length)
-    val dstA = new Array[Int](rows.length)
-    var k = 0
-    while (k < rows.length) {
-      srcA(k) = vx(rows(k).get(0)); dstA(k) = vx(rows(k).get(1)); k += 1
-    }
+    val edges = LocalIter.collectEdges(e)
+    val (vx, srcA, dstA) = (edges.vx, edges.src, edges.dst)
     val nV = vx.size
     // CSR-ish adjacency: out-edge lists per vertex
     val outCnt = new Array[Int](nV)
@@ -422,16 +420,17 @@ object Graph {
     val outOff = new Array[Int](nV + 1)
     var i = 0
     while (i < nV) { outOff(i + 1) = outOff(i) + outCnt(i); i += 1 }
-    val outDst = new Array[Int](rows.length)
+    val outDst = new Array[Int](edges.size)
     val fill = outOff.clone()
-    k = 0
-    while (k < rows.length) {
+    var k = 0
+    while (k < edges.size) {
       outDst(fill(srcA(k))) = dstA(k); fill(srcA(k)) += 1; k += 1
     }
     val depth = Array.fill(nV)(-1)
     var frontier = new scala.collection.mutable.ArrayBuffer[Int]()
-    seeds.select(col("id")).distinct().collect().foreach { r =>
-      val v = vx.get(r.get(0))
+    // a repeated seed finds its depth already set: no distinct() needed
+    LocalIter.collectIds(seeds.select(col("id"))).foreach { id =>
+      val v = vx.get(id)
       if (v >= 0 && depth(v) < 0) { depth(v) = 0; frontier += v }
     }
     require(frontier.nonEmpty, "bfsDepth: no seed appears in the graph")
@@ -849,16 +848,12 @@ object Graph {
   private def localKTruss(undDf: DataFrame, k: Int,
       maxRounds: Int): DataFrame = {
     val spark = undDf.sparkSession
-    val rows = undDf.collect()
-    val vx = new LocalIter.VertexIndex
-    var ea = new Array[Int](rows.length)
-    var eb = new Array[Int](rows.length)
-    var j = 0
-    while (j < rows.length) {
-      ea(j) = vx(rows(j).get(0)); eb(j) = vx(rows(j).get(1)); j += 1
-    }
+    val edges = LocalIter.collectEdges(undDf)
+    val vx = edges.vx
+    var ea = edges.src
+    var eb = edges.dst
     val nV = vx.size
-    var nE = rows.length
+    var nE = edges.size
     val support = new java.util.HashMap[java.lang.Long, Array[Long]]()
     def ekey(x: Int, y: Int): java.lang.Long =
       java.lang.Long.valueOf(math.min(x, y).toLong * nV + math.max(x, y))
@@ -1186,15 +1181,12 @@ object Graph {
   private def localShortestPaths(e: DataFrame, seeds: DataFrame,
       maxRounds: Int): DataFrame = {
     val spark = e.sparkSession
-    val rows = e.collect()
-    val vx = new LocalIter.VertexIndex
-    val srcA = new Array[Int](rows.length)
-    val dstA = new Array[Int](rows.length)
-    val costA = new Array[Long](rows.length)
-    var k = 0
-    while (k < rows.length) {
-      srcA(k) = vx(rows(k).get(0)); dstA(k) = vx(rows(k).get(1))
-      costA(k) = rows(k).getLong(2); k += 1
+    val edges = LocalIter.collectEdges(e)
+    val (vx, srcA, dstA) = (edges.vx, edges.src, edges.dst)
+    val costA = edges.rows.map { r =>
+      if (r.isNullAt(2))
+        throw new NullPointerException("shortestPaths: null edge cost")
+      r.getLong(2)
     }
     val nV = vx.size
     val outCnt = new Array[Int](nV)
@@ -1202,17 +1194,18 @@ object Graph {
     val outOff = new Array[Int](nV + 1)
     var i = 0
     while (i < nV) { outOff(i + 1) = outOff(i) + outCnt(i); i += 1 }
-    val outIdx = new Array[Int](rows.length)
+    val outIdx = new Array[Int](edges.size)
     val fill = outOff.clone()
-    k = 0
-    while (k < rows.length) {
+    var k = 0
+    while (k < edges.size) {
       outIdx(fill(srcA(k))) = k; fill(srcA(k)) += 1; k += 1
     }
     val NoDist = Long.MinValue
     val dist = Array.fill(nV)(NoDist)
     var frontier = new scala.collection.mutable.ArrayBuffer[Int]()
-    seeds.select(col("id")).distinct().collect().foreach { r =>
-      val v = vx.get(r.get(0))
+    // a repeated seed finds its distance already set: no distinct() needed
+    LocalIter.collectIds(seeds.select(col("id"))).foreach { id =>
+      val v = vx.get(id)
       if (v >= 0 && dist(v) == NoDist) { dist(v) = 0L; frontier += v }
     }
     require(frontier.nonEmpty, "shortestPaths: no seed appears in the graph")

@@ -1,5 +1,8 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -53,5 +56,54 @@ private[operators] object LocalIter {
       val i = idx.get(a); if (i == null) -1 else i.intValue()
     }
     def size: Int = ids.length
+  }
+
+  /** A lane's collected edge relation: per row k, the dense vertex
+    * indices `src(k)` and `dst(k)` of its first two columns in `vx`, and
+    * the row itself for the lane's further columns. */
+  final class Edges(val vx: VertexIndex, val src: Array[Int],
+      val dst: Array[Int], val rows: Array[InternalRow]) {
+    def size: Int = rows.length
+  }
+
+  /** Collects `df`, whose first two columns are vertex ids, and indexes
+    * its ids in row order. One helper for every id type: each id is read
+    * as the external value a `Row` would carry, so [[VertexIndex.ids]]
+    * and [[cmp]] see what they saw when the lanes collected `Row`s. */
+  def collectEdges(df: DataFrame): Edges = {
+    val srcId = reader(df.schema(0).dataType)
+    val dstId = reader(df.schema(1).dataType)
+    val rows = collectRows(df)
+    val vx = new VertexIndex
+    val src = new Array[Int](rows.length)
+    val dst = new Array[Int](rows.length)
+    var k = 0
+    while (k < rows.length) {
+      src(k) = vx(srcId(rows(k), 0)); dst(k) = vx(dstId(rows(k), 1)); k += 1
+    }
+    new Edges(vx, src, dst, rows)
+  }
+
+  /** The first column of `df` as external values — a lane's seed ids,
+    * looked up with [[VertexIndex.get]]. */
+  def collectIds(df: DataFrame): Array[Any] = {
+    val id = reader(df.schema(0).dataType)
+    collectRows(df).map(id(_, 0))
+  }
+
+  /** `df`'s rows in Spark's internal form, collected as one SQL execution
+    * (the `JdbcUpsert` staging pattern): no `Row` encoder runs. */
+  private def collectRows(df: DataFrame): Array[InternalRow] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.executedPlan.executeCollect()
+    }
+  }
+
+  /** Reads column `o` of an internal row of type `dt` as its external
+    * value (null for SQL NULL). */
+  private def reader(dt: DataType): (InternalRow, Int) => Any = {
+    val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+    (r, o) => toScala(r.get(o, dt))
   }
 }

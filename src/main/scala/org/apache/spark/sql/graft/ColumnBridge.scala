@@ -104,3 +104,69 @@ object PlanBridge {
     if (ok) Some(plan.stats.sizeInBytes) else None
   }
 }
+
+/** Bridge for reading a parquet table's schema on the driver, with no
+  * Spark job. `spark.read.parquet` infers the schema through
+  * `ParquetUtils.inferSchema`, which reads the chosen footer inside a
+  * one-task job; the file listing, the footer read and the session's
+  * conversion settings it uses are `private[sql]`. */
+object ParquetBridge {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+  import org.apache.parquet.hadoop.util.HadoopInputFile
+  import org.apache.parquet.format.converter.ParquetMetadataConverter
+  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+    InMemoryFileIndex}
+  import org.apache.spark.sql.execution.datasources.parquet.{
+    ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+  import org.apache.spark.sql.types.StructType
+
+  /** The schema `spark.read.parquet(path)` would infer, read from one
+    * footer on the driver. It lists `path` as the reader does (same
+    * index, same listing cache) and takes the file inference takes when
+    * schemas are not merged: `_common_metadata`, else `_metadata`, else
+    * the first data file in path order. The footer converts as inference
+    * converts it: Spark's own schema string when the file carries one,
+    * else the parquet schema under the session's conversion settings.
+    * None when `spark.sql.parquet.mergeSchema` is on (every file counts
+    * then), or when there is no readable file — the caller reads the
+    * plain way, which infers or fails as Spark does. */
+  def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val conf = session.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled) None
+    else {
+      val hadoopConf = session.sessionState.newHadoopConf()
+      val root = new Path(path)
+      val files = new InMemoryFileIndex(session,
+        Seq(root.getFileSystem(hadoopConf).makeQualified(root)), Map.empty,
+        None, FileStatusCache.getOrCreate(session)).allFiles()
+        .sortBy(_.getPath.toString)
+      def named(n: String): Option[FileStatus] =
+        files.find(_.getPath.getName == n)
+      val summary = Set(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+        ParquetFileWriter.PARQUET_METADATA_FILE)
+      named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+        .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
+        .orElse(files.find(f => !summary(f.getPath.getName)))
+        .flatMap { f =>
+          val meta =
+            try Some(ParquetFooterReader.readFooter(
+              HadoopInputFile.fromStatus(f, hadoopConf),
+              ParquetMetadataConverter.SKIP_ROW_GROUPS))
+            catch { case _: RuntimeException | _: java.io.IOException => None }
+          meta.map { m =>
+            ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, m),
+              new ParquetToSparkSchemaConverter(
+                assumeBinaryIsString = conf.isParquetBinaryAsString,
+                assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+                inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+                nanosAsLong = conf.legacyParquetNanosAsLong,
+                respectUnknownTypeAnnotation =
+                  conf.parquetReaderRespectUnknownTypeAnnotation))
+          }
+        }
+    }
+  }
+}

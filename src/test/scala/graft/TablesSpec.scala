@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
 
 /** Guards the testdata loader against driver testdata-generation drift.
   *
@@ -81,5 +82,75 @@ class TablesSpec extends SparkSpec {
     assert(back.schema("ts").dataType == TimestampType)
     val got = back.select(col("ts").cast("long")).as[Long].collect().sorted
     assert(got.toSeq == Seq(1L, 1700000000L, 1700003600L))
+  }
+
+  /** `Tables.load(dir, name)` with the jobs it launched. */
+  private def loadCounted(dir: String, name: String): (DataFrame, Int) = {
+    var df: DataFrame = null
+    val jobs = jobsOf { df = Tables.load(spark, dir, name) }
+    (df, jobs)
+  }
+
+  /** The schema inference gives the table, with `ts` as `load` hands it
+    * out (session-tz TimestampType, see the tests above). */
+  private def inferred(dir: String, name: String): StructType = {
+    val raw = spark.read.parquet(s"$dir/$name.parquet").schema
+    StructType(raw.map(f =>
+      if (f.name == "ts") f.copy(dataType = TimestampType) else f))
+  }
+
+  test("load reads every testdata table with no job and the inferred schema") {
+    val dir = sf("sf0.001")
+    assume(new java.io.File(dir).isDirectory, s"$dir is absent")
+    for (name <- Tables.names) {
+      val (df, jobs) = loadCounted(dir, name)
+      assert(jobs === 0, s"$name: loading must launch no Spark job")
+      assert(df.schema === inferred(dir, name), name)
+    }
+  }
+
+  test("load of a Spark-written directory table (part files, _SUCCESS, " +
+    "summary files) matches inference, with no job") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tables-dir").toString
+    val df = (1 to 40).map(i => (i.toLong, s"c$i", BigDecimal(i) / 4,
+        java.sql.Date.valueOf("2024-01-01"), Seq(i, i + 1)))
+      .toDF("o_orderkey", "o_comment", "o_totalprice", "o_orderdate", "xs")
+      .withColumn("o_comment",
+        col("o_comment").as("o_comment", new org.apache.spark.sql.types
+          .MetadataBuilder().putString("note", "kept").build()))
+      .repartition(3)
+    df.write.parquet(s"$dir/orders.parquet")
+    df.write.option("parquet.summary.metadata.level", "ALL")
+      .parquet(s"$dir/lineitem.parquet")
+    val files = new java.io.File(s"$dir/orders.parquet").list().toSet
+    assert(files.contains("_SUCCESS") && files.count(_.startsWith("part-")) > 1)
+    assert(new java.io.File(s"$dir/lineitem.parquet/_common_metadata").exists())
+    for (name <- Seq("orders", "lineitem")) {
+      val (loaded, jobs) = loadCounted(dir, name)
+      assert(jobs === 0, s"$name: loading must launch no Spark job")
+      assert(loaded.schema === inferred(dir, name), name)
+      assert(loaded.schema("o_comment").metadata.getString("note") === "kept")
+      assert(loaded.count() === 40L)
+    }
+  }
+
+  test("load follows spark.sql.parquet.mergeSchema over part files whose " +
+    "schemas differ") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tables-merge").toString
+    val path = s"$dir/customer.parquet"
+    Seq((1L, "a")).toDF("c_custkey", "c_name").write.parquet(path)
+    Seq((2L, 7)).toDF("c_custkey", "c_nationkey")
+      .write.mode("append").parquet(path)
+    // off: inference reads one file, and so does load
+    assert(Tables.customer(spark, dir).schema === inferred(dir, "customer"))
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try {
+      val merged = Tables.customer(spark, dir)
+      assert(merged.schema === inferred(dir, "customer"))
+      assert(merged.schema.fieldNames.toSet ===
+        Set("c_custkey", "c_name", "c_nationkey"))
+    } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
   }
 }

@@ -143,4 +143,52 @@ class JdbcUpsertSpec extends SparkSpec {
       createTableColumnTypes = Some("oid__id VARCHAR(64), fileName VARCHAR(64)"))
     assert(JdbcUpsert.lastUploadedFile(spark, url, t) === Some("f2.csv"))
   }
+
+  test("watermark probe connects through the driver named in props, " +
+    "registered or not") {
+    assume(!isClusterMaster,
+      "embedded in-memory Derby is per-JVM: executor tasks would see an " +
+      "empty instance; multi-JVM sink coverage lives in the PG15 fixture " +
+      "specs (PostgresUpsertSpec, LoadIncrementalSpec's PG15 test)")
+    assert(!DriverManager.drivers().anyMatch(_.isInstanceOf[CountingDriver]),
+      "the wrapper must be reachable only by its name in props")
+    val props = new java.util.Properties()
+    props.setProperty("driver", classOf[CountingDriver].getName)
+    val before = CountingDriver.connects.get
+    assert(JdbcUpsert.lastUploadedFile(spark, url, "nope_named",
+      props = props) === None)
+    assert(CountingDriver.connects.get - before === 1)
+    val t = "wm_named_test"
+    JdbcUpsert.upsert(Seq(("k1", "f7.csv")).toDF("oid__id", "fileName"),
+      url, t, "oid__id",
+      createTableColumnTypes = Some("oid__id VARCHAR(64), fileName VARCHAR(64)"))
+    assert(JdbcUpsert.lastUploadedFile(spark, url, t, props = props) ===
+      Some("f7.csv"))
+    assert(CountingDriver.connects.get - before === 2)
+  }
+}
+
+/** A JDBC driver that counts its connections and hands each to the driver
+  * DriverManager has for the URL. It is never registered itself, so a
+  * connection through it can only come from naming it in
+  * `props("driver")`. */
+final class CountingDriver extends java.sql.Driver {
+  import java.sql.{Connection, DriverPropertyInfo}
+  private def inner(url: String): java.sql.Driver = DriverManager.getDriver(url)
+  override def connect(url: String, info: java.util.Properties): Connection =
+    if (!acceptsURL(url)) null
+    else { CountingDriver.connects.incrementAndGet(); inner(url).connect(url, info) }
+  override def acceptsURL(url: String): Boolean = url.startsWith("jdbc:derby:")
+  override def getPropertyInfo(url: String,
+      info: java.util.Properties): Array[DriverPropertyInfo] =
+    inner(url).getPropertyInfo(url, info)
+  override def getMajorVersion: Int = 1
+  override def getMinorVersion: Int = 0
+  override def jdbcCompliant(): Boolean = false
+  override def getParentLogger: java.util.logging.Logger =
+    java.util.logging.Logger.getLogger(getClass.getName)
+}
+
+object CountingDriver {
+  val connects = new java.util.concurrent.atomic.AtomicInteger
 }

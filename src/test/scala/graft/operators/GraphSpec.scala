@@ -1,7 +1,10 @@
 package graft.operators
 
+import graft.Checkpoints._
 import graft.SparkSpec
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
 
 class GraphSpec extends SparkSpec {
   import spark.implicits._
@@ -648,6 +651,14 @@ class GraphSpec extends SparkSpec {
     try run finally spark.conf.unset("graft.localIterate")
   }
 
+  /** The id types the lanes' shared collect admits, each tested. */
+  private val idTypes: Seq[DataType] = Seq(LongType, IntegerType, StringType)
+
+  /** `df` with its columns `ids` cast to `t`. */
+  private def asIds(df: DataFrame, t: DataType, ids: String*): DataFrame =
+    df.select(df.columns.toIndexedSeq.map(c =>
+      if (ids.contains(c)) col(c).cast(t).as(c) else col(c)): _*)
+
   test("connected-components lanes: local ≡ distributed (string ids, " +
     "multi-component), and BOTH lanes throw unconverged") {
     // two components with string ids (the er02 shape — UTF8 binary min),
@@ -668,31 +679,69 @@ class GraphSpec extends SparkSpec {
       ConnectedComponents.run(chain, maxIter = 2)) }
   }
 
+  test("connected-components lanes agree for Long, Int and String ids") {
+    // {9, 10, 11}: the min label is 9 numerically but "10" as a string
+    val edges = Seq((2L, 1L), (3L, 2L), (4L, 3L), (1L, 12L), (10L, 9L),
+      (11L, 10L)).toDF("src", "dst")
+    for (t <- idTypes) {
+      def run(): Set[Row] = ConnectedComponents
+        .run(asIds(edges, t, "src", "dst")).collect().toSet
+      val local = run()
+      assert(local === distributed(run()), s"CC lanes must agree ($t ids)")
+      val label = local.map(r => r.get(0).toString -> r.get(1).toString).toMap
+      assert(label("4") === "1" && label("12") === "1")
+      assert(label("11") === (if (t == StringType) "10" else "9"))
+    }
+  }
+
   test("bfsDepth lanes: local ≡ distributed (shortcut, maxDepth cut, " +
     "unreachable component)") {
     val chain = (0L until 5L).map(i => (i, i + 1)) ++
       Seq((0L, 3L), (90L, 91L))
     val edges = chain.toDF("src", "dst")
     val sym = edges.union(edges.select($"dst", $"src"))
-    val seeds = Seq(0L).toDF("id")
-    def run(): Map[Long, Int] = Graph.bfsDepth(sym, seeds, maxDepth = 2)
-      .as[(Long, Int)].collect().toMap
-    val local = run()
-    assert(local === distributed(run()), "bfs lanes must agree exactly")
-    assert(local === Map(0L -> 0, 1L -> 1, 3L -> 1, 2L -> 2, 4L -> 2))
+    // a repeated seed is one seed on both lanes
+    val seeds = Seq(0L, 0L).toDF("id")
+    for (t <- idTypes) {
+      def run(): Set[Row] = Graph.bfsDepth(asIds(sym, t, "src", "dst"),
+        asIds(seeds, t, "id"), maxDepth = 2).collect().toSet
+      val local = run()
+      assert(local === distributed(run()),
+        s"bfs lanes must agree exactly ($t ids)")
+      assert(local.map(r => r.get(0).toString -> r.getInt(1)) ===
+        Set("0" -> 0, "1" -> 1, "3" -> 1, "2" -> 2, "4" -> 2))
+    }
+  }
+
+  test("bfsDepth's local lane over a checkpointed edge plan runs only its " +
+    "collect, no checkpoint") {
+    val half = ((0L until 5L).map(i => (i, i + 1)) :+ ((0L, 3L)))
+      .toDF("src", "dst").graftCheckpoint(true)
+    val sym = half.union(half.select($"dst", $"src"))
+    // seeds from a local relation collect without a job, so the edge
+    // plan's collect is the one job the lane may run
+    val seeds = Seq(0L, 0L).toDF("id")
+    var out: DataFrame = null
+    assert(jobsOf { out = Graph.bfsDepth(sym, seeds, maxDepth = 2) } === 1)
+    assert(out.as[(Long, Int)].collect().toMap ===
+      Map(0L -> 0, 1L -> 1, 3L -> 1, 2L -> 2, 4L -> 2))
   }
 
   test("shortestPaths lanes: local ≡ distributed (multi-hop beats " +
     "direct, throw parity past maxRounds)") {
     val edges = Seq((1L, 2L, 1L), (2L, 3L, 1L), (3L, 4L, 1L),
       (1L, 4L, 9L), (4L, 5L, 2L), (7L, 8L, 1L)).toDF("src", "dst", "cost")
-    val seeds = Seq(1L).toDF("id")
-    def run(): Map[Long, Long] =
-      Graph.shortestPaths(edges, seeds, maxRounds = 10)
-        .as[(Long, Long)].collect().toMap
-    val local = run()
-    assert(local === distributed(run()), "sssp lanes must agree exactly")
-    assert(local === Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L, 5L -> 5L))
+    // a repeated seed is one seed on both lanes
+    val seeds = Seq(1L, 1L).toDF("id")
+    for (t <- idTypes) {
+      def run(): Set[Row] = Graph.shortestPaths(asIds(edges, t, "src", "dst"),
+        asIds(seeds, t, "id"), maxRounds = 10).collect().toSet
+      val local = run()
+      assert(local === distributed(run()),
+        s"sssp lanes must agree exactly ($t ids)")
+      assert(local.map(r => r.get(0).toString -> r.getLong(1)) ===
+        Set("1" -> 0L, "2" -> 1L, "3" -> 2L, "4" -> 3L, "5" -> 5L))
+    }
     // throw parity: a 6-hop chain cannot settle in 2 rounds either lane
     val long = (0L until 6L).map(i => (i, i + 1, 1L)).toDF("src", "dst", "cost")
     intercept[IllegalStateException] {
@@ -725,11 +774,16 @@ class GraphSpec extends SparkSpec {
     "exact supports)") {
     val k5 = for (i <- 1L to 5L; j <- (i + 1) to 5L) yield (i, j)
     val edges = (k5 ++ Seq((5L, 6L), (6L, 7L), (2L, 1L))).toDF("src", "dst")
-    def run(): Set[(Long, Long, Long)] =
-      Graph.kTruss(edges, k = 4).as[(Long, Long, Long)].collect().toSet
-    val local = run()
-    assert(local === distributed(run()), "kTruss lanes must agree exactly")
-    // K5 survives as the 4-truss: every edge in exactly 3 triangles
-    assert(local === k5.map { case (a, b) => (a, b, 3L) }.toSet)
+    for (t <- idTypes) {
+      def run(): Set[Row] = Graph.kTruss(asIds(edges, t, "src", "dst"), k = 4)
+        .collect().toSet
+      val local = run()
+      assert(local === distributed(run()),
+        s"kTruss lanes must agree exactly ($t ids)")
+      // K5 survives as the 4-truss: every edge in exactly 3 triangles
+      assert(local.map(r => (r.get(0).toString, r.get(1).toString,
+        r.getLong(2))) ===
+        k5.map { case (a, b) => (a.toString, b.toString, 3L) }.toSet)
+    }
   }
 }

@@ -9,17 +9,17 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
 import graft.etl.expressions.{PyEventsArray, PyLiteralToJson}
 import graft.functions.{ArrayPairs, BpeEncode, DotProductDouble, RollingHashLong, RollingWindowHashes, SearchSortedDouble, SqDistDouble, TokenShingles, TopKDouble, TopKPairs, VectorMeanDecimal, VectorMeanRounded}
 
-/** Session extension registering the engine's native surface:
+/** Session extension registering the engine's native SQL surface:
+  * functions backed by custom Catalyst expressions — `py_to_json(col)`,
+  * `py_events(col)`, `top_k(col, k)`, `top_k_pairs(score, id, k)`,
+  * `dot_double(a, b)`, `sq_dist_double(a, b)`, `search_sorted(xs, v)`,
+  * `rolling_hash(s)`, `array_pairs(xs)`, `window_hashes(s, w[, st])`,
+  * `vector_mean(v)`, `token_shingles(s, n[, distinct])`,
+  * `bpe_encode(piece, merges)`.
   *
-  *   - SQL functions backed by custom Catalyst expressions:
-  *     `py_to_json(col)`, `py_events(col)`, `top_k(col, k)`,
-  *     `top_k_pairs(score, id, k)`, `dot_double(a, b)`,
-  *     `sq_dist_double(a, b)`, `search_sorted(xs, v)`,
-  *     `rolling_hash(s)`, `array_pairs(xs)`, `window_hashes(s, w[, st])`,
-  *     `vector_mean(v)`, `token_shingles(s, n[, distinct])`,
-  *     `bpe_encode(piece, merges)`
-  *   - the planner strategy for the custom broadcast range-join operator
-  *     ([[graft.plans.RangeJoinPlan]] → [[graft.plans.BroadcastRangeJoinExec]])
+  * The broadcast range join's planner strategy is not registered here:
+  * [[graft.plans.RangeJoin.broadcastRange]], the only producer of its
+  * logical node, installs the strategy on the session it plans in.
   *
   * Activate with either:
   *   SparkSession.builder().withExtensions(new GraftExtensions) — or —
@@ -36,8 +36,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => graft.plans.RangeJoinStrategy)
-
     ext.injectFunction((
       new FunctionIdentifier("py_to_json"),
       new ExpressionInfo(classOf[PyLiteralToJson].getName, "py_to_json"),

@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession factory of the engine's mains (Bench, Verify,
-  * PlanCensus, QueryProbe, FaultInject), so the code that is checked
-  * (Verify) and the code that is timed (Bench) run under the same
-  * settings by construction:
+  * PlanCensus, QueryProbe, FaultInject) and of the test suite's
+  * `SparkSpec`, so the code that is checked (Verify, the specs) and the
+  * code that is timed (Bench) run under the same settings by
+  * construction:
   *
   *  - UTC session time zone and nanos-as-long parquet timestamps (the
   *    value conventions `Tables.load` normalizes against);

@@ -225,11 +225,6 @@ object RollingWindowHashes {
   def window_hashes(c: Column, w: Int, stride: Int = 1): Column =
     ColumnBridge.column(RollingWindowHashes(ColumnBridge.expression(c), w, stride))
 
-  /** Dual-hash form: `(pos, h, h2)` — see the `dual` scaladoc. */
-  def window_hashes2(c: Column, w: Int, stride: Int = 1): Column =
-    ColumnBridge.column(
-      RollingWindowHashes(ColumnBridge.expression(c), w, stride, dual = true))
-
   /** Dual-hash + per-doc first-occurrence form: `(pos, h, h2)`, one row
     * per distinct `h` per document — see the `dedupPerDoc` scaladoc. */
   def window_hashes2_dedup(c: Column, w: Int, stride: Int = 1): Column =

@@ -67,8 +67,7 @@ object Bpe {
     * non-overlapping replacement [[applyMerge]] computes (BpeSpec pins
     * lane equality, and the encode-agreement spec already pins the fold
     * itself). Above the gate the distributed loop is unchanged —
-    * "millions of vocab rows at web scale" stays on it.
-    * `graft.localIterate = false` is the kill-switch. */
+    * "millions of vocab rows at web scale" stays on it. */
   private val LocalVocabMaxRows = 2000000L
 
   /** Learn `numMerges` BPE merges from `df`'s `textCol`. Returns the
@@ -77,31 +76,36 @@ object Bpe {
   def trainBpe(df: DataFrame, textCol: String, numMerges: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
+    val vocab = vocabulary(df, textCol)
+    // the gate reads the checkpoint's exact block bytes (no job);
+    // ~250 B/row deserialized → 2M words ≈ 480 MB, the broadcast-side
+    // bound the other local lanes use
+    val merges =
+      if (DataOps.underRows(vocab, LocalVocabMaxRows,
+          maxMemBytes = 480L << 20, maxScanBytes = 64L << 20))
+        localMerges(vocab.collect(), numMerges)
+      else distributedMerges(vocab, numMerges)
+    merges.toDF("rank", "left", "right", "merged", "pair_count")
+  }
 
-    // the one corpus-scale pass: pre-tokenize and count words
-    // initial symbols = the word's characters (split(w, "") would keep a
-    // trailing "" under Spark's limit=-1 semantics — substr is exact)
-    var vocab = df
-      .select(explode(regexp_extract_all(col(textCol),
+  /** The one corpus-scale pass: pre-tokenize `textCol` and count words,
+    * as (__syms, __freq) with the word's characters as initial symbols
+    * (split(w, "") would keep a trailing "" under Spark's limit=-1
+    * semantics — substr is exact). Checkpointed. */
+  private[operators] def vocabulary(df: DataFrame,
+      textCol: String): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(explode(regexp_extract_all(col(textCol),
         lit(DataOps.BpePattern), lit(0))).as("__w"))
       .groupBy($"__w").agg(count(lit(1)).as("__freq"))
       .select(transform(sequence(lit(1), length($"__w")),
         i => $"__w".substr(i, lit(1))).as("__syms"), $"__freq")
       .graftCheckpoint()
-
-    // the gate reads the checkpoint's exact block bytes (no job);
-    // ~250 B/row deserialized → 2M words ≈ 480 MB, the broadcast-side
-    // bound the other local lanes use
-    val localOk = spark.conf.get("graft.localIterate", "true").toBoolean &&
-      DataOps.underRows(vocab, LocalVocabMaxRows,
-        maxMemBytes = 480L << 20, maxScanBytes = 64L << 20)
-    val merges =
-      if (localOk) localMerges(vocab.collect(), numMerges)
-      else distributedMerges(vocab, numMerges)
-    merges.toDF("rank", "left", "right", "merged", "pair_count")
   }
 
-  private def distributedMerges(vocab0: DataFrame,
+  /** [[trainBpe]]'s distributed merge loop over a [[vocabulary]]. */
+  private[operators] def distributedMerges(vocab0: DataFrame,
       numMerges: Int): Seq[(Int, String, String, String, Long)] = {
     val spark = vocab0.sparkSession
     import spark.implicits._

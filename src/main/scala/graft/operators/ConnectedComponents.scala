@@ -31,23 +31,32 @@ object ConnectedComponents {
     */
   def run(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
       maxIter: Int = 20): DataFrame = {
-    val sym = edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
-      .union(edges.select(col(dstCol).as("s"), col(srcCol).as("d")))
-      .distinct()
-      .graftCheckpoint(true)
+    val sym = symmetric(edges, srcCol, dstCol)
     // driver-local lane (round 14, the Graph.powerIterate pattern): the
     // whole iteration is min-label comparisons over vertex ids — exact,
     // so the local twin SIMULATES the distributed rounds verbatim
     // (one-hop propagation + pointer jump + converged probe per round,
     // same maxIter throw). The distributed loop pays ~6 Spark jobs per
     // round; below the gate the collected directed edge list is bounded
-    // like a broadcast side. GraphSpec pins lane equality;
-    // `graft.localIterate=false` is the kill-switch.
+    // like a broadcast side. GraphSpec pins lane equality.
     val cmpId = LocalIter.cmp(sym.schema("s").dataType)
-    if (cmpId != null &&
-        edges.sparkSession.conf.get("graft.localIterate", "true").toBoolean
-        && Graph.underEdgeGate(sym))
-      return localRun(sym, maxIter, cmpId)
+    if (cmpId != null && Graph.underEdgeGate(sym))
+      localRun(sym, maxIter, cmpId)
+    else distributedRun(sym, maxIter)
+  }
+
+  /** [[run]]'s edge relation: both directions of every edge as (s, d),
+    * duplicates collapsed. */
+  private[operators] def symmetric(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
+      .union(edges.select(col(dstCol).as("s"), col(srcCol).as("d")))
+      .distinct()
+      .graftCheckpoint(true)
+
+  /** [[run]]'s distributed lane over [[symmetric]] edges. */
+  private[operators] def distributedRun(sym: DataFrame,
+      maxIter: Int): DataFrame = {
     var labels = sym.select(col("s").as("id")).distinct()
       .withColumn("label", col("id"))
       .graftCheckpoint(true)

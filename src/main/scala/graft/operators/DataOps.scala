@@ -572,9 +572,23 @@ object DataOps {
       iterations: Int = 15, lr: Double = 1.0,
       literalWeightLimit: Int = 1024)
       : (Array[Double], Array[Double]) = {
+    val _ = literalWeightLimit // see @param: ignored since round 5
+    // plan-side gate (round-15 ask 6): t25's input is a bare documents
+    // scan (~120 B/row compressed → 200k docs ≈ 24 MB); the mem twin
+    // prices a checkpointed doc relation at ~2 KB/row
+    trainClassifier(docs, idCol, textCol, labelCol, nBuckets, iterations,
+      lr, local = underRows(docs, LocalGdMaxDocs,
+        maxMemBytes = 400L << 20, maxScanBytes = 24L << 20))
+  }
+
+  /** [[trainQualityClassifier]] on the lane its gate chose: `local`
+    * collects the feature rows and folds them on the driver, otherwise
+    * each pass is a `treeAggregate` over the cached feature RDD. */
+  private[operators] def trainClassifier(docs: DataFrame, idCol: String,
+      textCol: String, labelCol: String, nBuckets: Int, iterations: Int,
+      lr: Double, local: Boolean): (Array[Double], Array[Double]) = {
     val ss = docs.sparkSession
     import ss.implicits._
-    val _ = literalWeightLimit // see @param: ignored since round 5
     // ONE exchange total: hash-partition by __id — the feature groupBy's
     // ClusteredDistribution(__id,__y,__n,__b) is satisfied by
     // HashPartitioning(__id) (subset rule), so the per-doc collapse that
@@ -635,15 +649,9 @@ object DataOps {
     // conservative, and a cheap column-pruned scan); below it the
     // feature relation is collected directly, so the RDD conversion,
     // the persist cycle and its count job never happen at all.
-    // DataOpsSpec pins lane equality; graft.localIterate kills it.
+    // DataOpsSpec pins lane equality.
     val localRows: Array[(Double, Array[Int], Array[Double])] =
-      if (ss.conf.get("graft.localIterate", "true").toBoolean &&
-          // plan-side gate (round-15 ask 6): t25's input is a bare
-          // documents scan (~120 B/row compressed → 200k docs ≈ 24 MB);
-          // the mem twin prices a checkpointed doc relation at ~2 KB/row
-          underRows(docs, LocalGdMaxDocs,
-            maxMemBytes = 400L << 20, maxScanBytes = 24L << 20))
-        perDocDf.select($"__y", $"__f").collect().map(parseRow)
+      if (local) perDocDf.select($"__y", $"__f").collect().map(parseRow)
       else null
     // the distributed lane caches the per-doc features as a typed RDD:
     // iterations then run pure JVM math, one treeAggregate job each —

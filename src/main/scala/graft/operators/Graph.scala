@@ -90,8 +90,7 @@ object Graph {
     * the distributed path: decimal(38,28) share quantization and exact
     * integer sums replicate the plan-side arithmetic verbatim
     * ([[graft.functions.LocalMath]] conventions; GraphSpec pins lane
-    * equality on planted graphs and the sf0.001 trade graph).
-    * `graft.localIterate = false` is the A/B kill-switch. */
+    * equality on planted graphs and the sf0.001 trade graph). */
   private[operators] val LocalIterateMaxEdges = 4000000L
 
   /** Byte twins of [[LocalIterateMaxEdges]] for the no-job gate
@@ -116,13 +115,18 @@ object Graph {
     val eRaw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val e = if (assumeDistinctEdges) eRaw
             else eRaw.distinct().graftCheckpoint(true)
-    val localOk = edges.sparkSession.conf
-      .get("graft.localIterate", "true").toBoolean
     // one O(E) count gates the lane; on the big path it reads
     // checkpointed blocks (or the shared trade relation) — one cheap
     // extra job against ~9 saved per round on the small path
-    if (localOk && underEdgeGate(e))
-      return localPowerIterate(e, iterations, damping, seeds)
+    if (underEdgeGate(e)) localPowerIterate(e, iterations, damping, seeds)
+    else distributedPowerIterate(e, iterations, damping, seeds)
+  }
+
+  /** [[powerIterate]]'s distributed lane over the distinct (src, dst)
+    * edge relation `e`. */
+  private[operators] def distributedPowerIterate(e: DataFrame,
+      iterations: Int, damping: Double,
+      seeds: Option[DataFrame]): DataFrame = {
     val vertices = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
       .graftCheckpoint(true)
@@ -372,9 +376,14 @@ object Graph {
     // and seeds are the only jobs it runs, and only the distributed
     // branch checkpoints.
     if (LocalIter.cmp(plan.schema("e_src").dataType) != null &&
-        edges.sparkSession.conf.get("graft.localIterate", "true").toBoolean
-        && underEdgeGate(plan))
-      return localBfsDepth(plan, seeds, maxDepth)
+        underEdgeGate(plan))
+      localBfsDepth(plan, seeds, maxDepth)
+    else distributedBfsDepth(plan, seeds, maxDepth)
+  }
+
+  /** [[bfsDepth]]'s distributed lane over the (e_src, e_dst) edge plan. */
+  private[operators] def distributedBfsDepth(plan: DataFrame,
+      seeds: DataFrame, maxDepth: Int): DataFrame = {
     val e = plan.graftCheckpoint(true)
     // seeds ∩ vertices, mirroring personalizedPageRank's seed handling:
     // a seed that is not a vertex of the edge list is ignored (it is not
@@ -519,25 +528,6 @@ object Graph {
     }
     val e = edges.select(col("src"), col("dst"), col("w"))
       .graftCheckpoint(true)
-    // driver-local lane (round 14): integral vote sums and the
-    // (−votes, label) struct-min tie-break are exact, so the local twin
-    // replays the fixed vote rounds verbatim (decimal weights and
-    // non-orderable label types stay distributed). ~4 Spark jobs per
-    // round saved below the gate. GraphSpec pins lane equality.
-    val wIntegral = edges.schema("w").dataType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    if (wIntegral &&
-        LocalIter.cmp(nodes.schema("label").dataType) != null &&
-        LocalIter.cmp(nodes.schema("id").dataType) != null &&
-        edges.sparkSession.conf.get("graft.localIterate", "true").toBoolean
-        && underEdgeGate(e))
-      localLabelSpread(e, nodes, iterations, clampSeeds)
-        .foreach(df => return df)
     var state = nodes
       .select(col("id"), col("label").as("seed"), col("label").as("cur"))
       .graftCheckpoint(true)
@@ -559,94 +549,6 @@ object Graph {
         .graftCheckpoint(true)
     }
     state.select(col("id"), col("seed"), col("cur").as("label"))
-  }
-
-  /** [[labelSpread]]'s driver-local lane: identical vote rounds over the
-    * collected edge/node lists — vote sums via Math.addExact (ANSI sum
-    * parity), winner = min((−votes, label)) with the label compare
-    * mirroring Spark's ordering ([[LocalIter.cmp]]), nulls and the
-    * clampSeeds coalesce chain replicated verbatim. */
-  private def localLabelSpread(e: DataFrame, nodes: DataFrame,
-      iterations: Int, clampSeeds: Boolean): Option[DataFrame] = {
-    val spark = e.sparkSession
-    val labCmp = LocalIter.cmp(nodes.schema("label").dataType)
-    val nodeRows = nodes.select(col("id"), col("label")).collect()
-    val vx = new LocalIter.VertexIndex
-    val seed = new Array[Any](nodeRows.length)
-    nodeRows.foreach { r =>
-      val i = vx(r.get(0))
-      seed(i) = r.get(1) // null stays null
-    }
-    val nV = vx.size
-    // duplicate node ids would collapse to one state row here but stay
-    // two rows distributed — hand such inputs back to the big lane
-    if (nV != nodeRows.length) return None
-    var cur: Array[Any] = seed.clone()
-    // resolve edges to node indices; edges touching non-node ids can
-    // never vote (src inner-joins state) or be voted (dst left-joins
-    // state), so they drop here exactly as in the distributed plan
-    val eRows = e.collect()
-    val srcA = new scala.collection.mutable.ArrayBuffer[Int]()
-    val dstA = new scala.collection.mutable.ArrayBuffer[Int]()
-    val wA = new scala.collection.mutable.ArrayBuffer[Long]()
-    eRows.foreach { r =>
-      val s = vx.get(r.get(0)); val d = vx.get(r.get(1))
-      if (s >= 0 && d >= 0) {
-        srcA += s; dstA += d
-        wA += r.get(2).asInstanceOf[Number].longValue()
-      }
-    }
-    for (_ <- 1 to iterations) {
-      // vote sums per (dst, label) — exact longs, overflow fails loudly
-      // like the ANSI sum it mirrors
-      val votes = new java.util.HashMap[(Int, Any), java.lang.Long]()
-      var k = 0
-      while (k < srcA.length) {
-        val lab = cur(srcA(k))
-        if (lab != null) {
-          val key = (dstA(k), lab)
-          val prev = votes.get(key)
-          votes.put(key,
-            if (prev == null) wA(k) else Math.addExact(prev.longValue(), wA(k)))
-        }
-        k += 1
-      }
-      // winner per dst: min(struct(-v, lab))
-      val winner = new Array[Any](nV)
-      val bestNv = new Array[Long](nV)
-      votes.forEach { (key, v) =>
-        val (d, lab) = key
-        val nv = Math.negateExact(v.longValue())
-        if (winner(d) == null || nv < bestNv(d) ||
-            (nv == bestNv(d) && labCmp(lab, winner(d)) < 0)) {
-          winner(d) = lab; bestNv(d) = nv
-        }
-      }
-      val next = new Array[Any](nV)
-      var i = 0
-      while (i < nV) {
-        next(i) =
-          if (clampSeeds) {
-            if (seed(i) != null) seed(i)
-            else if (winner(i) != null) winner(i) else cur(i)
-          } else if (winner(i) != null) winner(i) else cur(i)
-        i += 1
-      }
-      cur = next
-    }
-    val idType = nodes.schema("id").dataType
-    val labType = nodes.schema("label").dataType
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", idType),
-      org.apache.spark.sql.types.StructField("seed", labType),
-      org.apache.spark.sql.types.StructField("label", labType)))
-    val out = new java.util.ArrayList[org.apache.spark.sql.Row](nV)
-    var i = 0
-    while (i < nV) {
-      out.add(org.apache.spark.sql.Row(vx.ids(i), seed(i), cur(i)))
-      i += 1
-    }
-    Some(spark.createDataFrame(out, schema))
   }
 
   /** Per-vertex triangle counts by degree-ordered edge orientation —
@@ -801,11 +703,7 @@ object Graph {
   def kTruss(edges: DataFrame, k: Int, maxRounds: Int = 24,
       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(k >= 3, s"kTruss: k must be >= 3, got $k")
-    var und = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .graftCheckpoint(true)
+    val und = undirected(edges, srcCol, dstCol)
     // driver-local lane (round 14): per-edge supports are exact triangle
     // counts (integers), so the local twin — degree-ordered wedge
     // enumeration per peel round — reproduces the peel sequence, the
@@ -813,12 +711,28 @@ object Graph {
     // round is an O(E^1.5) wedge join plus ~6 jobs; below the gate the
     // whole cascade runs on the collected edge list. GraphSpec pins
     // lane equality. The gate reads the checkpoint's block sizes (no
-    // count job); the distributed lane's convergence counter below
-    // still counts — that count is the algorithm's, not the gate's.
+    // count job); the distributed lane's convergence counter still
+    // counts — that count is the algorithm's, not the gate's.
     if (LocalIter.cmp(und.schema("a").dataType) != null &&
-        edges.sparkSession.conf.get("graft.localIterate", "true").toBoolean
-        && underEdgeGate(und))
-      return localKTruss(und, k, maxRounds)
+        underEdgeGate(und))
+      localKTruss(und, k, maxRounds)
+    else distributedKTruss(und, k, maxRounds)
+  }
+
+  /** The canonical undirected edge set of [[kTruss]] and [[kCore]]:
+    * (a, b) with a < b, self-loops dropped, duplicates collapsed. */
+  private[operators] def undirected(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges
+      .select(least(col(srcCol), col(dstCol)).as("a"),
+        greatest(col(srcCol), col(dstCol)).as("b"))
+      .filter(col("a") =!= col("b")).distinct()
+      .graftCheckpoint(true)
+
+  /** [[kTruss]]'s distributed lane over [[undirected]] edges. */
+  private[operators] def distributedKTruss(und0: DataFrame, k: Int,
+      maxRounds: Int): DataFrame = {
+    var und = und0
     var n = und.count()
     var round = 0
     var stable = false
@@ -975,21 +889,22 @@ object Graph {
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 12,
       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
-    var und = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .graftCheckpoint(true)
+    val und = undirected(edges, srcCol, dstCol)
     // driver-local lane (round 14, the powerIterate pattern): the peel
     // is pure integer arithmetic, so the local twin is exact by
     // construction — no fp anywhere. The distributed loop pays ~8 jobs
     // per peel round (degree agg + doomed checkpoint + emptiness probe
     // + anti-join checkpoint); sf0.1's 13-round cascade measured 104
     // jobs / 3.1 s with 98% of wall×cores idle. GraphSpec pins lane
-    // equality; `graft.localIterate=false` is the kill-switch.
-    if (edges.sparkSession.conf.get("graft.localIterate", "true").toBoolean
-        && underEdgeGate(und))
-      return localKCore(und, k, maxRounds)
+    // equality.
+    if (underEdgeGate(und)) localKCore(und, k, maxRounds)
+    else distributedKCore(und, k, maxRounds)
+  }
+
+  /** [[kCore]]'s distributed lane over [[undirected]] edges. */
+  private[operators] def distributedKCore(und0: DataFrame, k: Int,
+      maxRounds: Int): DataFrame = {
+    var und = und0
     var round = 0
     var stable = false
     while (!stable) {
@@ -1142,9 +1057,15 @@ object Graph {
     // exit). ~6 Spark jobs per round saved below the gate. GraphSpec
     // pins lane equality.
     if (LocalIter.cmp(e.schema("e_src").dataType) != null &&
-        edges.sparkSession.conf.get("graft.localIterate", "true").toBoolean
-        && underEdgeGate(e))
-      return localShortestPaths(e, seeds, maxRounds)
+        underEdgeGate(e))
+      localShortestPaths(e, seeds, maxRounds)
+    else distributedShortestPaths(e, seeds, maxRounds)
+  }
+
+  /** [[shortestPaths]]'s distributed lane over the (e_src, e_dst,
+    * e_cost) edge relation. */
+  private[operators] def distributedShortestPaths(e: DataFrame,
+      seeds: DataFrame, maxRounds: Int): DataFrame = {
     val vertices = e.select(col("e_src").as("id"))
       .union(e.select(col("e_dst").as("id"))).distinct()
     var dist = seeds.select(col("id")).distinct()

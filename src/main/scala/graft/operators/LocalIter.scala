@@ -13,7 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * SIMULATES its distributed twin round for round — same per-round
   * values, same convergence checks, same loud non-convergence throws —
   * so the two lanes are observationally identical (spec-gated per
-  * lane); `graft.localIterate = false` is the A/B kill-switch.
+  * lane). The input's size alone chooses the lane; each distributed
+  * twin is reachable from the specs as a `private[operators]` entry.
   *
   * [[cmp]] mirrors Spark's ordering for the vertex-id types the lanes
   * admit: integral types by numeric value, strings by UTF8 binary

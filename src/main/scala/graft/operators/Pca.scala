@@ -112,7 +112,7 @@ object Pca {
     * arithmetic is the verbatim twin of the plan-side expressions
     * (vector_mean_rounded / dot_double; PcaSpec pins lane equality).
     * Collected size is bounded like a broadcast side (≤ rows × dim
-    * doubles). `graft.localIterate = false` is the kill-switch. */
+    * doubles). */
   private val LocalPcaMaxRows = 200000L
 
   def fit(vecs: DataFrame, k: Int = 3, iterations: Int = 8,
@@ -123,10 +123,15 @@ object Pca {
     // column-pruned parquet scan (~160 B/row compressed at 64 dims →
     // 200k rows ≈ 32 MB); checkpointed inputs read exact block bytes
     // (~700 B/row deserialized → 140 MB); otherwise the bounded count
-    if (vecs.sparkSession.conf.get("graft.localIterate", "true").toBoolean
-        && DataOps.underRows(v, LocalPcaMaxRows,
-          maxMemBytes = 140L << 20, maxScanBytes = 32L << 20))
-      return localFit(v, k, iterations)
+    if (DataOps.underRows(v, LocalPcaMaxRows,
+        maxMemBytes = 140L << 20, maxScanBytes = 32L << 20))
+      localFit(v, k, iterations)
+    else distributedFit(v, k, iterations)
+  }
+
+  /** [[fit]]'s distributed lane over the non-null double vectors `v`. */
+  private[operators] def distributedFit(v: DataFrame, k: Int,
+      iterations: Int): PcaModel = {
     val mu = v.agg(vector_mean_rounded(col("v"), lit(1.0), 6).as("mu"))
       .head().getSeq[Double](0).toArray
     val centered = v.select(

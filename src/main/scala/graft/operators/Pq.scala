@@ -58,7 +58,7 @@ object Pq {
     * and means run through the MeanRoundedAcc twin of
     * vector_mean_rounded (PqSpec/SimilaritySpec pin lane equality).
     * Above the gate — or for non-integral vec_id types — the
-    * distributed loop is unchanged. graft.localIterate kills it. */
+    * distributed loop is unchanged. */
   private val LocalTrainMaxRows = 200000L
 
   def trainCodebooks(vectors: DataFrame, dim: Int, numSubspaces: Int,
@@ -74,12 +74,20 @@ object Pq {
     // 200k rows ≈ 32 MB); the s05 residual input is a checkpointed
     // relation (exact block bytes, ~700 B/row deserialized → 140 MB);
     // anything else falls back to the old bounded count
-    if (idIntegral &&
-        vectors.sparkSession.conf.get("graft.localIterate", "true").toBoolean
-        && DataOps.underRows(vectors, LocalTrainMaxRows,
+    val local =
+      if (idIntegral && DataOps.underRows(vectors, LocalTrainMaxRows,
           maxMemBytes = 140L << 20, maxScanBytes = 32L << 20))
-      localTrainCodebooks(vectors, dim, numSubspaces, numCodes, iterations)
-        .foreach(df => return df)
+        localTrainCodebooks(vectors, dim, numSubspaces, numCodes, iterations)
+      else None
+    local.getOrElse(
+      distributedTrainCodebooks(vectors, dim, numSubspaces, numCodes,
+        iterations))
+  }
+
+  /** [[trainCodebooks]]'s distributed lane. */
+  private[operators] def distributedTrainCodebooks(vectors: DataFrame,
+      dim: Int, numSubspaces: Int, numCodes: Int,
+      iterations: Int): DataFrame = {
     val subDim = dim / numSubspaces
     val sub = vectors.select(col("vec_id"), posexplode(
       array((0 until numSubspaces).map(m =>

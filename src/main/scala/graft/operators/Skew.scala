@@ -7,20 +7,17 @@ import org.apache.spark.sql.functions._
   *
   * A single pathological key (the null user, the default tenant, the
   * bot IP) can put 10% of 100 TB into one shuffle partition and stall the
-  * stage on one straggler task. Two standard fixes, both deterministic:
+  * stage on one straggler task. The fix here is deterministic:
   *
-  *   - saltedAggregate: two-phase aggregation — first over (key, salt)
-  *     spreading each hot key across `salts` partitions, then over key to
-  *     combine the partials. Works for any algebraic aggregate
-  *     (count/sum/min/max — supplied as partial+final column pairs).
   *   - saltedJoin: replicate the (small-ish) build side `salts` times and
   *     spread the probe side by a deterministic salt — each hot probe key
-  *     now hits `salts` different partitions.
+  *     now hits `salts` different partitions;
+  *   - adaptiveSaltedJoin: the same for an unknown key distribution,
+  *     salting only the keys a Misra–Gries pass proposes as hot.
   *
   * AQE's skew-join handling (spark.sql.adaptive.skewJoin) covers the join
   * case at runtime when statistics expose the skew; these operators are
-  * the explicit form for when you KNOW the key distribution (and for
-  * aggregations, which AQE does not re-balance).
+  * the explicit form for when you KNOW the key distribution.
   *
   * Salt is `pmod(hash(entire row id cols), salts)` — deterministic, no
   * RNG, so retried tasks produce identical results (a rand()-based salt
@@ -30,21 +27,6 @@ object Skew {
 
   private def saltCol(cols: Seq[Column], salts: Int): Column =
     pmod(hash(cols: _*), lit(salts))
-
-  /** Two-phase salted count+sum per key. `valueCol` is decimal-cast so the
-    * two-phase sum is exact (order-independent). */
-  def saltedCountSum(df: DataFrame, keyCol: String, valueCol: String,
-      salts: Int = 16): DataFrame = {
-    val salted = df.withColumn("__salt",
-      saltCol(Seq(col(keyCol), col(valueCol), monotonically_increasing_id()), salts))
-    salted
-      .groupBy(col(keyCol), col("__salt"))
-      .agg(count(lit(1)).as("__pc"),
-        sum(col(valueCol).cast("decimal(18,2)")).as("__ps"))
-      .groupBy(col(keyCol))
-      .agg(sum(col("__pc")).as("n"),
-        sum(col("__ps")).cast("double").as("total"))
-  }
 
   /** Salted inner equi-join: probe side salted deterministically, build
     * side replicated `salts` times. Equivalent to

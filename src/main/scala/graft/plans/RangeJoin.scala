@@ -10,8 +10,9 @@ import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, TimestampType}
 
 /** Broadcast range join — the full custom-operator ladder (SURVEY.md §7.3
-  * option (c)): logical node → planner strategy → physical operator,
-  * registered through SparkSessionExtensions (graft.GraftExtensions).
+  * option (c)): logical node → planner strategy → physical operator. The
+  * strategy is installed by [[RangeJoin.broadcastRange]], the one
+  * producer of [[RangeJoinPlan]], on the session it plans in.
   *
   * Semantics: inner join of a big `left` against a SMALL `right` of
   * keyed intervals, on `leftKey = rightKey AND rightLo <= leftTime <=
@@ -127,9 +128,8 @@ object RangeJoin {
   def broadcastRange(left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTime: String, rightLo: String, rightHi: String): DataFrame = {
-    // Make the operator plannable on sessions built without
-    // GraftExtensions (e.g. a driver harness): extraStrategies is the
-    // public runtime hook for exactly this.
+    // Make the operator plannable on this session: extraStrategies is
+    // the public runtime hook for exactly this.
     val spark = left.sparkSession
     if (!spark.experimental.extraStrategies.contains(RangeJoinStrategy))
       spark.experimental.extraStrategies =

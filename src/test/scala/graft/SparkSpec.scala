@@ -3,29 +3,23 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{SparkSession, TestInternals}
+import org.apache.spark.sql.{DataFrame, SparkSession, TestInternals}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for the test suite (one per suite).
+/** Shared local SparkSession for the test suite (one per suite), from
+  * the engine's one session factory, [[GraftSession]], so the specs run
+  * under the settings the mains run under.
   *
   * GRAFT_TEST_MASTER overrides the master (e.g. `local-cluster[2,4,3072]`
-  * to run a suite against REAL executor JVMs); GRAFT_TEST_JARS must then
+  * to run a suite against REAL executor JVMs); SPARK_GRAFT_JARS must then
   * carry the packaged main+test jars (`sbt package Test/package`) so
   * executor-side classloading can resolve both engine classes and test
-  * closures — see [[ClusterEnv]]. Default behavior is byte-identical to
-  * before: plain local[4], no jar shipping. */
+  * closures, and SPARK_GRAFT_EXECUTOR_MEM sizes the executors — see
+  * [[ClusterEnv]]. Default: plain local[4], no jar shipping. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_TEST_MASTER", "local[4]"))
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    ClusterEnv.withExecutorEnv(builder, sys.env.get("GRAFT_TEST_JARS"),
-      sys.env.getOrElse("GRAFT_TEST_EXECUTOR_MEM", "2g")).getOrCreate()
-  }
+  lazy val spark: SparkSession =
+    GraftSession(sys.env.getOrElse("GRAFT_TEST_MASTER", "local[4]"), "4")
 
   def sf(dir: String): String = s"/root/testdata/$dir"
 
@@ -46,6 +40,15 @@ trait SparkSpec extends AnyFunSuite {
     TestInternals.drainListenerBus(sc)
     sc.addSparkListener(listener)
     try { body; TestInternals.drainListenerBus(sc) } finally sc.removeSparkListener(listener)
+  }
+
+  /** Asserts that `df` was built on the driver — its analyzed plan is
+    * one LocalRelation — as a driver-local lane's answer is and a
+    * distributed lane's checkpointed answer never is. */
+  def assertDriverLocal(df: DataFrame): Unit = {
+    val plan = df.queryExecution.analyzed
+    assert(plan.isInstanceOf[LocalRelation],
+      s"expected the driver-local lane's answer, got:\n$plan")
   }
 
   /** Spark jobs `body` launches. */

@@ -173,17 +173,6 @@ class AdvancedSpec extends SparkSpec {
     }
   }
 
-  test("saltedCountSum equals plain aggregation") {
-    val ev = graft.Tables.events(spark, sf("sf0.001"))
-    val salted = Skew.saltedCountSum(ev, "event_type", "value")
-      .orderBy($"event_type").as[(String, Long, Double)].collect().toSeq
-    val plain = ev.groupBy($"event_type")
-      .agg(count(lit(1)).as("n"),
-        sum($"value".cast("decimal(18,2)")).cast("double").as("total"))
-      .orderBy($"event_type").as[(String, Long, Double)].collect().toSeq
-    assert(salted === plain)
-  }
-
   test("saltedJoin equals plain join") {
     val ev = graft.Tables.events(spark, sf("sf0.001"))
       .select($"event_id", $"user_id")

@@ -70,16 +70,22 @@ class BpeSpec extends SparkSpec {
     // lanes, exact equality of the full merge table — incl. tie-breaks
     // (the synthetic corpus has count ties) and the early-exhaust path
     val docs = Tables.documents(spark, sf("sf0.001"))
-    def table(): Seq[(Int, String, String, String, Long)] =
-      Bpe.trainBpe(docs, "text", numMerges = 20).orderBy($"rank").collect()
-        .map(r => (r.getInt(0), r.getString(1), r.getString(2),
+    var local: Seq[(Int, String, String, String, Long)] = null
+    val localJobs = jobsOf {
+      local = Bpe.trainBpe(docs, "text", numMerges = 20).orderBy($"rank")
+        .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2),
           r.getString(3), r.getLong(4))).toSeq
-    val local = table() // gate passes at spec scale → local lane
-    spark.conf.set("graft.localIterate", "false")
-    try {
-      val dist = table()
-      assert(local === dist, "lane parity on the full merge table")
-    } finally spark.conf.set("graft.localIterate", "true")
+    }
+    var dist: Seq[(Int, String, String, String, Long)] = null
+    val distJobs = jobsOf {
+      dist = Bpe.distributedMerges(Bpe.vocabulary(docs, "text"), 20)
+    }
+    // the distributed loop runs at least one job per merge; the local
+    // lane only builds and collects the vocabulary
+    assert(local.length === 20)
+    assert(localJobs < 20 && distJobs >= 20,
+      s"trainBpe must take the local lane: $localJobs jobs, twin $distJobs")
+    assert(local === dist, "lane parity on the full merge table")
   }
 
   test("encode: golden segmentation under the hug/pug merge table") {

@@ -84,13 +84,6 @@ class DataOpsSpec extends SparkSpec {
     assert(a.size < 500, "the planted near-dups must have been removed")
   }
 
-  test("heavy hitters finds the hot key, supports the salting decision") {
-    val skewed = (1 to 900).map(_ => 7L) ++ (1 to 100).map(_.toLong + 100)
-    val df = skewed.toDF("k")
-    val hot = Sketches.heavyHitters(df, "k", support = 0.5)
-    assert(hot.contains(7L), s"the 90% key must surface: $hot")
-  }
-
   test("exactGroups collapses exact duplicates only") {
     val g = Dedup.exactGroups(docs, "doc_id", "text").filter($"n_copies" > 1)
     val row = g.collect()
@@ -645,12 +638,20 @@ class DataOpsSpec extends SparkSpec {
     val dir = sf("sf0.001")
     val docs = graft.Tables.documents(spark, dir).withColumn("lbl",
       (graft.functions.Text.sentimentScore($"text") > 0.02).cast("int"))
-    def run(): (Array[Double], Array[Double]) =
-      DataOps.trainQualityClassifier(docs, "doc_id", "text", "lbl")
-    val (wL, lossL) = run() // local lane (tiny corpus, default conf)
-    spark.conf.set("graft.localIterate", "false")
-    val (wD, lossD) =
-      try run() finally spark.conf.unset("graft.localIterate")
+    var local: (Array[Double], Array[Double]) = null
+    val localJobs = jobsOf {
+      local = DataOps.trainQualityClassifier(docs, "doc_id", "text", "lbl")
+    }
+    var dist: (Array[Double], Array[Double]) = null
+    val distJobs = jobsOf {
+      dist = DataOps.trainClassifier(docs, "doc_id", "text", "lbl",
+        nBuckets = 256, iterations = 15, lr = 1.0, local = false)
+    }
+    val ((wL, lossL), (wD, lossD)) = (local, dist)
+    // the distributed lane runs one treeAggregate job per GD pass; the
+    // local lane only collects the feature rows
+    assert(localJobs < 15 && distJobs >= 15,
+      s"training must take the local lane: $localJobs jobs, twin $distJobs")
     assert(wL.toSeq === wD.toSeq, "GD lanes must produce identical weights")
     assert(lossL.toSeq === lossD.toSeq, "GD lanes must produce identical losses")
   }
@@ -1497,12 +1498,14 @@ class DataOpsSpec extends SparkSpec {
     val d = sf("sf0.001")
     val vectors = graft.Tables.embeddings(spark, d)
       .select($"vec_id", Similarity.toDouble($"embedding").as("v"))
-    def run(): Set[(Int, Int, Seq[Double])] =
-      Pq.trainCodebooks(vectors, dim = 64, numSubspaces = 8, numCodes = 16)
-        .as[(Int, Int, Seq[Double])].collect().toSet
-    val local = run() // default lane below the row gate
-    spark.conf.set("graft.localIterate", "false")
-    val dist = try run() finally spark.conf.unset("graft.localIterate")
+    def books(df: org.apache.spark.sql.DataFrame): Set[(Int, Int, Seq[Double])] =
+      df.as[(Int, Int, Seq[Double])].collect().toSet
+    val out = Pq.trainCodebooks(vectors, dim = 64, numSubspaces = 8,
+      numCodes = 16)
+    assertDriverLocal(out)
+    val local = books(out)
+    val dist = books(Pq.distributedTrainCodebooks(vectors, dim = 64,
+      numSubspaces = 8, numCodes = 16, iterations = 3))
     assert(local === dist, "codebook lanes must be bit-identical")
   }
 

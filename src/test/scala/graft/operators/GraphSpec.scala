@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Checkpoints._
 import graft.SparkSpec
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
 
@@ -49,17 +49,18 @@ class GraphSpec extends SparkSpec {
     val edges = Seq(("A", "B"), ("A", "B"), ("B", "C"), ("C", "A"),
       ("C", "sink"), ("X", "Y"), ("Y", "X")).toDF("src", "dst")
     val seeds = Seq("A").toDF("id")
-    def run(): (Map[String, Double], Map[String, Double]) = (
-      Graph.pageRank(edges, iterations = 7)
-        .as[(String, Double)].collect().toMap,
-      Graph.personalizedPageRank(edges, seeds, iterations = 7)
-        .as[(String, Double)].collect().toMap)
-    val (prL, pprL) = run() // local lane (default: tiny graph)
-    spark.conf.set("graft.localIterate", "false")
-    val (prD, pprD) =
-      try run() finally spark.conf.unset("graft.localIterate")
-    assert(prL === prD, "pageRank lanes must be bit-identical")
-    assert(pprL === pprD, "personalized lanes must be bit-identical")
+    def ranks(df: DataFrame): Map[String, Double] =
+      df.as[(String, Double)].collect().toMap
+    val pr = Graph.pageRank(edges, iterations = 7)
+    val ppr = Graph.personalizedPageRank(edges, seeds, iterations = 7)
+    assertDriverLocal(pr)
+    assertDriverLocal(ppr)
+    val e = edges.distinct()
+    val (prL, pprL) = (ranks(pr), ranks(ppr))
+    assert(prL === ranks(Graph.distributedPowerIterate(e, 7, 0.85, None)),
+      "pageRank lanes must be bit-identical")
+    assert(pprL === ranks(Graph.distributedPowerIterate(e, 7, 0.85,
+      Some(seeds))), "personalized lanes must be bit-identical")
     assert(pprL("X") === 0.0 && pprL("Y") === 0.0, "locality: exact 0")
   }
 
@@ -69,11 +70,13 @@ class GraphSpec extends SparkSpec {
     val base = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
       (3L, 4L), (4L, 5L), (5L, 6L), (6L, 6L), (2L, 1L))
     val edges = base.toDF("src", "dst")
-    def run(): Set[(Long, Long)] =
-      Graph.kCore(edges, k = 3).as[(Long, Long)].collect().toSet
-    val local = run()
-    spark.conf.set("graft.localIterate", "false")
-    val dist = try run() finally spark.conf.unset("graft.localIterate")
+    def pairs(df: DataFrame): Set[(Long, Long)] =
+      df.as[(Long, Long)].collect().toSet
+    val out = Graph.kCore(edges, k = 3)
+    assertDriverLocal(out)
+    val local = pairs(out)
+    val dist = pairs(Graph.distributedKCore(
+      Graph.undirected(edges, "src", "dst"), k = 3, maxRounds = 12))
     assert(local === dist, "kCore lanes must agree exactly")
     assert(local === Set((1L, 3L), (2L, 3L), (3L, 3L), (4L, 3L)))
   }
@@ -643,13 +646,18 @@ class GraphSpec extends SparkSpec {
   }
 
   // ---- round-14 driver-local lane parity (the powerIterate/kCore
-  // convention): every new lane must agree EXACTLY with its distributed
-  // twin, including convergence throws -------------------------------
+  // convention): the public call takes the local lane on these tiny
+  // graphs (asserted from its plan), and its answer must agree EXACTLY
+  // with the distributed twin's, including convergence throws --------
 
-  private def distributed[T](run: => T): T = {
-    spark.conf.set("graft.localIterate", "false")
-    try run finally spark.conf.unset("graft.localIterate")
-  }
+  /** The (e_src, e_dst) edge plan of bfsDepth's lanes. */
+  private def bfsEdges(e: DataFrame): DataFrame =
+    e.select(col("src").as("e_src"), col("dst").as("e_dst"))
+
+  /** The (e_src, e_dst, e_cost) edge relation of shortestPaths' lanes. */
+  private def ssspEdges(e: DataFrame): DataFrame =
+    e.select(col("src").as("e_src"), col("dst").as("e_dst"),
+      col("cost").cast("long").as("e_cost"))
 
   /** The id types the lanes' shared collect admits, each tested. */
   private val idTypes: Seq[DataType] = Seq(LongType, IntegerType, StringType)
@@ -665,18 +673,22 @@ class GraphSpec extends SparkSpec {
     // chain inside one component so pointer jumping matters
     val edges = Seq(("b", "a"), ("c", "b"), ("d", "c"), ("x", "y"),
       ("a", "a2"), ("y", "x")).toDF("src", "dst")
-    def run(): Map[String, String] =
-      ConnectedComponents.run(edges).as[(String, String)].collect().toMap
-    val local = run()
-    val dist = distributed(run())
+    def labels(df: DataFrame): Map[String, String] =
+      df.as[(String, String)].collect().toMap
+    val out = ConnectedComponents.run(edges)
+    assertDriverLocal(out)
+    val local = labels(out)
+    val dist = labels(ConnectedComponents.distributedRun(
+      ConnectedComponents.symmetric(edges, "src", "dst"), maxIter = 20))
     assert(local === dist, "CC lanes must agree exactly")
     assert(local("d") === "a" && local("y") === "x")
     // throw parity: 200-chain cannot converge in 2 rounds on either lane
     val chain = (0L until 199L).map(i => (i, i + 1)).toDF("src", "dst")
     intercept[IllegalStateException] {
       ConnectedComponents.run(chain, maxIter = 2) }
-    intercept[IllegalStateException] { distributed(
-      ConnectedComponents.run(chain, maxIter = 2)) }
+    intercept[IllegalStateException] {
+      ConnectedComponents.distributedRun(
+        ConnectedComponents.symmetric(chain, "src", "dst"), maxIter = 2) }
   }
 
   test("connected-components lanes agree for Long, Int and String ids") {
@@ -684,10 +696,13 @@ class GraphSpec extends SparkSpec {
     val edges = Seq((2L, 1L), (3L, 2L), (4L, 3L), (1L, 12L), (10L, 9L),
       (11L, 10L)).toDF("src", "dst")
     for (t <- idTypes) {
-      def run(): Set[Row] = ConnectedComponents
-        .run(asIds(edges, t, "src", "dst")).collect().toSet
-      val local = run()
-      assert(local === distributed(run()), s"CC lanes must agree ($t ids)")
+      val typed = asIds(edges, t, "src", "dst")
+      val out = ConnectedComponents.run(typed)
+      assertDriverLocal(out)
+      val local = out.collect().toSet
+      assert(local === ConnectedComponents.distributedRun(
+        ConnectedComponents.symmetric(typed, "src", "dst"), maxIter = 20)
+        .collect().toSet, s"CC lanes must agree ($t ids)")
       val label = local.map(r => r.get(0).toString -> r.get(1).toString).toMap
       assert(label("4") === "1" && label("12") === "1")
       assert(label("11") === (if (t == StringType) "10" else "9"))
@@ -703,11 +718,12 @@ class GraphSpec extends SparkSpec {
     // a repeated seed is one seed on both lanes
     val seeds = Seq(0L, 0L).toDF("id")
     for (t <- idTypes) {
-      def run(): Set[Row] = Graph.bfsDepth(asIds(sym, t, "src", "dst"),
-        asIds(seeds, t, "id"), maxDepth = 2).collect().toSet
-      val local = run()
-      assert(local === distributed(run()),
-        s"bfs lanes must agree exactly ($t ids)")
+      val (e, s) = (asIds(sym, t, "src", "dst"), asIds(seeds, t, "id"))
+      val out = Graph.bfsDepth(e, s, maxDepth = 2)
+      assertDriverLocal(out)
+      val local = out.collect().toSet
+      assert(local === Graph.distributedBfsDepth(bfsEdges(e), s, maxDepth = 2)
+        .collect().toSet, s"bfs lanes must agree exactly ($t ids)")
       assert(local.map(r => r.get(0).toString -> r.getInt(1)) ===
         Set("0" -> 0, "1" -> 1, "3" -> 1, "2" -> 2, "4" -> 2))
     }
@@ -734,10 +750,12 @@ class GraphSpec extends SparkSpec {
     // a repeated seed is one seed on both lanes
     val seeds = Seq(1L, 1L).toDF("id")
     for (t <- idTypes) {
-      def run(): Set[Row] = Graph.shortestPaths(asIds(edges, t, "src", "dst"),
-        asIds(seeds, t, "id"), maxRounds = 10).collect().toSet
-      val local = run()
-      assert(local === distributed(run()),
+      val (e, s) = (asIds(edges, t, "src", "dst"), asIds(seeds, t, "id"))
+      val out = Graph.shortestPaths(e, s, maxRounds = 10)
+      assertDriverLocal(out)
+      val local = out.collect().toSet
+      assert(local === Graph.distributedShortestPaths(ssspEdges(e), s,
+        maxRounds = 10).collect().toSet,
         s"sssp lanes must agree exactly ($t ids)")
       assert(local.map(r => r.get(0).toString -> r.getLong(1)) ===
         Set("1" -> 0L, "2" -> 1L, "3" -> 2L, "4" -> 3L, "5" -> 5L))
@@ -746,12 +764,13 @@ class GraphSpec extends SparkSpec {
     val long = (0L until 6L).map(i => (i, i + 1, 1L)).toDF("src", "dst", "cost")
     intercept[IllegalStateException] {
       Graph.shortestPaths(long, Seq(0L).toDF("id"), maxRounds = 2) }
-    intercept[IllegalStateException] { distributed(
-      Graph.shortestPaths(long, Seq(0L).toDF("id"), maxRounds = 2)) }
+    intercept[IllegalStateException] {
+      Graph.distributedShortestPaths(ssspEdges(long), Seq(0L).toDF("id"),
+        maxRounds = 2) }
   }
 
-  test("labelSpread lanes: local ≡ distributed (weighted ties, nulls, " +
-    "clampSeeds, two rounds)") {
+  test("labelSpread: exact labels after two rounds, both clampSeeds") {
+    // weighted ties, unlabeled vertices and an isolated seed
     val nodes = Seq((1L, Some(1L)), (2L, Some(2L)), (10L, None),
       (11L, None), (12L, None), (13L, None), (99L, Some(7L)))
       .toDF("id", "label")
@@ -763,11 +782,18 @@ class GraphSpec extends SparkSpec {
       Graph.labelSpread(nodes, edges, iterations = 2, clampSeeds = clamp)
         .as[(Long, Option[Long], Option[Long])].collect()
         .map(t => t._1 -> ((t._2, t._3))).toMap
-    for (clamp <- Seq(false, true)) {
-      val local = run(clamp)
-      assert(local === distributed(run(clamp)),
-        s"labelSpread lanes must agree exactly (clampSeeds=$clamp)")
-    }
+    // round 1: 10 takes 1 (3 votes to 2), 11 takes 1 (5–5 tie → smaller
+    // label); 12 and 13 see no labeled neighbor. Round 2: 13 takes 1
+    // from 10, 12 still sees none, and 2 hears only label 1 (from 10
+    // and 11) — unclamped it flips to 1, clamped it keeps its seed.
+    // 99 has no edge and keeps its own label either way.
+    def expected(two: Long): Map[Long, (Option[Long], Option[Long])] = Map(
+      1L -> ((Some(1L), Some(1L))), 2L -> ((Some(2L), Some(two))),
+      10L -> ((None, Some(1L))), 11L -> ((None, Some(1L))),
+      12L -> ((None, None)), 13L -> ((None, Some(1L))),
+      99L -> ((Some(7L), Some(7L))))
+    assert(run(clamp = false) === expected(two = 1L))
+    assert(run(clamp = true) === expected(two = 2L))
   }
 
   test("kTruss lanes: local ≡ distributed (K5 + pendant path cascade, " +
@@ -775,10 +801,12 @@ class GraphSpec extends SparkSpec {
     val k5 = for (i <- 1L to 5L; j <- (i + 1) to 5L) yield (i, j)
     val edges = (k5 ++ Seq((5L, 6L), (6L, 7L), (2L, 1L))).toDF("src", "dst")
     for (t <- idTypes) {
-      def run(): Set[Row] = Graph.kTruss(asIds(edges, t, "src", "dst"), k = 4)
-        .collect().toSet
-      val local = run()
-      assert(local === distributed(run()),
+      val e = asIds(edges, t, "src", "dst")
+      val out = Graph.kTruss(e, k = 4)
+      assertDriverLocal(out)
+      val local = out.collect().toSet
+      assert(local === Graph.distributedKTruss(Graph.undirected(e, "src",
+        "dst"), k = 4, maxRounds = 24).collect().toSet,
         s"kTruss lanes must agree exactly ($t ids)")
       // K5 survives as the 4-truss: every edge in exactly 3 triangles
       assert(local.map(r => (r.get(0).toString, r.get(1).toString,

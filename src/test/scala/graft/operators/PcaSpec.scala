@@ -62,10 +62,16 @@ class PcaSpec extends SparkSpec {
 
   test("fit lanes: driver-local ≡ distributed, bit-identical " +
     "(mean, components, spectrum)") {
-    def run(): Pca.PcaModel = Pca.fit(planted, k = 3, iterations = 8)
-    val local = run() // default lane below the row gate
-    spark.conf.set("graft.localIterate", "false")
-    val dist = try run() finally spark.conf.unset("graft.localIterate")
+    var local: Pca.PcaModel = null
+    val localJobs = jobsOf { local = Pca.fit(planted, k = 3, iterations = 8) }
+    val v = planted.select(Similarity.toDouble($"embedding").as("v"))
+      .filter($"v".isNotNull)
+    var dist: Pca.PcaModel = null
+    val distJobs = jobsOf { dist = Pca.distributedFit(v, k = 3, iterations = 8) }
+    // the distributed lane runs one aggregation job per pass (mean, 8
+    // subspace passes, spectrum); the local lane only collects
+    assert(localJobs < 8 && distJobs >= 10,
+      s"fit must take the local lane: $localJobs jobs, twin $distJobs")
     assert(local.mean.toSeq === dist.mean.toSeq, "means must be bit-identical")
     assert(local.components.map(_.toSeq).toSeq ===
       dist.components.map(_.toSeq).toSeq, "components must be bit-identical")
